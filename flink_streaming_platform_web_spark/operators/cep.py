@@ -4848,6 +4848,7 @@ def stream_match_recognize(
     output_schema: str,
     buffered: bool = False,
     drain_out: "list | None" = None,
+    key_groups: "int | None" = None,
 ) -> DataFrame:
     """STREAMING MATCH_RECOGNIZE over an event-time-ordered ingest —
     per-key NFA state via ``applyInPandasWithState`` (Flink's
@@ -4904,6 +4905,7 @@ def stream_match_recognize(
             infer_output_schema(keyed, kdf),
             buffered=buffered,
             drain_out=drain_out,
+            key_groups=key_groups,
         )
         return out.drop(gk)
     _reject_wide_permute(spec)  # streaming always runs the NFA fold
@@ -4925,6 +4927,7 @@ def stream_match_recognize(
             output_schema,
             drain_out=drain_out,
             sort_asc=spec.order_asc or None,
+            key_groups=key_groups,
         )
     return ordered_assert_apply(
         df,
@@ -4942,11 +4945,20 @@ def _prev_lookback(spec: MatchSpec) -> int:
     PREV as ``__prev('col', k)`` literals, so the bound is a static
     scan — 0 when the pattern never looks back."""
     sources = list(spec.define.values()) + [e for e, _ in spec.measures]
-    k = 0
-    for src in sources:
-        for m in re.finditer(r"__prev\(\s*'[^']*'\s*,\s*(\d+)\s*\)", src):
-            k = max(k, int(m.group(1)))
-    return k
+    return max((_prev_reach(src) for src in sources), default=0)
+
+
+def _prev_reach(src: str) -> int:
+    """Largest PREV offset in one xlated DEFINE/measure source."""
+    return max(
+        (
+            int(m.group(1))
+            for m in re.finditer(
+                r"__prev\(\s*'[^']*'\s*,\s*(\d+)\s*\)", src
+            )
+        ),
+        default=0,
+    )
 
 
 def _stream_fold(spec: MatchSpec):
@@ -5081,7 +5093,10 @@ def fb_stream_shape(df: DataFrame, spec: MatchSpec, output_schema: str):
     defines/measures), ``("trailing_plus", None)`` when tier C
     compiles it (``PATTERN (S B+|B*)`` under SKIP PAST LAST ROW,
     ONE ROW PER MATCH), else ``None`` (the NFA buffered route stays
-    the general path).
+    the general path). A spec whose PREV reaches further back than
+    the rows its shape carries into the next frame is ``None`` too:
+    the carried frame would show that PREV a NULL where the whole
+    stream has a row.
 
     Frontier soundness per shape (why re-running the batch tier over
     per-batch frame prefixes converges to the batch result):
@@ -5100,6 +5115,9 @@ def fb_stream_shape(df: DataFrame, spec: MatchSpec, output_schema: str):
       frame with its full window). Released rows only ever APPEND in
       ORDER BY order (a release boundary is an event-time cut and
       future rows are strictly later), so frames are true prefixes.
+      The frame's first row can start a new match, so no PREV may
+      reach before its own match's first row: a variable at pattern
+      position ``i`` may look back at most ``i`` rows.
     - trailing_plus: matches are EXACTLY tier C's gaps-and-islands
       decomposition (maximal runs of define-true rows behind their
       break-row head). An island is pending while it contains the
@@ -5112,14 +5130,28 @@ def fb_stream_shape(df: DataFrame, spec: MatchSpec, output_schema: str):
       frame saw the prior island's last row, but both evaluate
       not-TRUE (heads are by construction define-not-true rows), so
       the island decomposition of the carried frame is unchanged.
+      The first re-evaluated row follows the head, so PREV may reach
+      back one row.
     """
     if spec.all_rows or not spec.partition_by:
         return None
     if _fixed_len_sql(df, spec, output_schema) is not None:
         # tier A compiled it: fixed length = element count (tier A
         # only accepts patterns whose every element consumes one row)
+        reach = max(
+            [
+                _prev_reach(spec.define.get(v) or "") - i
+                for i, (atoms, _q) in enumerate(spec.pattern)
+                for v in atoms
+            ]
+            + [_prev_reach(e) for e, _ in spec.measures]
+        )
+        if reach > 0:
+            return None
         return ("fixed_next", len(spec.pattern))
     if fb_trailing_plus_split(df, spec) is not None:
+        if _prev_lookback(spec) > 1:
+            return None
         return ("trailing_plus", None)
     return None
 

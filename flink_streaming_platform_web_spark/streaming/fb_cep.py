@@ -20,7 +20,8 @@ streaming plan):
   batches ``< b`` minus the declared delay, floored to ms — the same
   value ``GroupState.getCurrentWatermarkMs`` hands the NFA route;
 - rows with ``ts <= wm`` at arrival are dropped late (Flink's
-  late-element contract, identical to ooo.py's cut);
+  late-element contract, identical to ooo.py's cut), and so are rows
+  with a NULL event time, in every batch;
 - pending rows (``ts > wm``) live in a parquet state dir, versioned
   by micro-batch id so a replayed batch overwrites its own version —
   idempotent under retry, and ONE bounded spill file set instead of
@@ -274,11 +275,15 @@ class _FBCepStream:
             mx = batch_df.agg(
                 F.max(F.expr(f"unix_micros(`{self.ts_col}`)"))
             ).collect()[0][0]
-            if mx is not None and wm_us > 0:
+            if mx is not None:
                 # late cut at arrival: ts <= wm dropped (ooo.py's
                 # wm_ms > 0 contract — no cut before a watermark
-                # exists)
-                new = new.where(ts_us > F.lit(wm_us))
+                # exists); a NULL event time is cut in every batch,
+                # as no watermark ever passes it
+                new = new.where(
+                    ts_us > F.lit(wm_us) if wm_us > 0
+                    else ts_us.isNotNull()
+                )
             pending_prev = self._read(pending_v, "pending", sess)
             if mx is None:
                 allp = pending_prev
@@ -317,17 +322,15 @@ class _FBCepStream:
             if mx is not None:
                 wm_new_ms = max(wm_us // 1000, (mx - self.delay_us) // 1000)
                 wm_us = max(wm_us, max(wm_new_ms, 0) * 1000)
+            committed = {
+                "wm_us": wm_us,
+                "pending_v": pending_v,
+                "tails_v": tails_v,
+                "emit_vs": emit_vs,
+            }
             with open(self._meta_path(epoch_id), "w") as fh:
-                json.dump(
-                    {
-                        "wm_us": wm_us,
-                        "pending_v": pending_v,
-                        "tails_v": tails_v,
-                        "emit_vs": emit_vs,
-                    },
-                    fh,
-                )
-            self._gc(epoch_id)
+                json.dump(committed, fh)
+            self._gc(committed, meta)
             self.register_view()
         finally:
             sc.setJobDescription(None)
@@ -347,12 +350,16 @@ class _FBCepStream:
                 if k <= 1:
                     decided, tail = frame, None
                 else:
-                    # tail = last k-1 rows per key in ORDER BY order
+                    # tail = last k-1 rows per key in ORDER BY order:
+                    # the tier orders NULLS LAST in both directions
+                    # (cep._tier_window), so the reverse puts them first
                     asc = self.spec.order_asc or [True] * len(
                         self.spec.order_by
                     )
                     rev = ", ".join(
-                        f"`{c}`" + (" DESC" if a else " NULLS LAST")
+                        f"`{c}`"
+                        + (" DESC" if a else " ASC")
+                        + " NULLS FIRST"
                         for c, a in zip(self.spec.order_by, asc)
                     )
                     part = ", ".join(
@@ -411,21 +418,25 @@ class _FBCepStream:
         except Exception:
             pass
 
-    def _gc(self, epoch: int) -> None:
-        """Drop state versions older than the previous batch (retry
-        of batch b re-reads versions <= b-1, never earlier)."""
+    def _gc(self, committed: dict, previous: dict) -> None:
+        """Drop every state version that neither the meta just
+        committed nor the one before it references: the next batch
+        (and a drain) reads the former, a retry of this batch the
+        latter. Versions advance only on the batches that write them
+        — tails only on batches that release rows — so a live
+        version can be many batches old."""
         for kind in ("pending", "tails"):
             d = f"{self.state_dir}/{kind}"
             if not os.path.isdir(d):
                 continue
+            live = {
+                f"v{m[f'{kind}_v']}"
+                for m in (committed, previous)
+                if m[f"{kind}_v"] is not None
+            }
             for f in os.listdir(d):
-                if f.startswith("v"):
-                    try:
-                        v = int(f[1:])
-                    except ValueError:
-                        continue
-                    if v < epoch - 1:
-                        shutil.rmtree(f"{d}/{f}", ignore_errors=True)
+                if f.startswith("v") and f not in live:
+                    shutil.rmtree(f"{d}/{f}", ignore_errors=True)
 
     # ---- drain + sink view -------------------------------------------
 

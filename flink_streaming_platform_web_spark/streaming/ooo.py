@@ -13,14 +13,16 @@ time-ordered arrival (BACKLOG "ordered-ingest contract"); this module
 is the watermark front end that replaces the assertion.
 
 ``watermark_buffered`` wraps any operator expressed as a FOLD —
-``fold(inner_state_bytes | None, released_rows) -> (inner_state_bytes,
-out_pdf | None)`` where ``released_rows`` is a pandas DataFrame sorted
-by the operator's ORDER BY — in an ``applyInPandasWithState`` stage:
+``fold(inner_state | None, released_rows) -> (inner_state, out_rows)``
+where ``released_rows`` is one key's rows as a list of row dicts in
+the operator's ORDER BY (the rows protocol; drain passes a sorted
+DataFrame) — in an ``applyInPandasWithState`` stage:
 
-- state is key-GROUPED (``hash(key) % KEY_GROUPS`` state keys —
-  Flink's key-group layout; see KEY_GROUPS): each bucket holds ONE
-  pending frame plus per-logical-key ``(release_frontier, inner)``
-  dicts, and folds run per logical key inside the bucket;
+- state is key-GROUPED (``hash(key) % key_groups`` state keys —
+  Flink's key-group layout; see ``sized_key_groups``): each bucket
+  holds ONE pending frame plus per-logical-key
+  ``(release_frontier, inner)`` dicts, and folds run per logical key
+  inside the bucket;
 - each invocation appends the batch's rows to pending, drops LATE rows
   (event time ≤ the frontier already released — Flink's late-element
   drop; Spark's stateful operator pre-filters rows older than the
@@ -47,14 +49,32 @@ this onto ``stop()``). Like Flink's ``--drain``, a drained query must
 not be restarted from the same checkpoint (the drained rows would
 replay).
 
+Key-group count: four per partition of the stateful stage
+(``4 × spark.sql.shuffle.partitions``, ``sized_key_groups``). The
+framework pays one Python call plus one state load and save per state
+key that receives rows (or times out) in a micro-batch. With far more
+rows per batch than groups, nearly every group is visited in every
+batch, so that cost is fixed per batch and grows with the count, not
+with the data; it set the latency of small batches when the count was
+1024. Four groups per partition keep every partition busy and leave
+the hash some room to even out. Like Flink's max-parallelism, the count is fixed once state
+exists: ``pinned_key_groups`` records it in the query's checkpoint
+when the query first starts and reads it back on every restore, so a
+restart under a different ``spark.sql.shuffle.partitions`` still
+finds every key in the bucket that holds its state. A checkpoint
+that has commits but no record predates the record and restores
+with ``LEGACY_KEY_GROUPS``.
+
 Scale shape: identical to the wrapped operator's — one shuffle on the
-key columns, state sharded per key across executors in the state
+bucket column, state sharded per bucket across executors in the state
 store (checkpointable), per-key pending bounded by the rows inside one
 watermark delay (exactly Flink's buffer bound).
 """
 
 from __future__ import annotations
 
+import json
+import os
 import pickle
 
 from collections.abc import Callable, Iterator
@@ -67,23 +87,72 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 Fold = Callable[
-    ["bytes | None", pd.DataFrame], "tuple[bytes, pd.DataFrame | None]"
+    ["bytes | None", "list[dict] | pd.DataFrame"],
+    "tuple[bytes, list | pd.DataFrame | None]",
 ]
 
-#: state keys per buffered operator — Flink's key-group count, the
-#: same constant (and rationale) as stateful.SESSION_KEY_GROUPS: the
-#: framework pays a Python call + state round-trip PER STATE KEY per
-#: micro-batch (~5-9 ms measured), so keying the state store by
-#: hash(key) % N instead of the logical key amortizes that over
-#: ~|keys|/N logical keys per call (st16's 150k users at sf1 paid
-#: ~500k state-key visits ≈ 140 s before grouping; r12's sessionize
-#: journey was 899 → 30.7 s on the same move). Correctness is
-#: untouched: every row of a logical key still lands in exactly one
-#: bucket, and folds stay per-logical-key inside the bucket.
-KEY_GROUPS = 1024
+#: key-group count of a checkpoint written before the count was
+#: recorded: every buffered operator hashed into 1024 buckets then
+LEGACY_KEY_GROUPS = 1024
+
+#: file in the query's checkpoint directory that pins the count
+_KG_RECORD = "watermark_buffer.json"
 
 #: bucket column the front ends inject; collides loudly
 _KG = "__wb_kg__"
+
+
+def sized_key_groups(spark: SparkSession) -> int:
+    """Key-group count for a buffered operator with no state yet:
+    four per partition of the stateful stage (see the module
+    docstring)."""
+    return 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def pinned_key_groups(
+    spark: SparkSession, checkpoint_loc: "str | None"
+) -> int:
+    """The key-group count a buffered query must hash into: the one
+    recorded in its checkpoint directory, or ``LEGACY_KEY_GROUPS`` for
+    a checkpoint that has commits but no record, or — for a query
+    starting afresh — ``sized_key_groups``, recorded before the query
+    starts. ``checkpoint_loc`` is a local path; None (no checkpoint,
+    nothing to restore) just sizes."""
+    if checkpoint_loc is None:
+        return sized_key_groups(spark)
+    if checkpoint_loc.startswith("file:"):
+        checkpoint_loc = checkpoint_loc[len("file:"):]
+    rec = os.path.join(checkpoint_loc, _KG_RECORD)
+    if os.path.exists(rec):
+        with open(rec) as fh:
+            return int(json.load(fh)["key_groups"])
+    commits = os.path.join(checkpoint_loc, "commits")
+    if os.path.isdir(commits) and any(
+        f.isdigit() for f in os.listdir(commits)
+    ):
+        return LEGACY_KEY_GROUPS
+    n = sized_key_groups(spark)
+    os.makedirs(checkpoint_loc, exist_ok=True)
+    tmp = f"{rec}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump({"key_groups": n}, fh)
+    os.replace(tmp, rec)
+    return n
+
+
+def _load_bucket(blob: bytes) -> tuple:
+    """One bucket's state → ``(pending, pts, frontiers, inners)``."""
+    t = pickle.loads(blob)
+    if len(t) != 4:
+        raise ValueError(
+            "watermark buffer: bucket state has the 3-tuple"
+            " (pending, frontiers, inners) layout, written before the"
+            " pending event-time array joined the state; this code"
+            " reads only the 4-tuple (pending, pts, frontiers,"
+            " inners) layout — restart the query from a fresh"
+            " checkpoint"
+        )
+    return t
 
 
 def _norm_key(kt) -> tuple:
@@ -213,22 +282,39 @@ def watermark_buffered(
     out_schema: StructType | str,
     drain_out: "list[DrainSpec] | None" = None,
     sort_asc: "list[bool] | None" = None,
+    key_groups: "int | None" = None,
 ) -> DataFrame:
     """Buffer ``df``'s rows per key until the watermark passes them,
     then feed them — event-time sorted — into ``fold``. ``df`` (or
     every source unioned into it) must carry ``withWatermark`` on the
     column feeding ``ts_col``; without one the watermark never
     advances and nothing is ever released (until stop-with-drain).
-    ``drain_out``, when given, receives the operator's ``DrainSpec``
-    so the runner can flush pending state at stop.
+    Rows with a NULL event time are dropped on arrival: no watermark
+    ever passes them. ``drain_out``, when given, receives the
+    operator's ``DrainSpec`` so the runner can flush pending state at
+    stop.
 
-    State is key-GROUPED (round 13): the state key is
-    ``hash(key_cols) % KEY_GROUPS``, one pickled
-    ``(pending_frame, frontiers, inners)`` per bucket — pending rows
-    for the whole bucket in ONE frame, per-logical-key release
-    frontier and fold state in dicts. Folds still run strictly
+    ``fold`` speaks the rows protocol: it takes this key's released
+    rows as a list of row dicts and returns its output rows as a list
+    (of dicts or column-ordered lists), and exposes
+    ``fold.rows_protocol = True`` and ``fold.out_cols(in_cols)``.
+    Drain hands it a sorted DataFrame instead (``drain_pending``).
+
+    State is key-GROUPED: the state key is
+    ``hash(key_cols) % key_groups``, one pickled
+    ``(pending_frame, pending_epoch_us, frontiers, inners)`` per
+    bucket — pending rows for the whole bucket in ONE frame, their
+    event times as an epoch-µs array beside it, per-logical-key
+    release frontier and fold state in dicts. Folds still run strictly
     per logical key in released order, so every fold's semantics
-    (CEP NFA, OVER buffer, temporal versions) are untouched."""
+    (CEP NFA, OVER buffer, temporal versions) are untouched.
+    ``key_groups`` must be the count the query's state was written
+    with (``pinned_key_groups``); None sizes it for fresh state."""
+    if not getattr(fold, "rows_protocol", False):
+        raise TypeError(
+            "watermark_buffered: fold must speak the rows protocol"
+            " (fold.rows_protocol = True, fold.out_cols(in_cols))"
+        )
     if drain_out is not None:
         drain_out.append(
             DrainSpec(
@@ -241,36 +327,20 @@ def watermark_buffered(
             f"watermark_buffered: input column {_KG!r} collides with"
             " the key-group bucket column"
         )
+    if key_groups is None:
+        key_groups = sized_key_groups(df.sparkSession)
     key_list = list(key_cols)
     asc = sort_asc if sort_asc is not None else True
-    # a fold advertising rows_protocol takes/returns plain row lists
-    # and the bucket amortizes ALL pandas machinery (round 14); it
-    # must also expose out_cols(in_cols) -> output column names
-    rows_proto = getattr(fold, "rows_protocol", False)
+    # NaT's epoch-µs value: the `>` cut below drops NULL event times
+    nat_us = -(2**63)
 
     def update(
         key: tuple,
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        # state layout (round 14): the pending frame's event-time
-        # epoch-µs array rides ALONG in the state tuple — the release
-        # mask and the timer minimum previously re-converted the WHOLE
-        # pending frame's timestamp column on every bucket invocation
-        # (two to_epoch_us calls per call, ~14% of the st14 sf1 update
-        # profile together with the sort). A 3-tuple from an
-        # older-code checkpoint is accepted (pts rebuilt once).
         if state.exists:
-            blob = pickle.loads(state.get[0])
-            if len(blob) == 4:
-                pending, pts, frontiers, inners = blob
-            else:  # pre-round-14 checkpoint
-                pending, frontiers, inners = blob
-                pts = (
-                    to_epoch_us(pending[ts_col])
-                    if pending is not None
-                    else None
-                )
+            pending, pts, frontiers, inners = _load_bucket(state.get[0])
         else:
             pending, pts, frontiers, inners = None, None, {}, {}
         wm_ms = state.getCurrentWatermarkMs()
@@ -291,11 +361,13 @@ def watermark_buffered(
                 # stateful-operator pre-filter uses the PREVIOUS
                 # batch's watermark, so the explicit wm_us cut here
                 # closes the one-batch gap (ADVICE r7); wm_ms == 0
-                # means no watermark established yet — no global cut.
-                if wm_ms > 0:
-                    keep = nts > wm_us
-                    if not keep.all():
-                        new, nts = new[keep], nts[keep]
+                # means no watermark established yet — no global cut,
+                # but a NULL event time (NaT → int64 min) is cut in
+                # every batch: it would otherwise release at once and
+                # fold as the key's earliest row
+                keep = nts > (wm_us if wm_ms > 0 else nat_us)
+                if not keep.all():
+                    new, nts = new[keep], nts[keep]
                 # per-key frontier cut: the watermark is monotone
                 # within a run, so a frontier above the current wm
                 # only exists defensively (wm regression across a
@@ -329,61 +401,38 @@ def watermark_buffered(
                 )
                 pending = pending[~mask].reset_index(drop=True)
                 pts = pts[~mask]
-                if rows_proto:
-                    # rows protocol (round 14): materialize row dicts
-                    # ONCE for the whole bucket's released frame and
-                    # assemble ONE output DataFrame per bucket call —
-                    # the per-key DataFrame slice/convert/construct
-                    # machinery was ~75% of the streaming CEP fold's
-                    # cost at sf5 (profiled: _row_dicts 41%, per-key
-                    # output frames 33%, the NFA itself ~20%)
-                    rows = rows_of_frame(released)
-                    groups: dict[tuple, list] = {}
-                    for r in rows:
-                        kt = tuple(
-                            None if pd.isna(v) else v
-                            for v in (r[c] for c in key_list)
+                # materialize row dicts ONCE for the whole bucket's
+                # released frame and assemble ONE output DataFrame per
+                # bucket call — the per-key DataFrame slice/convert/
+                # construct machinery was ~75% of the streaming CEP
+                # fold's cost at sf5 (round 14 profile: _row_dicts
+                # 41%, per-key output frames 33%, the NFA itself ~20%)
+                groups: dict[tuple, list] = {}
+                for r in rows_of_frame(released):
+                    kt = tuple(
+                        None if pd.isna(v) else v
+                        for v in (r[c] for c in key_list)
+                    )
+                    groups.setdefault(kt, []).append(r)
+                out_rows: list = []
+                for kt, grp_rows in groups.items():
+                    inner, orows = fold(inners.get(kt), grp_rows)
+                    inners[kt] = inner
+                    f = frontiers.get(kt)
+                    frontiers[kt] = (
+                        wm_us if f is None else max(f, wm_us)
+                    )
+                    if orows:
+                        out_rows.extend(orows)
+                if out_rows:
+                    outs.append(
+                        pd.DataFrame(
+                            out_rows,
+                            columns=fold.out_cols(
+                                list(released.columns)
+                            ),
                         )
-                        groups.setdefault(kt, []).append(r)
-                    out_rows: list = []
-                    for kt, grp_rows in groups.items():
-                        inner, orows = fold(
-                            inners.get(kt), grp_rows
-                        )
-                        inners[kt] = inner
-                        f = frontiers.get(kt)
-                        frontiers[kt] = (
-                            wm_us if f is None else max(f, wm_us)
-                        )
-                        if orows:
-                            out_rows.extend(orows)
-                    if out_rows:
-                        outs.append(
-                            pd.DataFrame(
-                                out_rows,
-                                columns=fold.out_cols(
-                                    list(released.columns)
-                                ),
-                            )
-                        )
-                else:
-                    # sub-group at C speed; within a key the rows
-                    # keep the sorted order (groupby preserves row
-                    # order)
-                    for kt, grp in released.groupby(
-                        key_list, sort=False, dropna=False
-                    ):
-                        kt = _norm_key(kt)
-                        inner, out = fold(
-                            inners.get(kt), grp.reset_index(drop=True)
-                        )
-                        inners[kt] = inner
-                        f = frontiers.get(kt)
-                        frontiers[kt] = (
-                            wm_us if f is None else max(f, wm_us)
-                        )
-                        if out is not None and len(out):
-                            outs.append(out)
+                    )
         state.update(
             (pickle.dumps((pending, pts, frontiers, inners)),)
         )
@@ -404,7 +453,7 @@ def watermark_buffered(
     from pyspark.sql import functions as F
 
     bucket = F.pmod(
-        F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(KEY_GROUPS)
+        F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(key_groups)
     )
     return (
         df.withColumn(_KG, bucket)
@@ -548,11 +597,9 @@ def drain_pending(
             for blob in pdf["s"]:
                 if blob is None:
                     continue
-                blob_t = pickle.loads(bytes(blob))
-                if len(blob_t) == 4:  # round-14 layout carries the
-                    pending, _pts, frontiers, inners = blob_t  # epoch
-                else:  # array alongside; pre-r14 checkpoints don't
-                    pending, frontiers, inners = blob_t
+                pending, _pts, _frontiers, inners = _load_bucket(
+                    bytes(blob)
+                )
                 # key-grouped layout (round 13): one bucket blob holds
                 # the bucket's pending frame + per-logical-key inner
                 # states — drain each logical key like a final

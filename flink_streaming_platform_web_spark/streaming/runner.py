@@ -1367,6 +1367,16 @@ class JobRunner:
 
         src_df = self.spark.table(over.src)
         src_tbl = self.tables.get(over.src)
+        # watermarked source → Flink's row-time OverAggregate
+        # contract: buffer out-of-order rows until the watermark
+        # passes them (ooo.watermark_buffered); unwatermarked sources
+        # keep the ordered-assert fallback
+        buffered = (
+            src_tbl is not None
+            and src_tbl.watermark is not None
+            and bool(src_tbl.watermark.delay)
+            and src_tbl.watermark.column == over.ts_col
+        )
         drains: list = []
         out = streaming_over(
             src_df,
@@ -1376,17 +1386,9 @@ class JobRunner:
             over.size,
             over.aggs,
             over.out_cols,
-            # watermarked source → Flink's row-time OverAggregate
-            # contract: buffer out-of-order rows until the watermark
-            # passes them (ooo.watermark_buffered); unwatermarked
-            # sources keep the ordered-assert fallback
-            buffered=(
-                src_tbl is not None
-                and src_tbl.watermark is not None
-                and bool(src_tbl.watermark.delay)
-                and src_tbl.watermark.column == over.ts_col
-            ),
+            buffered=buffered,
             drain_out=drains,
+            key_groups=self._key_groups(sink, idx) if buffered else None,
         )
         if drains:
             # stop-with-drain: fold output is already in out_cols
@@ -1506,6 +1508,20 @@ class JobRunner:
             tgt.append((col, name or col))
         build_ts = self.tables[dim].watermark.column
         probe_wm = self.tables[probe].watermark
+        sink = self.tables.get(job.target)
+        if sink is None:
+            raise ValueError(
+                f"temporal join sink {job.target!r} must be declared"
+            )
+        # both sides watermarked → Flink's TemporalRowTimeJoinOperator
+        # contract: buffer out-of-order rows until the two-input
+        # watermark passes them; a probe without a watermark keeps
+        # the ordered-assert fallback
+        buffered = (
+            probe_wm is not None
+            and bool(probe_wm.delay)
+            and probe_wm.column == m.group("ascol")
+        )
         drains: list = []
         out = event_time_temporal_join(
             self.spark.table(probe),
@@ -1516,23 +1532,10 @@ class JobRunner:
             build_ts,
             probe_out,
             build_out,
-            # both sides watermarked → Flink's
-            # TemporalRowTimeJoinOperator contract: buffer
-            # out-of-order rows until the two-input watermark passes
-            # them; a probe without a watermark keeps the
-            # ordered-assert fallback
-            buffered=(
-                probe_wm is not None
-                and bool(probe_wm.delay)
-                and probe_wm.column == m.group("ascol")
-            ),
+            buffered=buffered,
             drain_out=drains,
+            key_groups=self._key_groups(sink, idx) if buffered else None,
         )
-        sink = self.tables.get(job.target)
-        if sink is None:
-            raise ValueError(
-                f"temporal join sink {job.target!r} must be declared"
-            )
         # restore select-list column order (probe/build interleave)
         order = []
         for item in items:
@@ -1644,6 +1647,7 @@ class JobRunner:
                 cep.infer_output_schema(spec, src),
                 buffered=True,
                 drain_out=drains,
+                key_groups=self._key_groups(sink, idx),
             )
             matched.createOrReplaceTempView(view)
             df = self.spark.sql(translate_expr(outer))
@@ -2153,6 +2157,28 @@ class JobRunner:
         else:
             raise ValueError(f"unsupported batch sink connector: {c!r}")
 
+    def _query_checkpoint(self, sink: TableDef, idx: int) -> "str | None":
+        """Checkpoint location of the streaming query _write_stream
+        starts for INSERT ``idx``: under the job's checkpoint dir, or
+        None when the job configured none or the sink keeps its state
+        in process (replayed from scratch on restart)."""
+        if not self.checkpoint.checkpoint_dir or _in_process_upsert(sink):
+            return None
+        return f"{self.checkpoint.checkpoint_dir}/q{idx}_{sink.name}"
+
+    def _key_groups(self, sink: TableDef, idx: int) -> int:
+        """Key-group count for the buffered operator of INSERT
+        ``idx``: pinned by its query checkpoint (ooo.pinned_key_groups)
+        so a restore hashes keys into the buckets holding their
+        state."""
+        from flink_streaming_platform_web_spark.streaming.ooo import (
+            pinned_key_groups,
+        )
+
+        return pinned_key_groups(
+            self.spark, self._query_checkpoint(sink, idx)
+        )
+
     def _write_stream(
         self,
         df: DataFrame,
@@ -2164,7 +2190,6 @@ class JobRunner:
         self._drain_ctx = None
         c = sink.connector
         upsert = bool(sink.primary_key)
-        in_process_state = False  # set by the KeyedStore branch below
         # connector routes FIRST: a PK on upsert-kafka/ES selects the
         # connector's own upsert mechanism (key serialization / doc id),
         # never the in-process store (ADVICE r01: the generic upsert
@@ -2193,14 +2218,14 @@ class JobRunner:
             # missing driver jar raises ConnectorUnavailable at
             # registration (never silently diverts — ADVICE r01).
             writer = registry.jdbc_upsert_writer(df, sink)
-        elif upsert and c in ("jdbc", "memory", "print"):
+        elif _in_process_upsert(sink):
             # url-less jdbc / memory / print PK sink → in-process keyed
             # MERGE store (demo_1.md upsert path in embedded/test mode;
-            # SURVEY §7.3). NO checkpoint for this writer: the store is
-            # process-local, so a checkpointed restart would skip
-            # replay against empty state (same contract as the CDC
-            # path) — replay-from-scratch converges.
-            in_process_state = True
+            # SURVEY §7.3). NO checkpoint for this writer
+            # (_query_checkpoint): the store is process-local, so a
+            # checkpointed restart would skip replay against empty
+            # state (same contract as the CDC path) —
+            # replay-from-scratch converges.
             store = self._replace_store(sink.name, sink.primary_key)
             writer = df.writeStream.outputMode("update").foreachBatch(
                 foreach_batch_upsert(store)
@@ -2245,9 +2270,8 @@ class JobRunner:
                 writer = writer.partitionBy(*sink.partitioned_by)
         else:
             raise ValueError(f"unsupported stream sink connector: {c!r}")
-        ckpt_loc = None
-        if self.checkpoint.checkpoint_dir and not in_process_state:
-            ckpt_loc = f"{self.checkpoint.checkpoint_dir}/q{idx}_{sink.name}"
+        ckpt_loc = self._query_checkpoint(sink, idx)
+        if ckpt_loc is not None:
             writer = writer.option("checkpointLocation", ckpt_loc)
         if drain is not None and ckpt_loc is None:
             # stop-with-drain reads the state store back after stop
@@ -2255,7 +2279,7 @@ class JobRunner:
             # the runner can find it — a run-scoped temp dir when the
             # job configured none. Unique per start, so a process-
             # local-state restart still replays from scratch (the
-            # in_process_state contract above holds).
+            # in-process store contract above holds).
             ckpt_loc = tempfile.mkdtemp(prefix=f"graft_drain_q{idx}_")
             writer = writer.option("checkpointLocation", ckpt_loc)
         if self._trigger:
@@ -2311,6 +2335,16 @@ class JobRunner:
                 enabled=self._stop_drain,
             )
         result.streaming_queries.append(q)
+
+
+def _in_process_upsert(sink: TableDef) -> bool:
+    """A PK sink that _write_stream serves from an in-process keyed
+    store: url-less jdbc, memory or print."""
+    c = sink.connector
+    return bool(sink.primary_key) and (
+        c in ("memory", "print")
+        or (c == "jdbc" and not sink.options.get("url"))
+    )
 
 
 def _is_aggregated(df: DataFrame) -> bool:

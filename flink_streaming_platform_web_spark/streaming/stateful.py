@@ -218,6 +218,7 @@ def streaming_over(
     out_cols: list[str],
     buffered: bool = False,
     drain_out: "list | None" = None,
+    key_groups: "int | None" = None,
 ) -> DataFrame:
     """Streaming OVER aggregation (Flink docs: queries/over-agg): for
     every input row, aggregates over the per-key window ending at that
@@ -589,7 +590,7 @@ def streaming_over(
     if buffered:
         return watermark_buffered(
             df, part_cols, ts_col, [ts_col], fold, out_schema(),
-            drain_out=drain_out,
+            drain_out=drain_out, key_groups=key_groups,
         )
     return ordered_assert_apply(
         df, part_cols, [ts_col], fold, out_schema()

@@ -58,6 +58,7 @@ def event_time_temporal_join(
     build_out: list[tuple[str, str]],
     buffered: bool = False,
     drain_out: "list | None" = None,
+    key_groups: "int | None" = None,
 ) -> DataFrame:
     if len(probe_keys) != len(build_keys):
         raise ValueError("temporal join: key arity mismatch")
@@ -196,6 +197,7 @@ def event_time_temporal_join(
             fold,
             out_schema,
             drain_out=drain_out,
+            key_groups=key_groups,
         )
     return ordered_assert_apply(
         unioned, key_cols, ["__ts", "__side"], fold, out_schema

@@ -224,3 +224,169 @@ def test_randomized_resume_differential(spark, clause, shape):
         assert sorted(map(tuple, emitted)) == sorted(
             map(tuple, batch)
         ), f"seed {seed}: resume emissions != batch matches"
+
+
+# -- the route end to end, through the runner -----------------------------
+
+_T0 = "2024-01-01 00:00:00"
+
+
+def _row(eid, sec, value, ts_null=False):
+    import pandas as pd
+
+    ts = (pd.Timestamp(_T0) + pd.Timedelta(seconds=sec)).strftime(
+        "%Y-%m-%d %H:%M:%S"
+    )
+    return {
+        "user_id": 1,
+        "event_id": eid,
+        "ts": None if ts_null else ts,
+        "value": float(value),
+    }
+
+
+def _stream_mr(spark, tmp_path, tag, clause, files):
+    """Stream ``files`` (one micro-batch each) through the runner's
+    streaming MATCH_RECOGNIZE into a memory sink with a 10 s
+    watermark delay, stop with drain, and return (sorted sink rows,
+    the started query)."""
+    from tests.test_ooo import _write_files
+
+    from flink_streaming_platform_web_spark.streaming.runner import (
+        JobRunner,
+    )
+
+    p = str(tmp_path / tag)
+    _write_files(p, files)
+    result = JobRunner(spark, mode="streaming").execute_script(f"""
+        CREATE TABLE ev_{tag} (user_id BIGINT, event_id BIGINT,
+          ts TIMESTAMP, value DOUBLE,
+          WATERMARK FOR ts AS ts - INTERVAL '10' SECOND
+        ) WITH ('connector'='filesystem','path'='{p}',
+                'format'='json','source.max-files-per-trigger'='1');
+        CREATE TABLE snk_{tag} (lo_v DOUBLE, hi_v DOUBLE)
+          WITH ('connector'='memory');
+        INSERT INTO snk_{tag}
+        SELECT lo_v, hi_v FROM ev_{tag} MATCH_RECOGNIZE ({clause});
+        """)
+    (q,) = result.streaming_queries
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(120)
+    got = sorted(
+        (r["lo_v"], r["hi_v"]) for r in spark.table(f"snk_{tag}").collect()
+    )
+    return got, q
+
+
+def _batch_mr(spark, clause, files):
+    """The batch matcher over every row with an event time."""
+    import pandas as pd
+
+    rows = [
+        (
+            r["user_id"], r["event_id"],
+            pd.Timestamp(r["ts"]).to_pydatetime(), r["value"],
+        )
+        for f in files
+        for r in f
+        if r["ts"] is not None
+    ]
+    df = spark.createDataFrame(rows, SCHEMA)
+    spec = cep.parse_match_recognize(clause)
+    out = cep.match_recognize(df, spec, cep.infer_output_schema(spec, df))
+    return sorted((r["lo_v"], r["hi_v"]) for r in out.collect())
+
+
+LOHI_CLAUSE = """
+  PARTITION BY user_id
+  ORDER BY {order}
+  MEASURES FIRST(LO.value) AS lo_v, FIRST(HI.value) AS hi_v
+  ONE ROW PER MATCH
+  AFTER MATCH SKIP TO NEXT ROW
+  PATTERN (LO HI)
+  DEFINE LO AS {lo}, HI AS HI.value >= 80.0
+"""
+
+
+def test_gc_keeps_tails_the_latest_meta_references(spark, tmp_path):
+    """One releasing batch, then two that release nothing, then a
+    drain: the tails version the releasing batch wrote is still the
+    latest one, so garbage collection must keep it (deleting every
+    version older than the previous batch made the drain fail with
+    PATH_NOT_FOUND)."""
+    clause = LOHI_CLAUSE.format(order="ts", lo="LO.value < 20.0")
+    files = [
+        # batch 0: no watermark yet, nothing released; wm -> 10 s
+        [_row(1, 0, 5), _row(2, 5, 90), _row(3, 10, 10), _row(4, 20, 85)],
+        [_row(5, 25, 15)],  # batch 1 releases 0..10 s; wm -> 15 s
+        [_row(6, 24, 95)],  # batch 2 releases nothing
+        [_row(7, 23, 3)],  # batch 3 releases nothing
+    ]
+    got, q = _stream_mr(spark, tmp_path, "fbgc", clause, files)
+    assert type(q).__name__ == "FBDrainingQuery"
+    want = _batch_mr(spark, clause, files)
+    assert got == want and want
+
+
+@pytest.mark.parametrize("order", ["ts, event_id DESC", "ts, event_id"])
+def test_reverse_order_carries_null_keys(spark, tmp_path, order):
+    """The carried tail is the last k-1 rows in ORDER BY order. The
+    tier sorts a NULL event_id after its timestamp peers in either
+    direction, so the tail must hold that NULL row — the reversed
+    ordering has to put NULLs first."""
+    clause = LOHI_CLAUSE.format(order=order, lo="LO.value < 20.0")
+    files = [
+        [
+            _row(1, 0, 1),
+            _row(5, 10, 50),
+            _row(None, 10, 10),  # last row of the 10 s peers
+            _row(7, 30, 90),
+        ],
+        [_row(8, 40, 95)],  # batch 1 releases 0..10 s; wm -> 30 s
+        [_row(9, 60, 5)],  # batch 2 releases 30 s
+    ]
+    tag = "fbdesc" if "DESC" in order else "fbasc"
+    got, q = _stream_mr(spark, tmp_path, tag, clause, files)
+    assert type(q).__name__ == "FBDrainingQuery"
+    want = _batch_mr(spark, clause, files)
+    assert want == [(10.0, 90.0)]
+    assert got == want
+
+
+def test_null_event_time_dropped_on_arrival(spark, tmp_path):
+    """A row with a NULL event time is dropped on arrival. Drained
+    before any watermark existed, it used to join the final frame
+    (sorted last) and complete a match."""
+    clause = LOHI_CLAUSE.format(order="ts", lo="LO.value < 20.0")
+    files = [[_row(1, 0, 50), _row(2, 10, 5), _row(3, 0, 90, True)]]
+    got, q = _stream_mr(spark, tmp_path, "fbnull", clause, files)
+    assert type(q).__name__ == "FBDrainingQuery"
+    assert got == _batch_mr(spark, clause, files) == []
+
+
+def test_prev_reaching_past_carried_rows_falls_back(spark, tmp_path):
+    """A fixed-length spec whose first variable looks at PREV reaches
+    before the carried rows (the carried frame shows it a NULL), so
+    it must not take the route; on the NFA route it converges to the
+    batch result, including the match that starts at a frame
+    boundary."""
+    clause = LOHI_CLAUSE.format(
+        order="ts", lo="LO.value < PREV(LO.value)"
+    )
+    spec = cep.parse_match_recognize(clause)
+    p = _probe(spark)
+    assert (
+        cep.fb_stream_shape(p, spec, cep.infer_output_schema(spec, p))
+        is None
+    )
+    files = [
+        [_row(1, 0, 50), _row(2, 10, 30), _row(3, 15, 5), _row(4, 26, 90)],
+        [_row(5, 40, 60)],  # batch 1 releases 0..15 s; wm -> 30 s
+        [_row(6, 50, 70)],  # batch 2 releases 26 s
+    ]
+    got, q = _stream_mr(spark, tmp_path, "fbprev", clause, files)
+    assert type(q).__name__ != "FBDrainingQuery"
+    want = _batch_mr(spark, clause, files)
+    assert (5.0, 90.0) in want
+    assert got == want

@@ -381,6 +381,29 @@ def test_frontier_cut_keeps_pre_epoch_rows_for_frontierless_keys():
     ]
 
 
+def _over_script(tag, src, snk, set_stmt=""):
+    """OVER-route script: watermarked json source → json file sink."""
+    return f"""
+        {set_stmt}
+        CREATE TABLE ev_{tag} (
+          k BIGINT, ts TIMESTAMP, v DOUBLE,
+          ts_s AS date_format(ts, 'yyyy-MM-dd HH:mm:ss'),
+          WATERMARK FOR ts AS ts - INTERVAL '{_DELAY_S}' SECOND
+        ) WITH ('connector'='filesystem','path'='{src}',
+                'format'='json','source.max-files-per-trigger'='1');
+        CREATE TABLE snk_{tag} (k BIGINT, ts_s STRING, n BIGINT,
+          mx DOUBLE) WITH ('connector'='filesystem','path'='{snk}',
+                           'format'='json');
+        INSERT INTO snk_{tag}
+        SELECT k, ts_s,
+               COUNT(*) OVER w AS n, MAX(v) OVER w AS mx
+        FROM ev_{tag}
+        WINDOW w AS (PARTITION BY k ORDER BY ts
+                     RANGE BETWEEN INTERVAL '2' MINUTE PRECEDING
+                     AND CURRENT ROW);
+        """
+
+
 def test_crash_before_drain_then_restart_drains_once(spark, tmp_path):
     """Crash-consistency of stop-with-drain: the process dies AFTER
     the wrapped query stopped but BEFORE the drain ran (simulated by
@@ -400,24 +423,7 @@ def test_crash_before_drain_then_restart_drains_once(spark, tmp_path):
     snk = str(tmp_path / "snk")
     ckpt = str(tmp_path / "ckpt")
     _write_files(src, [rows[:6], rows[6:]])
-    script = f"""
-        CREATE TABLE ev_cr (
-          k BIGINT, ts TIMESTAMP, v DOUBLE,
-          ts_s AS date_format(ts, 'yyyy-MM-dd HH:mm:ss'),
-          WATERMARK FOR ts AS ts - INTERVAL '{_DELAY_S}' SECOND
-        ) WITH ('connector'='filesystem','path'='{src}',
-                'format'='json','source.max-files-per-trigger'='1');
-        CREATE TABLE snk_cr (k BIGINT, ts_s STRING, n BIGINT,
-          mx DOUBLE) WITH ('connector'='filesystem','path'='{snk}',
-                           'format'='json');
-        INSERT INTO snk_cr
-        SELECT k, ts_s,
-               COUNT(*) OVER w AS n, MAX(v) OVER w AS mx
-        FROM ev_cr
-        WINDOW w AS (PARTITION BY k ORDER BY ts
-                     RANGE BETWEEN INTERVAL '2' MINUTE PRECEDING
-                     AND CURRENT ROW);
-        """
+    script = _over_script("cr", src, snk)
     sink_schema = "k long, ts_s string, n long, mx double"
 
     r1 = JobRunner(
@@ -531,28 +537,6 @@ def test_plain_stop_keeps_state_then_resumed_drain_completes(
     snk = str(tmp_path / "snk")
     ckpt = str(tmp_path / "ckpt")
     _write_files(src, [rows[:6], rows[6:]])
-
-    def script(set_stmt: str) -> str:
-        return f"""
-        {set_stmt}
-        CREATE TABLE ev_ps (
-          k BIGINT, ts TIMESTAMP, v DOUBLE,
-          ts_s AS date_format(ts, 'yyyy-MM-dd HH:mm:ss'),
-          WATERMARK FOR ts AS ts - INTERVAL '{_DELAY_S}' SECOND
-        ) WITH ('connector'='filesystem','path'='{src}',
-                'format'='json','source.max-files-per-trigger'='1');
-        CREATE TABLE snk_ps (k BIGINT, ts_s STRING, n BIGINT,
-          mx DOUBLE) WITH ('connector'='filesystem','path'='{snk}',
-                           'format'='json');
-        INSERT INTO snk_ps
-        SELECT k, ts_s,
-               COUNT(*) OVER w AS n, MAX(v) OVER w AS mx
-        FROM ev_ps
-        WINDOW w AS (PARTITION BY k ORDER BY ts
-                     RANGE BETWEEN INTERVAL '2' MINUTE PRECEDING
-                     AND CURRENT ROW);
-        """
-
     sink_schema = "k long, ts_s string, n long, mx double"
 
     def run(set_stmt):
@@ -561,7 +545,7 @@ def test_plain_stop_keeps_state_then_resumed_drain_completes(
             mode="streaming",
             checkpoint=CheckPointParam(checkpoint_dir=ckpt),
         )
-        res = r.execute_script(script(set_stmt))
+        res = r.execute_script(_over_script("ps", src, snk, set_stmt))
         for q in res.streaming_queries:
             q.processAllAvailable()
             q.stop()
@@ -696,16 +680,20 @@ def test_drain_resolves_buffered_operator_behind_second_stateful_op(
     )
 
     def fold(inner, new, final=False):
-        n = (inner or 0) + len(new)
-        out = (
-            new.assign(n=range(n - len(new) + 1, n + 1))[
-                ["k", "ts", "n"]
-            ]
-            if len(new)
-            else None
-        )
-        return n, out
+        # rows protocol: row dicts from the buffer, a sorted frame
+        # from drain
+        rows = new if isinstance(new, list) else ooo.rows_of_frame(new)
+        n = inner or 0
+        out = [
+            {"k": r["k"], "ts": r["ts"], "n": n + i}
+            for i, r in enumerate(rows, 1)
+        ]
+        if not isinstance(new, list):
+            out = pd.DataFrame(out, columns=["k", "ts", "n"])
+        return n + len(rows), out
 
+    fold.rows_protocol = True
+    fold.out_cols = lambda in_cols: ["k", "ts", "n"]
     drains: list = []
     buffered = ooo.watermark_buffered(
         src, ["k"], "ts", ["ts"], fold,
@@ -784,9 +772,9 @@ def test_null_partition_key_groups_like_spark(spark, tmp_path):
 
 def test_randomized_bucket_sharing_differential(spark, tmp_path, monkeypatch):
     """Randomized differential on the key-grouped buffer's NEW path:
-    many logical keys sharing ONE state bucket. With the production
-    1024 buckets a handful of test keys never collide, so this test
-    pins KEY_GROUPS=2 (read at plan-build time) and runs 12 keys ×
+    many logical keys sharing ONE state bucket. The production count
+    spreads a handful of test keys over many buckets, so this test
+    sizes fresh state at 2 key groups and runs 12 keys ×
     random within-delay disorder through the runner's OVER route —
     per-key release order, per-key frontiers, and per-key inner
     state must all survive bucket cohabitation, converging to
@@ -795,7 +783,7 @@ def test_randomized_bucket_sharing_differential(spark, tmp_path, monkeypatch):
     too."""
     from flink_streaming_platform_web_spark.streaming import ooo
 
-    monkeypatch.setattr(ooo, "KEY_GROUPS", 2)
+    monkeypatch.setattr(ooo, "sized_key_groups", lambda spark: 2)
     rows = _mk_rows(n_per_key=12, keys=tuple(range(1, 13)), step_s=15)
     expected = _batch_over(spark, rows)
     for seed in (7, 8):
@@ -806,3 +794,129 @@ def test_randomized_bucket_sharing_differential(spark, tmp_path, monkeypatch):
         assert got == expected, (
             f"seed {seed}: {len(got)} rows vs {len(expected)}"
         )
+
+
+def test_null_event_time_dropped_on_arrival(spark, tmp_path):
+    """A row with a NULL event time is dropped on arrival, in every
+    batch. Before any watermark existed it used to release at once
+    and fold as its key's earliest row; later it vanished silently."""
+    rows = _mk_rows(n_per_key=12, keys=(1, 2))
+    nulls = [
+        {"k": 1, "ts": None, "v": 99.0},
+        {"k": 2, "ts": None, "v": 98.0},
+    ]
+    p = str(tmp_path / "nullts")
+    _write_files(p, [rows[:8] + nulls[:1], rows[8:] + nulls[1:]])
+    got = _run_over(spark, p, "nullts")
+    assert got == _batch_over(spark, rows)
+
+
+def _stop_restore_over(spark, tmp_path, tag, rows, before_restore):
+    """Run the OVER route over the first half of ``rows`` with a
+    checkpoint, stop without drain (state stays buffered), call
+    ``before_restore(ckpt)``, stage the second half, restore from the
+    same checkpoint and stop with drain. Returns the sink rows as
+    {(k, ts_s): (n, mx)} plus the total row count."""
+    from flink_streaming_platform_web_spark.streaming.checkpoints import (
+        CheckPointParam,
+    )
+
+    src = str(tmp_path / f"src_{tag}")
+    snk = str(tmp_path / f"snk_{tag}")
+    ckpt = str(tmp_path / f"ckpt_{tag}")
+    half = len(rows) // 2
+    _write_files(src, [rows[:half // 2], rows[half // 2:half]])
+
+    def run(set_stmt):
+        r = JobRunner(
+            spark,
+            mode="streaming",
+            checkpoint=CheckPointParam(checkpoint_dir=ckpt),
+        )
+        res = r.execute_script(_over_script(tag, src, snk, set_stmt))
+        for q in res.streaming_queries:
+            q.processAllAvailable()
+            q.stop()
+            q.awaitTermination(120)
+
+    run("SET 'graft.stop.drain' = 'false';")
+    before_restore(ckpt)
+    later = os.path.join(src, "c9.json")
+    with open(later, "w") as fh:
+        for r in rows[half:]:
+            fh.write(json.dumps(r) + "\n")
+    mt = max(
+        os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)
+    )
+    os.utime(later, (mt + 5, mt + 5))
+    run("")
+    got_rows = spark.read.schema(
+        "k long, ts_s string, n long, mx double"
+    ).json(snk).collect()
+    got = {(r["k"], r["ts_s"]): (r["n"], r["mx"]) for r in got_rows}
+    return got, len(got_rows)
+
+
+def test_restore_keeps_recorded_key_groups(spark, tmp_path):
+    """The key-group count is recorded with the query's checkpoint on
+    its first start and read back on restore: restored under a
+    different ``spark.sql.shuffle.partitions`` (which would size
+    fresh state differently), every key still hashes into the bucket
+    holding its buffered rows and window state, and the output
+    converges to the batch answer."""
+    from flink_streaming_platform_web_spark.streaming import ooo
+
+    rows = _mk_rows(n_per_key=16, keys=tuple(range(1, 13)), step_s=15)
+    expected = _batch_over(spark, rows)
+    sized = ooo.sized_key_groups(spark)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def shrink(ckpt):
+        with open(os.path.join(ckpt, "q0_snk_rs", ooo._KG_RECORD)) as fh:
+            assert json.load(fh) == {"key_groups": sized}
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        assert ooo.sized_key_groups(spark) != sized
+
+    try:
+        got, n = _stop_restore_over(spark, tmp_path, "rs", rows, shrink)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert got == expected
+    assert n == len(expected)
+
+
+def test_unrecorded_checkpoint_restores_with_legacy_key_groups(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint written before the count was recorded (1024 key
+    groups, no record) restores with 1024: the output is identical to
+    the batch answer, as it was before the restart."""
+    from flink_streaming_platform_web_spark.streaming import ooo
+
+    rows = _mk_rows(n_per_key=16, keys=tuple(range(1, 13)), step_s=15)
+    expected = _batch_over(spark, rows)
+
+    def drop_record(ckpt):
+        # the earlier layout: state hashed into 1024 groups, no record
+        os.remove(os.path.join(ckpt, "q0_snk_lg", ooo._KG_RECORD))
+        monkeypatch.undo()
+
+    monkeypatch.setattr(
+        ooo, "sized_key_groups", lambda spark: ooo.LEGACY_KEY_GROUPS
+    )
+    got, n = _stop_restore_over(spark, tmp_path, "lg", rows, drop_record)
+    assert got == expected
+    assert n == len(expected)
+
+
+def test_three_tuple_bucket_state_is_refused():
+    """Bucket state in the 3-tuple (pending, frontiers, inners) layout
+    raises an error naming that layout instead of being read."""
+    import pickle
+
+    import pytest
+
+    from flink_streaming_platform_web_spark.streaming import ooo
+
+    with pytest.raises(ValueError, match=r"3-tuple \(pending, frontiers"):
+        ooo._load_bucket(pickle.dumps((None, {}, {})))
