@@ -30,6 +30,7 @@ from pyspark.sql import SparkSession
 
 from flink_streaming_platform_web_spark.platform import alarms
 from flink_streaming_platform_web_spark.platform.store import JobStore
+from flink_streaming_platform_web_spark.session import with_package_root
 from flink_streaming_platform_web_spark.sql.validation import validate_script
 from flink_streaming_platform_web_spark.streaming.checkpoints import (
     CheckPointParam,
@@ -278,10 +279,7 @@ class JobManager:
                 stop_file=str(stop_file),
             )
             env = dict(os.environ)
-            pkg_root = str(Path(__file__).resolve().parents[2])
-            env["PYTHONPATH"] = (
-                pkg_root + os.pathsep + env.get("PYTHONPATH", "")
-            )
+            env["PYTHONPATH"] = with_package_root(env.get("PYTHONPATH", ""))
             log_f = open(work / "logs" / f"job_{job.id}.log", "ab")
             try:
                 proc = subprocess.Popen(

@@ -131,51 +131,6 @@ def test_running_counts_across_batches(spark, tmp_path):
     assert best["b"] == (1, 5.0)
 
 
-def test_running_counts_v2_transform_with_state(spark, tmp_path):
-    """Same contract as running_counts, on the Spark 4
-    transformWithState seam (stateful_v2). The TWS state-server
-    protocol is protobuf-based; this container has no
-    google.protobuf, so the live run is environment-gated (the
-    operator code itself is importable and plan-buildable)."""
-    import pytest
-
-    from flink_streaming_platform_web_spark.streaming.stateful_v2 import (
-        running_counts_v2,
-        tws_available,
-    )
-
-    ok, reason = tws_available()
-    if not ok:
-        pytest.skip(reason)
-
-    src = f"{tmp_path}/tws_src"
-    _write(spark, src, [("a", 1.0), ("a", 2.0), ("b", 5.0)])
-    sdf = (
-        spark.readStream.schema("k STRING, v DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = running_counts_v2(sdf)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_out")
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmp_path}/tws_ckpt")
-        .start()
-    )
-    q.processAllAvailable()
-    _write(spark, src, [("a", 4.0)])
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.table("tws_out").collect()
-    best = {}
-    for r in rows:
-        if r["key"] not in best or r["n"] > best[r["key"]][0]:
-            best[r["key"]] = (r["n"], r["total"])
-    assert best["a"] == (3, 7.0)
-    assert best["b"] == (1, 5.0)
-
-
 def test_merge_sessions_batch_split_invariance():
     """Property: gap-merging points batch-by-batch (any partition, any
     order) must equal sessionizing all points at once — the invariant
