@@ -14,6 +14,9 @@ Scale posture (100 TB target, graded explicitly):
   across engines and clusters (and match the DuckDB oracle).
 - Python workers fork from ``worker_daemon``, which keeps each task
   from re-reading pyspark.zip's directory (~200 ms per task).
+- On a local default filesystem, streaming checkpoints are written
+  through Hadoop's FileSystem API (``streaming.checkpoints``), so no
+  checkpoint file costs a ``readlink`` process.
 """
 
 from __future__ import annotations
@@ -23,7 +26,37 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from flink_streaming_platform_web_spark.streaming.checkpoints import (
+    checkpoint_file_manager_conf,
+)
+
+#: today's default heap, kept as the cap on larger machines
+MAX_DEFAULT_HEAP_MB = 16 * 1024
+
+
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of the machine's MemTotal
+    (the other half is for Python workers and the OS), capped at 16g.
+    Without ``meminfo`` (not Linux) the cap is the default."""
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return f"{MAX_DEFAULT_HEAP_MB}m"
+    return f"{min(MAX_DEFAULT_HEAP_MB, kb // 2048)}m"
+
 
 #: the directory holding the package: Python workers (which import
 #: ``worker_daemon``) and job subprocesses import it from here
@@ -50,7 +83,7 @@ def get_spark(
     conf here is also correct for a 1000-executor deployment — AQE then
     re-splits the static ``shuffle_partitions`` seed at runtime.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     # the JVM hands its PYTHONPATH to the Python workers it starts
     os.environ["PYTHONPATH"] = with_package_root(
         os.environ.get("PYTHONPATH", "")
@@ -60,7 +93,7 @@ def get_spark(
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # AQE: coalesce small shuffle partitions, split skewed ones,
         # convert sort-merge joins to broadcast when runtime stats allow.
@@ -96,11 +129,10 @@ def get_spark(
         # executors and removes shuffles from every dim join.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        # single-JVM local mode: driver heap IS executor heap for all
-        # 32 threads; 16g keeps GC quiet across a long query inventory
-        # (the box has 128 GiB — at cluster scale this is per-executor
-        # memory sizing instead)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # single-JVM local mode: driver heap IS executor heap for every
+        # task thread, sized to the machine (at cluster scale this is
+        # per-executor memory sizing instead)
+        .config("spark.driver.memory", default_driver_memory())
     )
     # environment-supplied conf overrides (semicolon-separated k=v
     # pairs): the deployment knob for cluster profiles and for A/B
@@ -142,6 +174,15 @@ def get_spark(
             .enableHiveSupport()
         )
     spark = builder.getOrCreate()
+    # checkpoint file manager from the default filesystem, which also
+    # reflects core-site.xml; an explicit choice (SPARK_GRAFT_CONF or
+    # extra_conf) is left alone
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.defaultFS"
+    )
+    for k, v in checkpoint_file_manager_conf(default_fs).items():
+        if spark.conf.get(k, None) is None:
+            spark.conf.set(k, v)
     # Flink-compat scalar surface (SQL UDFs, Catalyst-inlined); cheap
     # and idempotent, so every session — runner, tests, bench — gets it
     from flink_streaming_platform_web_spark.functions import flink_builtins

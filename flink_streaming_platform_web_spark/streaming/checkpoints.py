@@ -14,11 +14,22 @@ Streaming's model:
 | stateBackendType ROCKSDB       | RocksDB state store provider |
 | externalized retention         | checkpoints always survive the query (registry = savepoint list) |
 | tolerableCheckpointFailureNumber | n/a — Spark fails the batch and retries from the last checkpoint |
+| checkpoint file manager (FsCheckPoint's filesystem) | FileSystem-based on a `file:` (or scheme-less) default FS, whose FileContext renames spawn a `readlink` process per file without libhadoop; Spark's default for every other scheme |
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from urllib.parse import urlsplit
+
+#: the Spark SQL conf naming the class that writes checkpoint files
+CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+#: Spark 4.1's package for it; the pre-4.1 name (without
+#: ``.checkpointing``) fails with CANNOT_LOAD_CHECKPOINT_FILE_MANAGER
+FS_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 @dataclass
@@ -46,6 +57,47 @@ def spark_confs(p: CheckPointParam) -> dict[str, str]:
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         ] = "true"
     return confs
+
+
+def checkpoint_file_manager_conf(fs_uri: str) -> dict[str, str]:
+    """The session conf choosing the checkpoint file manager for a
+    session whose Hadoop default filesystem is ``fs_uri``.
+
+    On ``file:`` (or a bare path) this is the FileSystem-based manager.
+    Spark's default FileContext-based manager renames each checkpoint
+    file through ``FileContext``, and without libhadoop Hadoop's local
+    filesystem resolves that rename by running ``readlink`` as a child
+    process of the JVM: ~100 ms per state partition per micro-batch.
+    On ``file:`` the FileSystem-based manager keeps the contracts
+    checkpoints rely on:
+
+    - the offset, commit and ``_spark_metadata`` logs stay
+      create-if-absent: ``createAtomic(p, overwriteIfPossible=false)``
+      on an existing file raises ``FileAlreadyExistsException``;
+    - a state-store delta or snapshot file appears whole or not at all
+      (written to a temp file, then renamed). Writing an existing one
+      again (a retried batch) is a best-effort overwrite, which is
+      Spark's contract for ``overwriteIfPossible=true``: the
+      ``ProxyLocalFileSystem`` that Spark's Hive jars register for
+      ``file:`` refuses to rename onto an existing file, so the
+      earlier, complete file is kept;
+    - ``.crc`` files stay on (``LocalFileSystem`` is a
+      ``ChecksumFileSystem``);
+    - one checkpoint never has two writers, because ``JobManager``
+      refuses to start a job that is already running.
+
+    Every other scheme (HDFS, object stores) gets ``{}`` and keeps
+    Spark's default.
+
+    This is a session default, decided once from the default
+    filesystem, not set and restored around each ``writer.start()``:
+    Spark clones the query's session after ``start()`` returns and the
+    state store reads the manager class from that clone, so a
+    per-query toggle would race with the query it is meant for.
+    """
+    if urlsplit(fs_uri).scheme in ("", "file"):
+        return {CHECKPOINT_FILE_MANAGER_KEY: FS_CHECKPOINT_FILE_MANAGER}
+    return {}
 
 
 def trigger_kwargs(p: CheckPointParam) -> dict[str, str]:
