@@ -3446,11 +3446,6 @@ def match_recognize(
     )
 
 
-def match_recognize_sql(df: DataFrame, clause: str, output_schema: str):
-    """Parse + apply in one step (the runner's SQL route)."""
-    return match_recognize(df, parse_match_recognize(clause), output_schema)
-
-
 def infer_output_schema(spec: MatchSpec, df: DataFrame) -> str:
     """Output DDL: ONE ROW PER MATCH keeps the partition columns; ALL
     ROWS PER MATCH keeps EVERY input column (the SQL/RPR row-per-row

@@ -6,14 +6,15 @@ Rebuilds ``CheckPointParams.buildCheckPointParam`` /
 defaults at CheckPointParam.java:20-52) onto Spark Structured
 Streaming's model:
 
-| Flink knob (reference default) | Spark mapping |
+| Flink knob (reference default) | Where it lives in this rebuild |
 |---|---|
-| checkpointInterval (60 s)      | trigger(processingTime=…) — Spark checkpoints every micro-batch |
-| checkpointingMode EXACTLY_ONCE | exactly-once state + idempotent/upsert sinks (SURVEY §7.3) |
-| checkpointDir                  | checkpointLocation per query |
-| stateBackendType ROCKSDB       | RocksDB state store provider |
+| checkpointInterval (60 s)      | `SET table.exec.mini-batch.allow-latency` sets the micro-batch trigger; Spark checkpoints every micro-batch |
+| checkpointingMode EXACTLY_ONCE | always: exactly-once state + idempotent/upsert sinks (SURVEY §7.3) |
+| checkpointTimeout (10 min)     | n/a: a micro-batch commits or fails as a whole |
+| checkpointDir                  | `CheckPointParam.checkpoint_dir` → checkpointLocation per query |
+| stateBackendType ROCKSDB       | `SET spark.sql.streaming.stateStore.providerClass` (passed through to the session conf) |
 | externalized retention         | checkpoints always survive the query (registry = savepoint list) |
-| tolerableCheckpointFailureNumber | n/a — Spark fails the batch and retries from the last checkpoint |
+| tolerableCheckpointFailureNumber | n/a: Spark fails the batch and retries from the last checkpoint |
 | checkpoint file manager (FsCheckPoint's filesystem) | FileSystem-based on a `file:` (or scheme-less) default FS, whose FileContext renames spawn a `readlink` process per file without libhadoop; Spark's default for every other scheme |
 """
 
@@ -34,29 +35,12 @@ FS_CHECKPOINT_FILE_MANAGER = (
 
 @dataclass
 class CheckPointParam:
-    """Mirrors CheckPointParam.java fields + defaults (:20-52)."""
+    """The one per-job checkpoint setting the platform passes: where
+    the job's query checkpoints live (``None``: run-scoped temp dirs).
+    The reference's other CheckPointParam.java fields map as in the
+    module table above."""
 
     checkpoint_dir: str | None = None
-    checkpoint_interval_ms: int = 60_000
-    checkpointing_mode: str = "EXACTLY_ONCE"
-    checkpoint_timeout_ms: int = 600_000
-    tolerable_failures: int = 1
-    state_backend: str = "FILE"  # MEMORY | FILE | ROCKSDB
-
-
-def spark_confs(p: CheckPointParam) -> dict[str, str]:
-    """Session-level confs implied by the checkpoint param."""
-    confs: dict[str, str] = {}
-    if p.state_backend.upper() == "ROCKSDB":
-        confs["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-        # incremental-checkpoint analog (Flink rocksdb incremental)
-        confs[
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        ] = "true"
-    return confs
 
 
 def checkpoint_file_manager_conf(fs_uri: str) -> dict[str, str]:
@@ -89,20 +73,12 @@ def checkpoint_file_manager_conf(fs_uri: str) -> dict[str, str]:
     Every other scheme (HDFS, object stores) gets ``{}`` and keeps
     Spark's default.
 
-    This is a session default, decided once from the default
-    filesystem, not set and restored around each ``writer.start()``:
-    Spark clones the query's session after ``start()`` returns and the
-    state store reads the manager class from that clone, so a
-    per-query toggle would race with the query it is meant for.
+    This is a session default, not set and restored around each
+    ``writer.start()``: the choice depends only on the default
+    filesystem, which every query of the session shares, so it is one
+    decision per session.
     """
     if urlsplit(fs_uri).scheme in ("", "file"):
         return {CHECKPOINT_FILE_MANAGER_KEY: FS_CHECKPOINT_FILE_MANAGER}
     return {}
 
-
-def trigger_kwargs(p: CheckPointParam) -> dict[str, str]:
-    """writeStream.trigger(**kwargs) — checkpoint cadence maps to the
-    micro-batch trigger interval. Milliseconds pass through directly:
-    integer-dividing to seconds silently turned sub-second intervals
-    into '0 seconds' (= as-fast-as-possible)."""
-    return {"processingTime": f"{p.checkpoint_interval_ms} milliseconds"}

@@ -41,8 +41,7 @@ streaming plan):
 Eligibility is decided spec-first (``fb_stream_shape``) and falls
 back to the NFA route for everything else (consuming skip modes,
 ALL ROWS, context-dependent defines, non-memory sinks, non-row-local
-outer selects). ``SPARK_GRAFT_FB_CEP=0`` disables the route for A/B
-measurement.
+outer selects).
 """
 
 from __future__ import annotations
@@ -87,8 +86,6 @@ def try_start(runner, src, spec, sink, outer: str, view: str, wm, idx: int):
     )
     from flink_streaming_platform_web_spark.operators import cep
 
-    if os.environ.get("SPARK_GRAFT_FB_CEP", "1") == "0":
-        return None
     if sink.connector != "memory" or sink.primary_key:
         return None
     spark = runner.spark
@@ -205,7 +202,6 @@ class _FBCepStream:
         # from the first batch (the staged parquet's exact types)
         self._frame_fields = None
         self._drained = False
-        self._plan_captured = False
 
     # ---- state dir helpers -------------------------------------------
 
@@ -388,7 +384,6 @@ class _FBCepStream:
             out = self.runner._align_to_sink(
                 sess.sql(self.outer_sql), self.sink
             )
-            self._capture_plan(out)
             out.write.mode("overwrite").parquet(
                 self._dir("emits", version)
             )
@@ -400,23 +395,6 @@ class _FBCepStream:
                 self._write(frame.limit(0), version, "tails")
         finally:
             frame.unpersist()
-
-    def _capture_plan(self, out: DataFrame) -> None:
-        """One-shot per-batch plan capture for the round's plan
-        artifacts (SPARK_GRAFT_FB_PLAN_OUT=<path>)."""
-        path = os.environ.get("SPARK_GRAFT_FB_PLAN_OUT")
-        if not path or self._plan_captured:
-            return
-        self._plan_captured = True
-        try:
-            jdf = out._jdf
-            txt = out.sparkSession._jvm.PythonSQLUtils.explainString(
-                jdf.queryExecution(), "formatted"
-            )
-            with open(path, "w") as fh:
-                fh.write(txt)
-        except Exception:
-            pass
 
     def _gc(self, committed: dict, previous: dict) -> None:
         """Drop every state version that neither the meta just

@@ -51,7 +51,6 @@ from flink_streaming_platform_web_spark.sql.script import (
 )
 from flink_streaming_platform_web_spark.streaming.checkpoints import (
     CheckPointParam,
-    trigger_kwargs,
 )
 from flink_streaming_platform_web_spark.streaming.upsert import (
     CombiningStore,
@@ -78,6 +77,17 @@ _MINI_BATCH_LATENCY = "table.exec.mini-batch.allow-latency"
 # INSERT keeps real cross-batch streaming state while the external
 # source still has exactly one consumer.
 _READ_ONCE_KEY = "graft.statement-set.read-once"
+# Arrow batch size for a watermark-buffered stream (round 14). The
+# applyInPandasWithState channel re-buffers a group's STATE alongside
+# every maxRecordsPerBatch-row data chunk, so a large-state group
+# chunked at the 10k default goes quadratic in state size: st23's
+# global-pattern singleton key (1.67M-row first-batch buffer at sf5)
+# never finished (>45 min, jstack pinned in
+# ApplyInPandasWithStateWriter/DirectByteBufferOutputStream); at 200k
+# rows per chunk it runs in 102 s. Buffered-route rows are narrow
+# (event keys + measures), so 200k rows stays a few MB per chunk.
+_ARROW_BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
+_WB_ARROW_BATCH = 200_000
 
 
 @dataclass
@@ -2284,45 +2294,29 @@ class JobRunner:
             writer = writer.option("checkpointLocation", ckpt_loc)
         if self._trigger:
             writer = writer.trigger(**self._trigger)
-        elif self.checkpoint.checkpoint_interval_ms != 60_000:
-            writer = writer.trigger(**trigger_kwargs(self.checkpoint))
         if drain is not None:
-            # Round 14 (optimization): raise the Arrow batch size for
-            # the buffered-operator stream's lifetime (the started
-            # query clones the session, so restoring right after
-            # start() leaves batch queries untouched). The
-            # applyInPandasWithState channel re-buffers a group's
-            # STATE alongside every maxRecordsPerBatch-row data chunk,
-            # so a large-state group chunked at the 10k default goes
-            # quadratic in state size — st23's global-pattern
-            # singleton key (1.67M-row first-batch buffer at sf5)
-            # never finished (>45 min, jstack pinned in
-            # ApplyInPandasWithStateWriter/DirectByteBufferOutputStream);
-            # at 200k rows per chunk it runs in 102 s. Buffered-route
-            # rows are narrow (event keys + measures), so 200k rows
-            # stays a few MB of data per chunk at any scale.
-            _arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-            _arrow_prev = self.spark.conf.get(_arrow_key, None)
-            _arrow_target = int(
-                os.environ.get("SPARK_GRAFT_WB_ARROW_BATCH", "200000")
-            )
+            # raise the Arrow batch size for the buffered-operator
+            # stream's lifetime: StreamExecution's constructor clones
+            # the session before start() returns, so restoring right
+            # after start() leaves batch queries untouched
+            _arrow_prev = self.spark.conf.get(_ARROW_BATCH_KEY, None)
             # track the set with its own flag (ADVICE r14): conf.get
             # returns the SQL built-in default today, but if it ever
             # returned None for an unset key, keying the restore on
             # `_arrow_prev is not None` would leak the raise into the
             # session for every subsequent batch query
             _arrow_did_set = False
-            if int(_arrow_prev or 10000) < _arrow_target:
-                self.spark.conf.set(_arrow_key, str(_arrow_target))
+            if int(_arrow_prev or 10000) < _WB_ARROW_BATCH:
+                self.spark.conf.set(_ARROW_BATCH_KEY, str(_WB_ARROW_BATCH))
                 _arrow_did_set = True
         try:
             q = writer.start()
         finally:
             if drain is not None and _arrow_did_set:
                 if _arrow_prev is not None:
-                    self.spark.conf.set(_arrow_key, _arrow_prev)
+                    self.spark.conf.set(_ARROW_BATCH_KEY, _arrow_prev)
                 else:
-                    self.spark.conf.unset(_arrow_key)
+                    self.spark.conf.unset(_ARROW_BATCH_KEY)
         if drain is not None:
             spec, post = drain
             q = DrainingQuery(

@@ -13,6 +13,7 @@ import os
 import random
 
 import pandas as pd
+import pytest
 
 from flink_streaming_platform_web_spark.streaming.runner import JobRunner
 
@@ -196,15 +197,16 @@ def test_drain_flushes_tail_without_sentinel(spark, tmp_path):
     assert _run_over(spark, p, "tail") == _batch_over(spark, rows)
 
 
-def test_streaming_match_recognize_buffered_route(spark, tmp_path):
+@pytest.mark.parametrize("sink", ["memory", "filesystem"])
+def test_streaming_match_recognize_buffered_route(spark, tmp_path, sink):
     """Streaming MATCH_RECOGNIZE through the runner's SQL route
     (round 8): watermarked source → watermark-buffered CEP. The
     rising streak 1→4→6 is split across micro-batches WITH disorder
     (the 4 arrives a batch late), and the final streak 2→9 is still
     pending at end of input — stop-with-drain must close it exactly
-    as batch EOF would (no sentinel rows)."""
-    import pytest
-
+    as batch EOF would (no sentinel rows). Both streaming routes run
+    the same rows: a memory sink takes the foreachBatch tier route
+    (fb_cep), a filesystem sink the watermark-buffered NFA route."""
     rows = [
         {"k": "a", "ts": "2024-01-01 00:00:10", "v": 1.0},
         {"k": "a", "ts": "2024-01-01 00:00:20", "v": 4.0},
@@ -213,18 +215,24 @@ def test_streaming_match_recognize_buffered_route(spark, tmp_path):
         {"k": "a", "ts": "2024-01-01 00:00:50", "v": 9.0},
     ]
     p = str(tmp_path / "mr")
+    snk = str(tmp_path / "mr_snk")
     # disorder: the 00:00:20 row arrives AFTER the 00:00:30 row's
     # batch (within the 60 s delay); the tail streak stays pending
     _write_files(
         p, [[rows[0], rows[2]], [rows[1], rows[3]], [rows[4]]]
     )
+    sink_opts = {
+        "memory": "'connector'='memory'",
+        "filesystem": f"'connector'='filesystem','path'='{snk}',"
+        "'format'='json'",
+    }
     script = f"""
         CREATE TABLE mr_ev (k STRING, ts TIMESTAMP, v DOUBLE,
           WATERMARK FOR ts AS ts - INTERVAL '60' SECOND
         ) WITH ('connector'='filesystem','path'='{p}',
                 'format'='json','source.max-files-per-trigger'='1');
         CREATE TABLE mr_snk (k STRING, n_up BIGINT, peak DOUBLE)
-          WITH ('connector'='memory');
+          WITH ({sink_opts[sink]});
         INSERT INTO mr_snk
         SELECT k, n_up, peak
         FROM mr_ev MATCH_RECOGNIZE (
@@ -239,14 +247,21 @@ def test_streaming_match_recognize_buffered_route(spark, tmp_path):
         """
     runner = JobRunner(spark, mode="streaming")
     result = runner.execute_script(script)
+    fb_queries = [
+        q for q in result.streaming_queries
+        if (q.name or "").startswith("fb_cep_")
+    ]
+    assert len(fb_queries) == (1 if sink == "memory" else 0)
     for q in result.streaming_queries:
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(120)
-    got = sorted(
-        (r["n_up"], r["peak"])
-        for r in spark.table("mr_snk").collect()
+    out = (
+        spark.table("mr_snk")
+        if sink == "memory"
+        else spark.read.schema("k string, n_up long, peak double").json(snk)
     )
+    got = sorted((r["n_up"], r["peak"]) for r in out.collect())
     # 1→4→6 (two UP steps, peak 6) and the drained tail 2→9
     assert got == [(1, 9.0), (2, 6.0)]
 
@@ -461,6 +476,39 @@ def test_crash_before_drain_then_restart_drains_once(spark, tmp_path):
     got = {(r["k"], r["ts_s"]): (r["n"], r["mx"]) for r in got_rows}
     assert got == expected
     assert len(got_rows) == len(expected), "drain duplicated rows"
+
+
+def test_buffered_stream_raises_arrow_batch_in_its_own_session(
+    spark, tmp_path
+):
+    """A watermark-buffered stream runs with 200k-row Arrow batches
+    (the applyInPandasWithState channel re-buffers a group's state
+    with every chunk), but only in the session StreamExecution clones
+    before ``start()`` returns: the driver session keeps its own
+    value for every batch query after it."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    src = str(tmp_path / "src")
+    snk = str(tmp_path / "snk")
+    _write_files(src, [_mk_rows(n_per_key=4, keys=(1,))])
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "5000")
+    try:
+        res = JobRunner(spark, mode="streaming").execute_script(
+            _over_script("ab", src, snk)
+        )
+        (q,) = res.streaming_queries
+        try:
+            stream = q._jsq.streamingQuery()
+            assert stream.sparkSessionForStream().conf().get(key) == "200000"
+            assert spark.conf.get(key) == "5000"
+        finally:
+            q.stop()
+            q.awaitTermination(120)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
 
 
 def test_streaming_nested_group_buffered_route(spark, tmp_path):

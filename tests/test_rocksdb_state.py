@@ -1,25 +1,23 @@
-"""RocksDB state store — the reference's ROCKSDB backend analog
-(StateBackendEnum.java:14 → checkpoints.spark_confs mapping). The
-provider class is a runtime SQL conf, bound per streaming query at
-start."""
+"""RocksDB state store: the reference's ROCKSDB backend analog
+(StateBackendEnum.java:14). A job chooses it with
+``SET 'spark.sql.streaming.stateStore.providerClass' = …``, which the
+runner passes through to the session conf; the provider class is a
+runtime SQL conf, bound per streaming query at start."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from flink_streaming_platform_web_spark.streaming.checkpoints import (
-    CheckPointParam,
-    spark_confs,
-)
-
 PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state."
+    "RocksDBStateStoreProvider"
+)
 
 
 def test_rocksdb_state_store_streaming_agg(spark, tmp_path):
-    confs = spark_confs(CheckPointParam(state_backend="ROCKSDB"))
-    assert "RocksDBStateStoreProvider" in confs[PROVIDER_KEY]
     before = spark.conf.get(PROVIDER_KEY, None)
-    spark.conf.set(PROVIDER_KEY, confs[PROVIDER_KEY])
+    spark.conf.set(PROVIDER_KEY, ROCKSDB_PROVIDER)
     try:
         spark.createDataFrame(
             [("a", 1.0), ("b", 2.0), ("a", 3.0)], "k STRING, v DOUBLE"

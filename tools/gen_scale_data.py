@@ -38,11 +38,11 @@ itself rather than inventing new distributions:
 
 Row counts follow the driver's own scaling law (measured across its
 three SFs): lineitem=6M*sf, orders=1.5M*sf, customer=150k*sf,
-part=200k*sf, supplier=10k*sf, events=1M*sf,
-documents=max(500, 50k*sf), embeddings=max(500, 20k*sf); event
-timestamps stay inside the fixed 30-day window and order dates inside
-1995-2001, so time-bucket cardinalities are constant and per-bucket
-density scales — same as the driver corpus.
+part=200k*sf, supplier=10k*sf, events=1M*sf over 15k*sf users (66.7
+events per user), documents=max(500, 50k*sf), embeddings=max(500,
+20k*sf); event timestamps stay inside the fixed 30-day window and
+order dates inside 1995-2001, so time-bucket cardinalities are
+constant and per-bucket density scales — same as the shipped corpus.
 
 Usage: python tools/gen_scale_data.py SF [outdir]
 Writes <repo>/.scaledata/sf{SF}/ by default (gitignored).
@@ -98,6 +98,7 @@ def _counts(sf: float) -> dict[str, int]:
         "orders": int(1_500_000 * sf),
         "lineitem": int(6_000_000 * sf),
         "events": int(1_000_000 * sf),
+        "users": max(1, int(15_000 * sf)),
         "documents": max(500, int(50_000 * sf)),
         "embeddings": max(500, int(20_000 * sf)),
     }
@@ -184,7 +185,7 @@ def gen(sf: float, outdir: Path) -> None:
             "events", ne, rng,
             {
                 "event_id": np.arange(ne, dtype=np.int64),
-                "user_id": rng.integers(0, max(150, int(150_000 * sf)), ne),
+                "user_id": rng.integers(0, n["users"], ne),
             },
         ).set_column(
             1, "ts", pa.array(ts, type=pa.timestamp("us"))

@@ -38,6 +38,7 @@ from __future__ import annotations
 import argparse
 import json
 import math
+import re
 import sys
 import time
 from pathlib import Path
@@ -50,11 +51,12 @@ from flink_streaming_platform_web_spark.session import get_spark
 
 
 def _sf_of(d: str) -> float:
-    tail = d.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        return float(tail)
-    except ValueError:
-        return -1.0
+    """The positive scale factor an ``sf<N>`` directory name carries.
+    Any other name raises ValueError: the exponent needs a real SF."""
+    m = re.fullmatch(r"sf(\d*\.?\d+)", Path(d).name)
+    if m is None or float(m.group(1)) <= 0:
+        raise ValueError(f"{d}: not an sf<N> directory (N > 0)")
+    return float(m.group(1))
 
 
 def main() -> None:
@@ -67,6 +69,13 @@ def main() -> None:
     ap.add_argument("--queries", default="st")
     ap.add_argument("--skip", default="")
     args = ap.parse_args()
+    # before the session starts, not after the timed runs: a bad name
+    # would otherwise lose the whole ladder's JSON line at the end
+    for d in args.dirs:
+        try:
+            _sf_of(d)
+        except ValueError as e:
+            ap.error(str(e))
 
     prefixes = tuple(p for p in args.queries.split(",") if p)
     skip = tuple(p for p in args.skip.split(",") if p)
@@ -114,7 +123,7 @@ def main() -> None:
                 file=sys.stderr,
             )
         exp = None
-        if len(dirs) >= 2 and secs[0] > 0 and secs[-1] > 0:
+        if secs[0] > 0 and secs[-1] > 0 and sfs[-1] > sfs[0]:
             exp = round(
                 math.log(secs[-1] / secs[0])
                 / math.log(sfs[-1] / sfs[0]),
