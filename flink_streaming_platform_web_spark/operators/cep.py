@@ -108,8 +108,6 @@ class MatchSpec:
     #: evaluate over the COMPLETE match instead of rows-so-far
     #: (SQL/RPR RUNNING/FINAL; RUNNING is the all-rows default)
     final_measures: set[str] = field(default_factory=set)
-    skip_past_last: bool = True
-    output_schema: str = ""  # filled by match_recognize from a sample
     raw_measures: list[tuple[str, str]] = field(default_factory=list)
     # PATTERN (...) WITHIN INTERVAL 'n' unit — max seconds between a
     # match's first and last row (Flink's state-bounding time window);
@@ -371,7 +369,6 @@ def parse_match_recognize(clause: str) -> MatchSpec:
         measures=measures,
         pattern=pattern,
         define=define,
-        skip_past_last=(skip_mode == "past_last"),
         raw_measures=raw,
         within_seconds=within,
         all_rows=all_rows,
@@ -689,7 +686,9 @@ def _match_ctx(
         r = _var_rows(var)
         if fn == "count":
             return len(r)
-        vals = [x[col] for x in r if x[col] is not None]
+        # SQL aggregates skip NULLs, which reach the matcher as None
+        # or, in numeric and datetime columns, as NaN/NaT
+        vals = [v for x in r if (v := x[col]) is not None and v == v]
         if not vals:
             return None
         if fn == "sum":
@@ -913,71 +912,43 @@ def _define_bitmaps(rows, spec: MatchSpec, frame=None) -> dict:
     but only for buffers big enough that the build cost is beaten by
     the saved per-candidate evals (streaming folds over small
     buffers keep the scalar path)."""
-    import pandas as pd
-
-    vec = {
-        v: r
-        for v, src in spec.define.items()
-        if (r := _vector_define(src, v)) is not None
-    }
-    if not vec or not rows:
+    if not rows or (frame is None and len(rows) < 64):
         return {}
     if frame is None:
-        if len(rows) < 64:
+        if not any(_vector_define(s, v) for v, s in spec.define.items()):
             return {}
+        import pandas as pd
+
         frame = pd.DataFrame(rows)
-    series: dict = {}
+    return {
+        var: _patch_head(bm, max_shift, scode, rows, var)
+        for var, (bm, max_shift, scode) in _chunk_bitmaps(
+            frame, spec
+        ).items()
+    }
 
-    def __col(c):
-        # positional index: the frame may carry a shuffled index from
-        # sort_values, while bitmaps are indexed by row position
-        if c not in series:
-            series[c] = pd.Series(frame[c].to_numpy())
-        return series[c]
 
-    def __shift(c, k=1):
-        return __col(c).shift(k)
-
-    import numpy as np
-
-    n = len(frame)
-    out = {}
-    for var, (code, cols, max_shift) in vec.items():
-        if any(
-            c not in frame.columns or frame[c].dtype == object
-            for c in cols
-        ):
-            continue
+def _patch_head(bm, max_shift, scode, rows, var):
+    """``bm`` with its first ``max_shift`` rows re-evaluated on the
+    scalar path (a copy when any are). There a chunk-global shift()
+    leaks the previous group's tail, and PREV past the partition head
+    is None scalar-side but NaN elementwise, whose ==/!= semantics
+    differ (None == None is True, NaN == NaN is False) — the replay
+    keeps the bitmap bit-for-bit exact."""
+    if not max_shift:
+        return bm
+    bm = bm.copy()
+    for i in range(min(max_shift, len(rows))):
         try:
-            r = eval(  # noqa: S307 — same translated subset as ok()
-                code, {"__builtins__": {}},
-                {"__col": __col, "__shift": __shift},
+            bm[i] = bool(
+                eval(  # noqa: S307 — same translated subset as ok()
+                    scode, {"__builtins__": {}},
+                    _match_ctx(rows, i, [], i, var),
+                )
             )
-            if isinstance(r, pd.Series):
-                bm = r.fillna(False).to_numpy(dtype=bool)
-            else:  # constant-folded define
-                bm = np.full(n, bool(r))
-            if max_shift:
-                # head rows see None from __prev scalar-side but NaN
-                # elementwise; ==/!= between two such terms diverge
-                # (None == None True vs NaN == NaN False). Replay the
-                # scalar evaluator on those rows so the bitmap stays
-                # bit-for-bit exact.
-                scode = _compiled(spec.define[var], "<define>")
-                for i in range(min(max_shift, n)):
-                    try:
-                        bm[i] = bool(
-                            eval(  # noqa: S307 — same subset
-                                scode, {"__builtins__": {}},
-                                _match_ctx(rows, i, [], i, var),
-                            )
-                        )
-                    except TypeError:
-                        bm[i] = False
-            out[var] = bm
-        except Exception:
-            continue  # build failure → scalar path, same answers
-    return out
+        except TypeError:
+            bm[i] = False
+    return bm
 
 
 class _ColRows:
@@ -1584,8 +1555,7 @@ def _chunk_bitmaps(frame, spec: MatchSpec) -> dict:
     scalar evals on this corpus's ~70-row groups. The chunk-global
     shift() leaks the previous group's tail into each group's first
     ``max_shift`` rows; the caller patches exactly those rows with the
-    scalar evaluator (which also preserves the None-vs-NaN ==/!= head
-    semantics — see _define_bitmaps)."""
+    scalar evaluator (:func:`_patch_head`)."""
     import numpy as np
     import pandas as pd
 
@@ -1677,24 +1647,10 @@ def _match_chunk(frame, spec: MatchSpec, starts):
     for gi in range(len(bounds) - 1):
         g0, g1 = int(bounds[gi]), int(bounds[gi + 1])
         rows = cols.slice(g0, g1)
-        bms = {}
-        for var, (bm, max_shift, scode) in cbms.items():
-            s = bm[g0:g1]
-            if max_shift:
-                # patch the group-head rows the chunk-global shift
-                # polluted (and where scalar None semantics apply)
-                s = s.copy()
-                for i in range(min(max_shift, g1 - g0)):
-                    try:
-                        s[i] = bool(
-                            eval(  # noqa: S307 — same subset
-                                scode, {"__builtins__": {}},
-                                _match_ctx(rows, i, [], i, var),
-                            )
-                        )
-                    except TypeError:
-                        s[i] = False
-            bms[var] = s
+        bms = {
+            var: _patch_head(bm[g0:g1], max_shift, scode, rows, var)
+            for var, (bm, max_shift, scode) in cbms.items()
+        }
         wv = None
         if wvals is not None:
             vals, valid, div = wvals
@@ -2004,73 +1960,186 @@ def _pref_case(pairs):
     return "(CASE " + " ".join(parts) + " END)"
 
 
-def _tier_measure(raw, occ, elem_info, lead, k, order0, col_types, cols):
-    """One raw MEASURE → a SQL projection over the anchor row's LEAD
-    offsets, or None when outside the tier subset. SUM/MIN/MAX/AVG
-    are admitted only when the variable owns exactly one offset (a
-    one-row aggregate is the value itself; SUM widens ints to BIGINT
-    and AVG casts to DOUBLE to match infer_output_schema)."""
+#: integer types whose SUM widens to BIGINT, and the numeric types a
+#: tier may SUM or AVG — Spark widens decimal sums and averages
+#: differently from the NFA's Python arithmetic, so those decline
+_INT_TYPES = ("int", "smallint", "tinyint")
+_NUM_TYPES = _INT_TYPES + ("bigint", "double", "float")
+
+
+@functools.lru_cache(maxsize=1024)
+def _measure_form(raw: str):
+    """One raw MEASURE in the tiers' grammar as ``(fn, var, col)``, fn
+    upper-cased: FIRST/LAST/SUM/MIN/MAX/AVG(V.col); a bare ``V.col``
+    as ``("LAST", V, col)``; COUNT(V.*) as ``("COUNT", V, None)``;
+    COUNT(*) as ``("COUNT", None, None)``; CLASSIFIER() and
+    MATCH_ROWTIME() as ``(name, None, None)``. None for anything else
+    (arithmetic, PREV, literals) — only the NFA evaluates those.
+    Cached like :func:`_compiled`: every tier parses the same few
+    measures."""
     t = raw.strip()
     m = re.fullmatch(
-        r"(FIRST|LAST)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
+        r"(FIRST|LAST|SUM|MIN|MAX|AVG)\s*\(\s*(\w+)\.(\w+)\s*\)",
+        t, re.IGNORECASE,
     )
     if m:
-        v, col = m.group(2), m.group(3)
-        if v not in occ or col not in cols:
-            return None
-        pairs = [(g, lead(col, off)) for off, g in occ[v]]
-        if m.group(1).upper() == "LAST":
-            pairs = pairs[::-1]
-        return _pref_case(pairs)
+        return m.group(1).upper(), m.group(2), m.group(3)
     m = re.fullmatch(r"(\w+)\.(\w+)", t)
-    if m:  # bare V.col = LAST(V.col)
-        v, col = m.group(1), m.group(2)
-        if v not in occ or col not in cols:
-            return None
-        return _pref_case([(g, lead(col, off)) for off, g in occ[v]][::-1])
-    if re.fullmatch(r"MATCH_ROWTIME\s*\(\s*\)", t, re.IGNORECASE):
-        return lead(order0, k - 1)
-    if re.fullmatch(r"COUNT\s*\(\s*\*\s*\)", t, re.IGNORECASE):
-        return f"CAST({k} AS BIGINT)"
-    m = re.fullmatch(r"COUNT\s*\(\s*(\w+)\.\*\s*\)", t, re.IGNORECASE)
     if m:
-        base = sum(1 for _, g in occ.get(m.group(1), ()) if g is None)
+        return "LAST", m.group(1), m.group(2)
+    m = re.fullmatch(
+        r"COUNT\s*\(\s*(?:(\w+)\.)?\*\s*\)", t, re.IGNORECASE
+    )
+    if m:
+        return "COUNT", m.group(1), None
+    m = re.fullmatch(
+        r"(CLASSIFIER|MATCH_ROWTIME)\s*\(\s*\)", t, re.IGNORECASE
+    )
+    if m:
+        return m.group(1).upper(), None, None
+    return None
+
+
+def _tier_forms(spec, cols):
+    """[(form, name)] for every MEASURE, or None when one falls outside
+    :func:`_measure_form`'s grammar or reads a column the input lacks
+    — the tier declines and the NFA evaluates it."""
+    out = []
+    for raw, name in spec.raw_measures:
+        form = _measure_form(raw)
+        if form is None or (form[2] is not None and form[2] not in cols):
+            return None
+        out.append((form, name))
+    return out
+
+
+def _agg_type(fn, ct):
+    """The type the NFA route gives ``fn`` over a column of type ``ct``
+    (:func:`infer_output_schema`): COUNT is bigint, AVG double, SUM
+    widens the integer types to bigint, everything else keeps ``ct``."""
+    if fn == "COUNT":
+        return "bigint"
+    if fn == "AVG":
+        return "double"
+    if fn == "SUM" and ct in _INT_TYPES:
+        return "bigint"
+    return ct
+
+
+def _one_row_value(fn, val, ct):
+    """FIRST/LAST/SUM/MIN/MAX/AVG over the ONE row a variable binds,
+    whose value SQL is ``val`` (None: the variable bound no row — a
+    typed NULL, the scalar evaluator's None), cast to
+    :func:`_agg_type`'s type. None declines SUM/AVG over a non-numeric
+    column (see ``_NUM_TYPES``)."""
+    if fn in ("SUM", "AVG") and ct not in _NUM_TYPES:
+        return None
+    t = _agg_type(fn, ct)
+    if val is None:
+        return f"CAST(NULL AS {t})"
+    return val if t == ct and fn != "AVG" else f"CAST({val} AS {t})"
+
+
+def _start_row(df, spec, pattern, lead, cols, eq_safe, elide_probe=True):
+    """Start-row predicate of a fixed-length ``pattern`` for the LEAD
+    tiers (A, A-all, A′ per expansion, B): the elements' row-local
+    conditions (:func:`_tier_elements`), the partition-boundary probe
+    and the WITHIN bound. Returns (elem_info, conds), or None outside
+    the tier subset.
+
+    The probe ``LEAD(1, k-1) IS NOT NULL`` is a LEAD over a CONSTANT:
+    it tells "past the partition end" from "ORDER BY value is NULL" —
+    rows with NULL order keys sort last but still exist and must stay
+    matchable (ADVICE r9 finding 3). ``elide_probe`` drops it when the
+    last element's own condition null-rejects a missing row
+    (:func:`_last_elem_pins_row`) — one fewer window expression; tier
+    B keeps it unconditionally."""
+    te = _tier_elements(pattern, spec.raw_define, lead, cols, eq_safe)
+    if te is None or not te[0]:
+        return None
+    elem_info, conds = te
+    k = len(elem_info)
+    if k > 1 and not (elide_probe and _last_elem_pins_row(elem_info)):
+        conds.append(f"{lead(None, k - 1)} IS NOT NULL")
+    wb = _within_bound(df, spec, lead, k)
+    if wb is None:
+        return None
+    if wb:
+        conds.append(wb)
+    return elem_info, conds
+
+
+def _lead_measure(form, occ, elem_info, lead, order0, col_types, pat_vars):
+    """One parsed MEASURE over the anchor row's LEAD offsets (tiers A,
+    A′ and B), or None when outside the subset. A variable reads the
+    offsets it owns in ``occ``, each behind its alternation branch's
+    guard; SUM/MIN/MAX/AVG need exactly one offset (a one-row
+    aggregate is the value itself). A variable this expansion never
+    binds but ``pat_vars`` names (tier A′: another expansion binds
+    it) reads as a typed NULL and counts 0 — the scalar evaluator's
+    None for an unmatched variable (q53's off-branch measures)."""
+    fn, v, col = form
+    k = len(elem_info)
+    if fn == "CLASSIFIER":
+        last = elem_info[-1]
+        return f"'{last[1]}'" if last[0] == "single" else last[2]
+    if fn == "MATCH_ROWTIME":
+        return lead(order0, k - 1)
+    if fn == "COUNT":
+        if v is None:
+            return f"CAST({k} AS BIGINT)"
+        base = sum(1 for _, g in occ.get(v, ()) if g is None)
         parts = [
             f" + (CASE WHEN {g} THEN 1 ELSE 0 END)"
-            for _, g in occ.get(m.group(1), ())
+            for _, g in occ.get(v, ())
             if g is not None
         ]
         return f"CAST({base}{''.join(parts)} AS BIGINT)"
-    m = re.fullmatch(
-        r"(SUM|MIN|MAX|AVG)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
-    )
-    if m:
-        fn, v, col = m.group(1).upper(), m.group(2), m.group(3)
-        if v not in occ or col not in cols or len(occ[v]) != 1:
+    if v not in occ:
+        if v not in pat_vars:
             return None
-        off, g = occ[v][0]
-        val = lead(col, off)
-        if g is not None:
-            val = f"(CASE WHEN {g} THEN {val} END)"
-        ct = col_types.get(col)
-        if fn == "SUM":
-            if ct in ("int", "smallint", "tinyint"):
-                return f"CAST({val} AS BIGINT)"
-            if ct in ("bigint", "double", "float"):
-                return val
-            return None  # decimal widening diverges → NFA
-        if fn == "AVG":
-            if ct in (
-                "int", "smallint", "tinyint", "bigint", "double",
-                "float",
-            ):
-                return f"CAST({val} AS DOUBLE)"
+        return _one_row_value(fn, None, col_types[col])
+    if fn in ("FIRST", "LAST"):
+        pairs = [(g, lead(col, off)) for off, g in occ[v]]
+        return _pref_case(pairs if fn == "FIRST" else pairs[::-1])
+    if len(occ[v]) != 1:
+        return None
+    off, g = occ[v][0]
+    val = lead(col, off)
+    if g is not None:
+        val = f"(CASE WHEN {g} THEN {val} END)"
+    return _one_row_value(fn, val, col_types[col])
+
+
+def _matched(df, lead, cols, sels, cond, flag):
+    """``sels`` over the rows where ``cond`` holds, above ONE
+    materialization of ``lead``'s navigations (:func:`_lead_prelude`):
+    the tail of tiers A, A′ and P. ``cond`` is evaluated as the column
+    ``flag``; None when an input column is named ``flag`` or collides
+    with a navigation alias."""
+    if flag in cols:
+        return None
+    base = _lead_prelude(df, lead, cols)
+    if base is None:
+        return None
+    return base.selectExpr(
+        *sels, f"{cond} AS `{flag}`"
+    ).where(f"`{flag}`").drop(flag)
+
+
+def _lead_sels(spec, forms, elem_info, lead, col_types):
+    """The partition columns plus every measure through
+    :func:`_lead_measure` (tiers A and B), or None."""
+    occ = _var_occurrences(elem_info)
+    sels = [f"`{c}`" for c in spec.partition_by]
+    for form, name in forms:
+        e = _lead_measure(
+            form, occ, elem_info, lead, spec.order_by[0], col_types, occ
+        )
+        if e is None:
             return None
-        return val  # MIN/MAX of one row is the row's value
-    if re.fullmatch(r"CLASSIFIER\s*\(\s*\)", t, re.IGNORECASE):
-        last = elem_info[-1]
-        return f"'{last[1]}'" if last[0] == "single" else last[2]
-    return None  # measure outside the tier's subset → NFA path
+        sels.append(f"{e} AS `{name}`")
+    return sels
 
 
 def _within_bound(df, spec, lead, k):
@@ -2109,9 +2178,7 @@ def _within_bound(df, spec, lead, k):
     )
 
 
-def _fixed_len_sql(
-    df: DataFrame, spec: MatchSpec, output_schema: str
-) -> "DataFrame | None":
+def _fixed_len_sql(df: DataFrame, spec: MatchSpec) -> "DataFrame | None":
     """JVM fast tier A: compile a FIXED-LENGTH pattern under AFTER
     MATCH SKIP TO NEXT ROW to pure window functions — no Python
     anywhere in the plan. Eligible shapes (None for everything else —
@@ -2147,56 +2214,26 @@ def _fixed_len_sql(
         or isinstance(spec.pattern, PatternAST)
     ):
         return None
-    win, _part_sql, lead, cols, eq_safe, col_types = _tier_window(
+    _win, _part_sql, lead, cols, eq_safe, col_types = _tier_window(
         df, spec
     )
-    te = _tier_elements(
-        spec.pattern, spec.raw_define, lead, cols, eq_safe
-    )
-    if te is None:
+    forms = _tier_forms(spec, cols)
+    if forms is None:
         return None
-    elem_info, conds = te
-    k = len(elem_info)
-    if k == 0:
+    st = _start_row(df, spec, spec.pattern, lead, cols, eq_safe)
+    if st is None:
         return None
-    conds = list(conds)
-    if k > 1 and not _last_elem_pins_row(elem_info):
-        # boundary guard: a LEAD over a CONSTANT distinguishes "past
-        # the partition end" from "ORDER BY value is NULL" — rows
-        # with NULL order keys sort last but still exist and must
-        # stay matchable (ADVICE r9 finding 3). Elided when the last
-        # element's own condition null-rejects a missing row
-        # (_last_elem_pins_row) — one fewer window expression
-        conds.append(f"{lead(None, k - 1)} IS NOT NULL")
-    wb = _within_bound(df, spec, lead, k)
-    if wb is None:
+    elem_info, conds = st
+    sels = _lead_sels(spec, forms, elem_info, lead, col_types)
+    if sels is None:
         return None
-    if wb:
-        conds.append(wb)
-    occ = _var_occurrences(elem_info)
-    sels: list[str] = [f"`{c}`" for c in spec.partition_by]
-    for raw_m, name in spec.raw_measures:
-        e = _tier_measure(
-            raw_m, occ, elem_info, lead, k, spec.order_by[0],
-            col_types, cols,
-        )
-        if e is None:
-            return None
-        sels.append(f"{e} AS `{name}`")
     pred = " AND ".join(conds) if conds else "TRUE"
-    flag = "__match_9f3a__"  # fixed + unlikely; input collision guarded
-    if flag in cols:
-        return None
-    base = _lead_prelude(df, lead, cols)
-    if base is None:
-        return None
-    return base.selectExpr(
-        *sels, f"({pred}) AS `{flag}`"
-    ).where(f"`{flag}`").drop(flag)
+    # a fixed, unlikely flag name; an input column of that name → NFA
+    return _matched(df, lead, cols, sels, f"({pred})", "__match_9f3a__")
 
 
 def _fixed_len_all_rows_sql(
-    df: DataFrame, spec: MatchSpec, output_schema: str
+    df: DataFrame, spec: MatchSpec
 ) -> "DataFrame | None":
     """JVM fast tier A-all (round 11): FIXED-LENGTH single-variable
     patterns under AFTER MATCH SKIP TO NEXT ROW with ALL ROWS PER
@@ -2218,107 +2255,51 @@ def _fixed_len_all_rows_sql(
         or isinstance(spec.pattern, PatternAST)
     ):
         return None
-    win, _part_sql, lead, cols, eq_safe, col_types = _tier_window(
+    _win, _part_sql, lead, cols, eq_safe, col_types = _tier_window(
         df, spec
     )
-    te = _tier_elements(
-        spec.pattern, spec.raw_define, lead, cols, eq_safe
-    )
-    if te is None:
+    forms = _tier_forms(spec, cols)
+    if forms is None:
         return None
-    elem_info, conds = te
-    k = len(elem_info)
-    if k == 0 or any(e[0] != "single" for e in elem_info):
+    st = _start_row(df, spec, spec.pattern, lead, cols, eq_safe)
+    if st is None:
         return None
-    var_at = [e[1] for e in elem_info]
-    conds = list(conds)
-    if k > 1 and not _last_elem_pins_row(elem_info):
-        conds.append(f"{lead(None, k - 1)} IS NOT NULL")
-    wb = _within_bound(df, spec, lead, k)
-    if wb is None:
+    elem_info, conds = st
+    if any(e[0] != "single" for e in elem_info):
         return None
-    if wb:
-        conds.append(wb)
     if "__mr_ok__" in cols or "__mr_arr__" in cols:
         return None
+    k = len(elem_info)
+    var_at = [e[1] for e in elem_info]
     order0 = spec.order_by[0]
 
-    def null_of(col: str) -> str:
-        return f"CAST(NULL AS {col_types[col]})"
-
-    def measure_at(raw: str, name: str, o: int) -> "str | None":
+    def measure_at(form, o: int) -> "str | None":
         """RUNNING measure over the static prefix 0..o (FINAL names
         evaluate at o = k−1 — the caller substitutes)."""
-        t = raw.strip()
-        m = re.fullmatch(
-            r"(FIRST|LAST)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
-        )
-        bare = re.fullmatch(r"(\w+)\.(\w+)", t)
-        if m or bare:
-            if m:
-                fn, v, col = (
-                    m.group(1).upper(), m.group(2), m.group(3),
-                )
-            else:
-                fn, v, col = "LAST", bare.group(1), bare.group(2)
-            if col not in cols:
+        fn, v, col = form
+        if fn == "CLASSIFIER":
+            return f"'{var_at[o]}'"
+        if fn == "MATCH_ROWTIME":
+            return lead(order0, o)
+        if fn == "COUNT":
+            if v is None:
+                return f"CAST({o + 1} AS BIGINT)"
+            if v not in var_at:
                 return None
-            offs = [j for j in range(o + 1) if var_at[j] == v]
-            if not offs:
-                return null_of(col) if v in var_at else None
-            j = offs[0] if fn == "FIRST" else offs[-1]
-            return lead(col, j)
-        if re.fullmatch(r"COUNT\s*\(\s*\*\s*\)", t, re.IGNORECASE):
-            return f"CAST({o + 1} AS BIGINT)"
-        m = re.fullmatch(
-            r"COUNT\s*\(\s*(\w+)\.\*\s*\)", t, re.IGNORECASE
-        )
-        if m:
-            if m.group(1) not in var_at:
-                return None
-            n = sum(
-                1 for j in range(o + 1) if var_at[j] == m.group(1)
-            )
-            return f"CAST({n} AS BIGINT)"
-        m = re.fullmatch(
-            r"(SUM|MIN|MAX|AVG)\s*\(\s*(\w+)\.(\w+)\s*\)",
-            t,
-            re.IGNORECASE,
-        )
-        if m:
-            fn, v, col = m.group(1).upper(), m.group(2), m.group(3)
+            return f"CAST({var_at[: o + 1].count(v)} AS BIGINT)"
+        if v not in var_at:
+            return None
+        if fn not in ("FIRST", "LAST") and var_at.count(v) != 1:
             # single-occurrence variables only: a multi-row RUNNING
             # aggregate would need NULL-skipping n-ary arithmetic
-            if col not in cols or var_at.count(v) != 1:
-                return None
-            offs = [j for j in range(o + 1) if var_at[j] == v]
-            ct = col_types.get(col)
-            if fn in ("SUM", "AVG") and ct not in (
-                "int", "smallint", "tinyint", "bigint", "double",
-                "float",
-            ):
-                return None
-            out_t = {
-                "SUM": "bigint"
-                if ct in ("int", "smallint", "tinyint")
-                else ct,
-                "AVG": "double",
-            }.get(fn, ct)
-            if not offs:
-                return f"CAST(NULL AS {out_t})"
-            val = lead(col, offs[0])
-            if fn == "SUM" and ct in ("int", "smallint", "tinyint"):
-                return f"CAST({val} AS BIGINT)"
-            if fn == "AVG":
-                return f"CAST({val} AS DOUBLE)"
-            return val
-        if re.fullmatch(r"CLASSIFIER\s*\(\s*\)", t, re.IGNORECASE):
-            return f"'{var_at[o]}'"
-        if re.fullmatch(
-            r"MATCH_ROWTIME\s*\(\s*\)", t, re.IGNORECASE
-        ):
-            return lead(order0, o)
-        return None
+            return None
+        offs = [j for j in range(o + 1) if var_at[j] == v]
+        val = (
+            lead(col, offs[0] if fn == "FIRST" else offs[-1])
+            if offs
+            else None
+        )
+        return _one_row_value(fn, val, col_types[col])
 
     in_cols = list(df.columns)
     structs: list[str] = []
@@ -2326,9 +2307,10 @@ def _fixed_len_all_rows_sql(
         fields: list[str] = []
         for c in in_cols:
             fields.append(f"'{c}', {lead(c, o)}")
-        for raw_m, name in spec.raw_measures:
-            eo = k - 1 if name in spec.final_measures else o
-            e = measure_at(raw_m, name, eo)
+        for form, name in forms:
+            e = measure_at(
+                form, k - 1 if name in spec.final_measures else o
+            )
             if e is None:
                 return None
             fields.append(f"'{name}', {e}")
@@ -2445,42 +2427,7 @@ def _enumerate_expansions(pattern):
     return exps
 
 
-def _tier_null_measure(raw, occ, col_types, cols, pat_vars):
-    """Typed NULL / zero-count for a measure over a variable the
-    SELECTED expansion never binds (the scalar evaluator's None for
-    an unmatched variable — q53's off-branch measures). Only fires
-    when the variable IS a pattern variable of some other expansion
-    but absent from this one's ``occ``; an unsupported measure FORM
-    still returns None so the caller falls back to the NFA."""
-    t = raw.strip()
-    m = re.fullmatch(
-        r"(FIRST|LAST|MIN|MAX)\s*\(\s*(\w+)\.(\w+)\s*\)",
-        t, re.IGNORECASE,
-    ) or re.fullmatch(r"()(\w+)\.(\w+)", t)
-    if m:
-        v, col = m.group(2), m.group(3)
-        if v in occ or v not in pat_vars or col not in cols:
-            return None
-        return f"CAST(NULL AS {col_types[col]})"
-    m = re.fullmatch(
-        r"(SUM|AVG)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
-    )
-    if m:
-        fn, v, col = m.group(1).upper(), m.group(2), m.group(3)
-        if v in occ or v not in pat_vars or col not in cols:
-            return None
-        ct = col_types.get(col)
-        if fn == "AVG":
-            return "CAST(NULL AS DOUBLE)"
-        if ct in ("int", "smallint", "tinyint"):
-            return "CAST(NULL AS BIGINT)"
-        return f"CAST(NULL AS {ct})"
-    return None
-
-
-def _multi_len_sql(
-    df: DataFrame, spec: MatchSpec, output_schema: str
-) -> "DataFrame | None":
+def _multi_len_sql(df: DataFrame, spec: MatchSpec) -> "DataFrame | None":
     """JVM fast tier A′: a BOUNDED-length pattern under AFTER MATCH
     SKIP TO NEXT ROW — quantified elements, nested groups, sequence
     alternation, PERMUTE — compiled by enumerating the pattern's
@@ -2515,60 +2462,36 @@ def _multi_len_sql(
     exps = _enumerate_expansions(spec.pattern)
     if exps is None:
         return None
-    win, _part_sql, lead, cols, eq_safe, col_types = _tier_window(
+    _win, _part_sql, lead, cols, eq_safe, col_types = _tier_window(
         df, spec
     )
+    forms = _tier_forms(spec, cols)
+    if forms is None:
+        return None
     per: list[tuple] = []
     for exp in exps:
         flat = [((v,), "1") for v in exp]
-        te = _tier_elements(flat, spec.raw_define, lead, cols, eq_safe)
-        if te is None:
+        st = _start_row(df, spec, flat, lead, cols, eq_safe)
+        if st is None:
             return None
-        elem_info, conds = te
-        k = len(elem_info)
-        conds = list(conds)
-        if k > 1 and not _last_elem_pins_row(elem_info):
-            conds.append(f"{lead(None, k - 1)} IS NOT NULL")
-        wb = _within_bound(df, spec, lead, k)
-        if wb is None:
-            return None
-        if wb:
-            conds.append(wb)
+        elem_info, conds = st
         cond = " AND ".join(conds) if conds else "TRUE"
-        per.append((elem_info, k, cond))
+        per.append((elem_info, _var_occurrences(elem_info), cond))
     pat_vars = {v for exp in exps for v in exp}
     sels: list[str] = [f"`{c}`" for c in spec.partition_by]
-    for raw_m, name in spec.raw_measures:
-        branches: list[tuple[str, str]] = []
-        for elem_info, k, cond in per:
-            occ = _var_occurrences(elem_info)
-            e = _tier_measure(
-                raw_m, occ, elem_info, lead, k, spec.order_by[0],
-                col_types, cols,
+    for form, name in forms:
+        whens: list[str] = []
+        for elem_info, occ, cond in per:
+            e = _lead_measure(
+                form, occ, elem_info, lead, spec.order_by[0], col_types,
+                pat_vars,
             )
             if e is None:
-                e = _tier_null_measure(
-                    raw_m, occ, col_types, cols, pat_vars
-                )
-            if e is None:
                 return None
-            branches.append((cond, e))
-        case = (
-            "(CASE "
-            + " ".join(f"WHEN {c} THEN {e}" for c, e in branches)
-            + " END)"
-        )
-        sels.append(f"{case} AS `{name}`")
-    flag = "__mr_exp__"
-    if flag in cols:
-        return None
+            whens.append(f"WHEN {cond} THEN {e}")
+        sels.append(f"(CASE {' '.join(whens)} END) AS `{name}`")
     any_cond = "(" + " OR ".join(f"({c})" for _, _, c in per) + ")"
-    base = _lead_prelude(df, lead, cols)
-    if base is None:
-        return None
-    return base.selectExpr(
-        *sels, f"{any_cond} AS `{flag}`"
-    ).where(f"`{flag}`").drop(flag)
+    return _matched(df, lead, cols, sels, any_cond, "__mr_exp__")
 
 
 #: auxiliary column names used by tiers B/C; input collision → NFA
@@ -2580,15 +2503,6 @@ _TIER_AUX = ("__mr_rn__", "__mr_grp__", "__mr_pos__", "__mr_ok__",
 _BAND_TERM = re.compile(
     r"^\s*(\w+)\.(\w+)\s*(<=|>=|<|>)\s*(-?\d+(?:\.\d+)?)\s*$"
 )
-
-#: numeric ORDER-comparable input types the band prover admits; the
-#: cls CASE adds an isnan() guard for double/float so Spark's
-#: NaN-is-largest ordering can never classify a row the scalar
-#: matcher's NaN-comparisons-are-False left unclassified
-_BAND_NUM_TYPES = (
-    "int", "bigint", "smallint", "tinyint", "double", "float",
-)
-
 
 def _disjoint_bands(raw_define, vars_, col_types):
     """Prove the PERMUTE variables' defines are pairwise-DISJOINT
@@ -2615,7 +2529,7 @@ def _disjoint_bands(raw_define, vars_, col_types):
                 return None
             c, op, lit = m.group(2), m.group(3), float(m.group(4))
             if col is None:
-                if col_types.get(c) not in _BAND_NUM_TYPES:
+                if col_types.get(c) not in _NUM_TYPES:
                     return None
                 col = c
             elif c != col:
@@ -2654,7 +2568,7 @@ def _disjoint_bands(raw_define, vars_, col_types):
 
 
 def _permute_bands_sql(
-    df: DataFrame, spec: MatchSpec, output_schema: str
+    df: DataFrame, spec: MatchSpec
 ) -> "DataFrame | None":
     """JVM fast tier P: ``PATTERN (PERMUTE(V0, .., Vk-1))`` of simple
     atoms under AFTER MATCH SKIP TO NEXT ROW where every define is a
@@ -2693,19 +2607,16 @@ def _permute_bands_sql(
     k = len(vars_)
     if k < 2 or k > 16:  # 1<<k must stay in INT; width 1 is tier A
         return None
-    cols = set(df.columns)
-    if any(a in cols for a in _TIER_AUX):
+    _win, _part_sql, lead, cols, eq_safe, col_types = _tier_window(
+        df, spec
+    )
+    forms = _tier_forms(spec, cols)
+    if forms is None or any(a in cols for a in _TIER_AUX):
         return None
-    col_types = {
-        f.name: f.dataType.simpleString() for f in df.schema.fields
-    }
     bands = _disjoint_bands(spec.raw_define, vars_, col_types)
     if bands is None:
         return None
     band_col, ivals = bands
-    win, _part_sql, lead, cols, eq_safe, col_types2 = _tier_window(
-        df, spec
-    )
     # per-row class on the BASE relation (one projection, LEADed k−1
     # times); NaN guard: Spark orders NaN above every double, the
     # scalar matcher's NaN comparisons are all False → unclassified
@@ -2722,7 +2633,7 @@ def _permute_bands_sql(
     cls = "(CASE " + " ".join(whens) + " END)"
     aux = "__mr_cls__"
     base = df.selectExpr("*", f"{cls} AS `{aux}`")
-    win2, _p2, lead2, _c2, _e2, _t2 = _tier_window(base, spec)
+    _w2, _p2, lead2, _c2, _e2, _t2 = _tier_window(base, spec)
     c_at = [lead2(aux, i) for i in range(k)]
     mask = " + ".join(f"SHIFTLEFT(1, {c})" for c in c_at)
     conds = [f"({mask}) = {(1 << k) - 1}"]
@@ -2745,79 +2656,44 @@ def _permute_bands_sql(
 
     vidx = {v: j for j, v in enumerate(vars_)}
     sels = [f"`{c}`" for c in spec.partition_by]
-    for raw_m, name in spec.raw_measures:
+    for form, name in forms:
         e = _permute_measure(
-            raw_m, vidx, var_row, c_at, lead2, k, spec.order_by[0],
-            col_types, cols,
+            form, vidx, var_row, c_at, lead2, spec.order_by[0], col_types
         )
         if e is None:
             return None
         sels.append(f"{e} AS `{name}`")
-    flag = "__mr_ok__"
-    base2 = _lead_prelude(base, lead2, set(base.columns))
-    if base2 is None:
-        return None
-    out = base2.selectExpr(
-        *sels, f"({' AND '.join(conds)}) AS `{flag}`"
-    ).where(f"`{flag}`").drop(flag)
-    return out
+    return _matched(
+        base, lead2, set(base.columns), sels,
+        f"({' AND '.join(conds)})", "__mr_ok__",
+    )
 
 
-def _permute_measure(
-    raw, vidx, var_row, c_at, lead, k, order0, col_types, cols
-):
-    """One raw MEASURE → SQL over the permute tier's class columns,
-    or None when outside the subset. Every variable binds exactly one
-    row, so FIRST/LAST/bare/MIN/MAX collapse to the bound row's value
-    (SUM widens ints to BIGINT, AVG casts DOUBLE — mirroring
-    _tier_measure's one-offset aggregate rules)."""
-    t = raw.strip()
-    m = re.fullmatch(
-        r"(?:FIRST|LAST)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
-    ) or re.fullmatch(r"(\w+)\.(\w+)", t)
-    if m:
-        v, col = m.group(1), m.group(2)
-        if v in vidx and col in cols:
-            return var_row(vidx[v], col)
-        return None
-    if re.fullmatch(r"CLASSIFIER\s*\(\s*\)", t, re.IGNORECASE):
-        inv = {j: v for v, j in vidx.items()}
+def _permute_measure(form, vidx, var_row, c_at, lead, order0, col_types):
+    """One parsed MEASURE over the permute tier's class columns, or
+    None when outside the subset. Every variable binds exactly one
+    row, so each value form reads the row whose class is the
+    variable's index."""
+    fn, v, col = form
+    k = len(c_at)
+    if fn == "CLASSIFIER":
         return (
             "(CASE "
             + " ".join(
-                f"WHEN {c_at[k - 1]} = {j} THEN '{inv[j]}'"
-                for j in range(k)
+                f"WHEN {c_at[k - 1]} = {j} THEN '{var}'"
+                for var, j in vidx.items()
             )
             + " END)"
         )
-    if re.fullmatch(r"MATCH_ROWTIME\s*\(\s*\)", t, re.IGNORECASE):
+    if fn == "MATCH_ROWTIME":
         return lead(order0, k - 1)
-    if re.fullmatch(r"COUNT\s*\(\s*\*\s*\)", t, re.IGNORECASE):
-        return f"CAST({k} AS BIGINT)"
-    m = re.fullmatch(r"COUNT\s*\(\s*(\w+)\.\*\s*\)", t, re.IGNORECASE)
-    if m and m.group(1) in vidx:
-        return "CAST(1 AS BIGINT)"
-    m = re.fullmatch(
-        r"(SUM|MIN|MAX|AVG)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
-    )
-    if m:
-        fn, v, col = m.group(1).upper(), m.group(2), m.group(3)
-        if v not in vidx or col not in cols:
-            return None
-        val = var_row(vidx[v], col)
-        ct = col_types.get(col)
-        if fn == "SUM":
-            if ct in ("int", "smallint", "tinyint"):
-                return f"CAST({val} AS BIGINT)"
-            if ct in ("bigint", "double", "float"):
-                return val
-            return None
-        if fn == "AVG":
-            if ct in _BAND_NUM_TYPES:
-                return f"CAST({val} AS DOUBLE)"
-            return None
-        return val
-    return None
+    if fn == "COUNT":
+        if v is None:
+            return f"CAST({k} AS BIGINT)"
+        return "CAST(1 AS BIGINT)" if v in vidx else None
+    if v not in vidx:
+        return None
+    return _one_row_value(fn, var_row(vidx[v], col), col_types[col])
 
 
 def _chain_expand(pattern, raw_define):
@@ -2860,7 +2736,7 @@ def _chain_expand(pattern, raw_define):
 
 
 def _fixed_len_past_sql(
-    df: DataFrame, spec: MatchSpec, output_schema: str
+    df: DataFrame, spec: MatchSpec
 ) -> "DataFrame | None":
     """JVM fast tier B: FIXED-LENGTH pattern (k ≤ 2) under AFTER
     MATCH SKIP PAST LAST ROW. The start-row predicate is the same
@@ -2926,16 +2802,16 @@ def _fixed_len_past_sql(
     win, part_sql, lead, cols, eq_safe, col_types = _tier_window(
         df, spec
     )
-    te = _tier_elements(
-        pattern, spec.raw_define, lead, cols, eq_safe
+    forms = _tier_forms(spec, cols)
+    if forms is None:
+        return None
+    st = _start_row(
+        df, spec, pattern, lead, cols, eq_safe, elide_probe=False
     )
-    if te is None:
+    if st is None:
         return None
-    elem_info, conds = te
+    elem_info, conds = st
     k = len(elem_info)
-    if k == 0:
-        return None
-    occ0 = _var_occurrences(elem_info)
     if spec.skip_mode == "past_last":
         stride = k
         if k > 2 and chain is None:
@@ -2944,36 +2820,18 @@ def _fixed_len_past_sql(
         # stride = the skip variable's first/last UNCONDITIONAL
         # offset; a guarded occurrence (alternation branch) makes the
         # resume point depend on which branch matched — NFA path.
-        occs = occ0.get(spec.skip_var)
+        occs = _var_occurrences(elem_info).get(spec.skip_var)
         if not occs or any(g is not None for _, g in occs):
             return None
         offs = [o for o, _ in occs]
         stride = min(offs) if spec.skip_mode == "to_first" else max(offs)
         if stride < 1 or stride > 2:
             return None
-    conds = list(conds)
-    if k > 1:
-        conds.append(f"{lead(None, k - 1)} IS NOT NULL")
-    wb = _within_bound(df, spec, lead, k)
-    if wb is None:
-        return None
-    if wb:
-        conds.append(wb)
     if not conds:
         return None  # all-always-true → whole-partition stride; NFA
-    occ = occ0
-    names: list[str] = []
-    sels: list[str] = [f"`{c}`" for c in spec.partition_by]
-    for raw_m, name in spec.raw_measures:
-        e = _tier_measure(
-            raw_m, occ, elem_info, lead, k, spec.order_by[0],
-            col_types, cols,
-        )
-        if e is None:
-            return None
-        sels.append(f"{e} AS `{name}`")
-        names.append(name)
-    if any(a in cols or a in names for a in _TIER_AUX):
+    sels = _lead_sels(spec, forms, elem_info, lead, col_types)
+    names = [n for _, n in forms]
+    if sels is None or any(a in cols or a in names for a in _TIER_AUX):
         return None
     out_cols = [f"`{c}`" for c in spec.partition_by] + [
         f"`{n}`" for n in names
@@ -3022,121 +2880,152 @@ def _fixed_len_past_sql(
     ).selectExpr(*out_cols)
 
 
-def _trailing_agg_measure(
-    raw, s_var, b_var, order0, col_types, cols, min_n
-):
-    """One raw MEASURE → a SQL aggregate over one island group (tier
-    C), or None. The island's min-__mr_rn__ row is the prefix
+def _islands(df, spec, taken):
+    """Tier C's island decomposition for ``PATTERN (S B+)`` /
+    ``(S B*)`` under AFTER MATCH SKIP PAST LAST ROW, S define-free,
+    B's define row-local and no WITHIN (see :func:`_trailing_plus_sql`
+    for why exactly these): ``df`` plus ``__mr_rn__`` (the row number
+    in the full ordering) and ``__mr_head__`` (the rn of the row's
+    island head). Returns (frame, part_sql, col_types, s_var, b_var,
+    min_n) — ``min_n`` is the smallest island that is a match — or
+    None for any other spec and when an input column is named in
+    ``taken``. Shared with :func:`fb_trailing_plus_split`, whose
+    emission frontier is the last island head."""
+    if (
+        spec.skip_mode != "past_last"
+        or isinstance(spec.pattern, PatternAST)
+        or spec.within_seconds is not None
+        or len(spec.pattern) != 2
+    ):
+        return None
+    (a0, q0), (a1, q1) = spec.pattern
+    if len(a0) != 1 or len(a1) != 1 or q0 != "1" or q1 not in ("+", "*"):
+        return None
+    s_var, b_var = a0[0], a1[0]
+    if spec.raw_define.get(s_var) is not None:
+        return None
+    src = spec.raw_define.get(b_var)
+    if src is None:
+        return None  # always-true B consumes whole partitions — NFA
+    win, part_sql, lead, cols, eq_safe, col_types = _tier_window(
+        df, spec
+    )
+    cond = _tier_condition(src, b_var, 0, cols, eq_safe, lead)
+    if cond is None or any(a in cols for a in taken):
+        return None
+    # rn joins the prelude's Window op; a PREV-navigating define
+    # (q45's rising streak) becomes a plain prelude column instead of
+    # a LAG nested inside the running MAX below
+    lead.exprs["__mr_rn__"] = f"ROW_NUMBER() OVER {win}"
+    s1 = _lead_prelude(df, lead, cols)
+    if s1 is None:
+        return None
+    # running island head: the latest row whose define is NOT true
+    # (CASE falls through on both FALSE and NULL — LAG at the
+    # partition head, NULL operands — exactly the scalar evaluator's
+    # no-match outcomes); COALESCE covers a define-true run at the
+    # very head of the partition (possible only for PREV-free
+    # defines), whose head is row 1
+    s2 = s1.selectExpr(
+        "*",
+        f"COALESCE(MAX(CASE WHEN {cond} THEN CAST(NULL AS BIGINT)"
+        f" ELSE `__mr_rn__` END) OVER (PARTITION BY {part_sql}"
+        f" ORDER BY `__mr_rn__` ROWS BETWEEN UNBOUNDED PRECEDING AND"
+        f" CURRENT ROW), CAST(1 AS BIGINT)) AS `__mr_head__`",
+    )
+    return s2, part_sql, col_types, s_var, b_var, (2 if q1 == "+" else 1)
+
+
+def _trailing_agg_measure(form, s_var, b_var, order0, col_types, min_n):
+    """One parsed MEASURE → a SQL aggregate over one island group
+    (tier C), or None. The island's min-__mr_rn__ row is the prefix
     variable's row (the head); every later row belongs to the
     trailing quantified variable."""
-    t = raw.strip()
+    fn, v, col = form
     b_filter = "FILTER (WHERE `__mr_rn__` > `__mr_head__`)"
-
-    def head_val(col):
-        return f"min_by(`{col}`, `__mr_rn__`)"
-
-    m = re.fullmatch(
-        r"(FIRST|LAST)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
-    )
-    bare = re.fullmatch(r"(\w+)\.(\w+)", t)
-    if m or bare:
-        if m:
-            fn, v, col = m.group(1).upper(), m.group(2), m.group(3)
-        else:
-            fn, v, col = "LAST", bare.group(1), bare.group(2)
-        if col not in cols:
-            return None
+    if fn == "COUNT":
+        if v is None:
+            return "count(*)"
         if v == s_var:
-            return head_val(col)
-        if v != b_var:
-            return None
-        agg = "min_by" if fn == "FIRST" else "max_by"
-        return f"{agg}(`{col}`, `__mr_rn__`) {b_filter}"
-    if re.fullmatch(r"COUNT\s*\(\s*\*\s*\)", t, re.IGNORECASE):
-        return "count(*)"
-    m = re.fullmatch(r"COUNT\s*\(\s*(\w+)\.\*\s*\)", t, re.IGNORECASE)
-    if m:
-        if m.group(1) == s_var:
             return "CAST(1 AS BIGINT)"
-        if m.group(1) == b_var:
+        if v == b_var:
             return "(count(*) - CAST(1 AS BIGINT))"
         return None
-    m = re.fullmatch(
-        r"(SUM|MIN|MAX|AVG)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
-    )
-    if m:
-        fn, v, col = m.group(1).upper(), m.group(2), m.group(3)
-        if col not in cols:
-            return None
-        ct = col_types.get(col)
-        num_ok = ct in (
-            "int", "smallint", "tinyint", "bigint", "double", "float",
-        )
-        if v == s_var:  # one-row aggregate = the head row's value
-            val = head_val(col)
-            if fn == "SUM":
-                if ct in ("int", "smallint", "tinyint"):
-                    return f"CAST({val} AS BIGINT)"
-                return val if num_ok else None
-            if fn == "AVG":
-                return f"CAST({val} AS DOUBLE)" if num_ok else None
-            return val
-        if v != b_var:
-            return None
-        if fn in ("SUM", "AVG") and not num_ok:
-            return None  # decimal widening diverges → NFA
-        return f"{fn.lower()}(`{col}`) {b_filter}"
-    if re.fullmatch(r"CLASSIFIER\s*\(\s*\)", t, re.IGNORECASE):
+    if fn == "CLASSIFIER":
         if min_n >= 2:
             return f"'{b_var}'"
         return (
             f"(CASE WHEN count(*) >= 2 THEN '{b_var}'"
             f" ELSE '{s_var}' END)"
         )
-    if re.fullmatch(r"MATCH_ROWTIME\s*\(\s*\)", t, re.IGNORECASE):
+    if fn == "MATCH_ROWTIME":
         return f"max_by(`{order0}`, `__mr_rn__`)"
-    return None
+    if v == s_var:  # the head row
+        return _one_row_value(
+            fn, f"min_by(`{col}`, `__mr_rn__`)", col_types[col]
+        )
+    if v != b_var:
+        return None
+    if fn in ("FIRST", "LAST"):
+        agg = "min_by" if fn == "FIRST" else "max_by"
+        return f"{agg}(`{col}`, `__mr_rn__`) {b_filter}"
+    if fn in ("SUM", "AVG") and col_types[col] not in _NUM_TYPES:
+        return None  # decimal widening diverges → NFA
+    return f"{fn.lower()}(`{col}`) {b_filter}"
 
 
 def _trailing_allrows_measure(
-    raw, final, s_var, b_var, order0, col_types, cols, min_n,
-    wi, wi_full,
+    form, final, s_var, b_var, order0, col_types, min_n, wi, wi_full,
 ):
-    """One raw MEASURE → a per-ROW window expression over one island
-    (tier C, ALL ROWS PER MATCH), or None. RUNNING (the default) sees
-    the island rows up to the current one; ``final`` sees the whole
-    island. ``wi`` is the running per-island window (ORDER BY
-    __mr_rn__), ``wi_full`` the unbounded-frame variant. Exactness
-    notes: running double SUM/AVG accumulate in frame order — the
-    scalar evaluator's row order; NTH_VALUE/LAST_VALUE return NULL
-    outside the frame exactly where the scalar path returns None for
-    a variable with no rows yet."""
-    t = raw.strip()
+    """One parsed MEASURE → a per-ROW window expression over one
+    island (tier C, ALL ROWS PER MATCH), or None. RUNNING (the
+    default) sees the island rows up to the current one; ``final``
+    sees the whole island. ``wi`` is the running per-island window
+    (ORDER BY __mr_rn__), ``wi_full`` the unbounded-frame variant.
+    Exactness notes: running double SUM/AVG accumulate in frame order
+    — the scalar evaluator's row order; NTH_VALUE/LAST_VALUE return
+    NULL outside the frame exactly where the scalar path returns None
+    for a variable with no rows yet."""
+    fn, v, col = form
     pos = f"ROW_NUMBER() OVER {wi}"
     n_full = f"COUNT(1) OVER {wi_full}"
-    b_case = f"(CASE WHEN `__mr_rn__` > `__mr_head__` THEN {{c}} END)"
-
-    m = re.fullmatch(
-        r"(FIRST|LAST)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
-    )
-    bare = re.fullmatch(r"(\w+)\.(\w+)", t)
-    if m or bare:
-        if m:
-            fn, v, col = m.group(1).upper(), m.group(2), m.group(3)
-        else:
-            fn, v, col = "LAST", bare.group(1), bare.group(2)
-        if col not in cols:
-            return None
-        if v == s_var:  # the head row — available from pos 1 onward
-            return f"FIRST_VALUE(`{col}`) OVER {wi}"
-        if v != b_var:
-            return None
-        if fn == "FIRST":
-            w = wi_full if final else wi
+    if fn == "COUNT":
+        if v is None:
+            return f"CAST({n_full if final else pos} AS BIGINT)"
+        if v == s_var:
+            return "CAST(1 AS BIGINT)"
+        if v == b_var:
+            return f"CAST(({n_full if final else pos}) - 1 AS BIGINT)"
+        return None
+    if fn == "CLASSIFIER":
+        if not final:
             return (
-                f"(CASE WHEN {n_full if final else pos} >= 2"
-                f" THEN NTH_VALUE(`{col}`, 2) OVER {w} END)"
+                f"(CASE WHEN {pos} = 1 THEN '{s_var}'"
+                f" ELSE '{b_var}' END)"
             )
+        if min_n >= 2:
+            return f"'{b_var}'"
+        return (
+            f"(CASE WHEN {n_full} >= 2 THEN '{b_var}'"
+            f" ELSE '{s_var}' END)"
+        )
+    if fn == "MATCH_ROWTIME":
+        if final:
+            return f"LAST_VALUE(`{order0}`) OVER {wi_full}"
+        return f"`{order0}`"  # last row so far = the current row
+    if v == s_var:  # the head row — available from pos 1 onward
+        return _one_row_value(
+            fn, f"FIRST_VALUE(`{col}`) OVER {wi}", col_types[col]
+        )
+    if v != b_var:
+        return None
+    if fn == "FIRST":
+        w = wi_full if final else wi
+        return (
+            f"(CASE WHEN {n_full if final else pos} >= 2"
+            f" THEN NTH_VALUE(`{col}`, 2) OVER {w} END)"
+        )
+    if fn == "LAST":
         if final:
             return (
                 f"(CASE WHEN {n_full} >= 2"
@@ -3144,59 +3033,17 @@ def _trailing_allrows_measure(
             )
         # RUNNING LAST(B.col): NULL on the head row, else this row
         return f"(CASE WHEN {pos} > 1 THEN `{col}` END)"
-    if re.fullmatch(r"COUNT\s*\(\s*\*\s*\)", t, re.IGNORECASE):
-        return f"CAST({n_full if final else pos} AS BIGINT)"
-    m = re.fullmatch(r"COUNT\s*\(\s*(\w+)\.\*\s*\)", t, re.IGNORECASE)
-    if m:
-        if m.group(1) == s_var:
-            return "CAST(1 AS BIGINT)"
-        if m.group(1) == b_var:
-            return f"CAST(({n_full if final else pos}) - 1 AS BIGINT)"
-        return None
-    m = re.fullmatch(
-        r"(SUM|MIN|MAX|AVG)\s*\(\s*(\w+)\.(\w+)\s*\)", t, re.IGNORECASE
+    if fn in ("SUM", "AVG") and col_types[col] not in _NUM_TYPES:
+        return None  # decimal widening diverges → NFA
+    w = wi_full if final else wi
+    return (
+        f"{fn.lower()}((CASE WHEN `__mr_rn__` > `__mr_head__`"
+        f" THEN `{col}` END)) OVER {w}"
     )
-    if m:
-        fn, v, col = m.group(1).upper(), m.group(2), m.group(3)
-        if col not in cols:
-            return None
-        ct = col_types.get(col)
-        num_ok = ct in (
-            "int", "smallint", "tinyint", "bigint", "double", "float",
-        )
-        if v == s_var:
-            val = f"FIRST_VALUE(`{col}`) OVER {wi}"
-            if fn == "SUM":
-                if ct in ("int", "smallint", "tinyint"):
-                    return f"CAST({val} AS BIGINT)"
-                return val if num_ok else None
-            if fn == "AVG":
-                return f"CAST({val} AS DOUBLE)" if num_ok else None
-            return val
-        if v != b_var:
-            return None
-        if fn in ("SUM", "AVG") and not num_ok:
-            return None  # decimal widening diverges → NFA
-        w = wi_full if final else wi
-        return f"{fn.lower()}({b_case.format(c=f'`{col}`')}) OVER {w}"
-    if re.fullmatch(r"CLASSIFIER\s*\(\s*\)", t, re.IGNORECASE):
-        if final:
-            if min_n >= 2:
-                return f"'{b_var}'"
-            return (
-                f"(CASE WHEN {n_full} >= 2 THEN '{b_var}'"
-                f" ELSE '{s_var}' END)"
-            )
-        return f"(CASE WHEN {pos} = 1 THEN '{s_var}' ELSE '{b_var}' END)"
-    if re.fullmatch(r"MATCH_ROWTIME\s*\(\s*\)", t, re.IGNORECASE):
-        if final:
-            return f"LAST_VALUE(`{order0}`) OVER {wi_full}"
-        return f"`{order0}`"  # last row so far = the current row
-    return None
 
 
 def _trailing_plus_sql(
-    df: DataFrame, spec: MatchSpec, output_schema: str
+    df: DataFrame, spec: MatchSpec
 ) -> "DataFrame | None":
     """JVM fast tier C: ``PATTERN (S B+)`` / ``(S B*)`` under AFTER
     MATCH SKIP PAST LAST ROW with a define-free prefix variable and a
@@ -3227,29 +3074,13 @@ def _trailing_plus_sql(
     exchange, zero Python (the per-island windows cluster on a
     superset of the partition keys, so the hash partitioning is
     reused)."""
-    if (
-        spec.skip_mode != "past_last"
-        or isinstance(spec.pattern, PatternAST)
-        or spec.within_seconds is not None
-        or len(spec.pattern) != 2
-    ):
+    forms = _tier_forms(spec, set(df.columns))
+    if forms is None or any(n in _TIER_AUX for _, n in forms):
         return None
-    (a0, q0), (a1, q1) = spec.pattern
-    if len(a0) != 1 or len(a1) != 1 or q0 != "1" or q1 not in ("+", "*"):
+    isl = _islands(df, spec, _TIER_AUX)
+    if isl is None:
         return None
-    s_var, b_var = a0[0], a1[0]
-    if spec.raw_define.get(s_var) is not None:
-        return None
-    src = spec.raw_define.get(b_var)
-    if src is None:
-        return None  # always-true B consumes whole partitions — NFA
-    win, part_sql, lead, cols, eq_safe, col_types = _tier_window(
-        df, spec
-    )
-    cond = _tier_condition(src, b_var, 0, cols, eq_safe, lead)
-    if cond is None:
-        return None
-    min_n = 2 if q1 == "+" else 1
+    s2, part_sql, col_types, s_var, b_var, min_n = isl
     wi = (
         f"(PARTITION BY {part_sql}, `__mr_head__`"
         f" ORDER BY `__mr_rn__`)"
@@ -3259,56 +3090,31 @@ def _trailing_plus_sql(
         f" ORDER BY `__mr_rn__` ROWS BETWEEN UNBOUNDED PRECEDING"
         f" AND UNBOUNDED FOLLOWING)"
     )
+    order0 = spec.order_by[0]
     aggs: list[tuple[str, str]] = []
-    for raw_m, name in spec.raw_measures:
+    for form, name in forms:
         if spec.all_rows:
             e = _trailing_allrows_measure(
-                raw_m, name in spec.final_measures, s_var, b_var,
-                spec.order_by[0], col_types, cols, min_n, wi, wi_full,
+                form, name in spec.final_measures, s_var, b_var,
+                order0, col_types, min_n, wi, wi_full,
             )
         else:
             e = _trailing_agg_measure(
-                raw_m, s_var, b_var, spec.order_by[0], col_types,
-                cols, min_n,
+                form, s_var, b_var, order0, col_types, min_n
             )
         if e is None:
             return None
         aggs.append((e, name))
-    if any(
-        a in cols or any(n == a for _, n in aggs) for a in _TIER_AUX
-    ):
-        return None
     from pyspark.sql import functions as F
 
-    # rn joins the prelude's Window op; a PREV-navigating define
-    # (q45's rising streak) becomes a plain prelude column instead of
-    # a LAG nested inside s2's running MAX
-    lead.exprs["__mr_rn__"] = f"ROW_NUMBER() OVER {win}"
-    s1 = _lead_prelude(df, lead, cols)
-    if s1 is None:
-        return None
-    # running island head: the latest row whose define is NOT true
-    # (CASE falls through on both FALSE and NULL — LAG at the
-    # partition head, NULL operands — exactly the scalar evaluator's
-    # no-match outcomes); COALESCE covers a define-true run at the
-    # very head of the partition (possible only for PREV-free
-    # defines), whose head is row 1
-    s2 = s1.selectExpr(
-        "*",
-        f"COALESCE(MAX(CASE WHEN {cond} THEN CAST(NULL AS BIGINT)"
-        f" ELSE `__mr_rn__` END) OVER (PARTITION BY {part_sql}"
-        f" ORDER BY `__mr_rn__` ROWS BETWEEN UNBOUNDED PRECEDING AND"
-        f" CURRENT ROW), CAST(1 AS BIGINT)) AS `__mr_head__`",
-    )
     if spec.all_rows:
         s3 = s2.selectExpr(
             "*",
             f"COUNT(1) OVER {wi_full} AS `__mr_n__`",
             *[f"{e} AS `{n}`" for e, n in aggs],
         )
-        base = [c for c in df.columns]
         return s3.where(F.col("__mr_n__") >= min_n).select(
-            *base, *[n for _, n in aggs]
+            *df.columns, *[n for _, n in aggs]
         )
     grouped = s2.groupBy(
         *[F.col(c) for c in spec.partition_by], F.col("__mr_head__")
@@ -3338,6 +3144,29 @@ def _tier_schema_ok(result: DataFrame, output_schema: str) -> bool:
     ]
 
 
+#: constant grouping key of a GLOBAL pattern (no PARTITION BY)
+_GK = "__mr_gk__"
+
+
+def _with_global_key(df, spec):
+    """(keyed frame, keyed spec) for a pattern without PARTITION BY:
+    Flink runs such a pattern at parallelism 1, here one group of the
+    constant column ``_GK``. Raises on an input column of that name."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    if _GK in df.columns:
+        raise ValueError(
+            f"MATCH_RECOGNIZE: input column {_GK!r} collides with"
+            " the global-pattern grouping key"
+        )
+    return (
+        df.withColumn(_GK, F.lit(0)),
+        dataclasses.replace(spec, partition_by=[_GK]),
+    )
+
+
 def match_recognize(
     df: DataFrame, spec: MatchSpec, output_schema: str
 ) -> DataFrame:
@@ -3355,13 +3184,22 @@ def match_recognize(
 
     Reference semantics: Flink 1.13 MATCH_RECOGNIZE
     (docs/queries/match_recognize; reference pins Flink 1.13 in
-    pom.xml:41). Row-local shapes take a pure-JVM window tier first:
-    fixed-length SKIP TO NEXT ROW (_fixed_len_sql), fixed-length
-    SKIP PAST LAST ROW / SKIP TO FIRST/LAST <var> with stride ≤ 2
-    (_fixed_len_past_sql), and the trailing-quantifier Ticker shape
-    (_trailing_plus_sql); a tier result whose
-    schema deviates from the NFA's falls back rather than shipping a
-    differently-typed answer.
+    pom.xml:41). Row-local shapes take a pure-JVM window tier first,
+    tried in this order:
+
+    - A, fixed-length SKIP TO NEXT ROW (_fixed_len_sql);
+    - A-all, the same under ALL ROWS PER MATCH
+      (_fixed_len_all_rows_sql);
+    - A′, bounded-length SKIP TO NEXT ROW through its fixed-length
+      expansions (_multi_len_sql);
+    - P, PERMUTE of disjoint numeric bands (_permute_bands_sql);
+    - B, fixed-length SKIP PAST LAST ROW / SKIP TO FIRST/LAST <var>
+      with stride ≤ 2 or the HEAD TAIL{m,m} chain
+      (_fixed_len_past_sql);
+    - C, the trailing-quantifier Ticker shape (_trailing_plus_sql).
+
+    A tier result whose schema deviates from the NFA's falls back
+    rather than shipping a differently-typed answer.
 
     A GLOBAL pattern (no PARTITION BY — Flink 1.13 allows it) routes
     through a constant grouping key: one group, which is exactly
@@ -3369,27 +3207,16 @@ def match_recognize(
     The caveat is inherent to the semantics, not this implementation
     — a totally ordered global match cannot parallelize."""
     if not spec.partition_by:
-        import dataclasses
-
-        from pyspark.sql import functions as F
-
-        gk = "__mr_gk__"
-        if gk in df.columns:
-            raise ValueError(
-                f"MATCH_RECOGNIZE: input column {gk!r} collides with"
-                " the global-pattern grouping key"
-            )
-        keyed = dataclasses.replace(spec, partition_by=[gk])
-        kdf = df.withColumn(gk, F.lit(0))
+        kdf, keyed = _with_global_key(df, spec)
         out = match_recognize(
             kdf, keyed, infer_output_schema(keyed, kdf)
         )
-        return out.drop(gk)
+        return out.drop(_GK)
     for tier in (
         _fixed_len_sql, _fixed_len_all_rows_sql, _multi_len_sql,
         _permute_bands_sql, _fixed_len_past_sql, _trailing_plus_sql,
     ):
-        fast = tier(df, spec, output_schema)
+        fast = tier(df, spec)
         if fast is not None and _tier_schema_ok(fast, output_schema):
             return fast
     _reject_wide_permute(spec)  # the NFA route is factorial in width
@@ -3466,38 +3293,27 @@ def infer_output_schema(spec: MatchSpec, df: DataFrame) -> str:
         )
     parts = [f"{c} {src[c]}" for c in base]
     for raw, name in spec.raw_measures:
-        if re.fullmatch(
-            r"CLASSIFIER\s*\(\s*\)", raw.strip(), re.IGNORECASE
-        ):
-            parts.append(f"{name} string")
-            continue
-        if re.fullmatch(
-            r"MATCH_ROWTIME\s*\(\s*\)", raw.strip(), re.IGNORECASE
-        ):
-            # the event-time attribute's own type
-            parts.append(f"{name} {src[spec.order_by[0]]}")
-            continue
-        bare = re.fullmatch(r"(\w+)\.(\w+)", raw.strip())
-        if bare:  # bare V.col (= LAST(V.col)) keeps the column type
-            parts.append(f"{name} {src[bare.group(2)]}")
-            continue
-        m = re.match(
-            rf"{_FUN}\s*\(\s*(?:(\w+)\.)?(\w+|\*)", raw, re.IGNORECASE
-        )
-        if not m:
-            raise ValueError(
-                f"MATCH_RECOGNIZE: cannot infer type of {raw!r}"
+        form = _measure_form(raw)
+        if form is None:
+            # outside the tier grammar (say LAST(A.v) - FIRST(B.v)):
+            # the NFA evaluates it, typed by its first call's column
+            m = re.match(
+                rf"{_FUN}\s*\(\s*(?:(\w+)\.)?(\w+|\*)", raw, re.IGNORECASE
             )
-        fn = m.group(1).upper()
-        col = m.group(3)
-        if fn == "COUNT":
-            t = "bigint"
-        elif fn == "AVG":
-            t = "double"
-        else:
-            t = src[col]
-            if fn == "SUM" and t in ("int", "smallint", "tinyint"):
-                t = "bigint"
+            if not m:
+                raise ValueError(
+                    f"MATCH_RECOGNIZE: cannot infer type of {raw!r}"
+                )
+            form = (m.group(1).upper(), m.group(2), m.group(3))
+        fn, _var, col = form
+        if fn == "CLASSIFIER":
+            t = "string"
+        elif fn == "MATCH_ROWTIME":
+            t = src[spec.order_by[0]]  # the event-time attribute
+        else:  # COUNT and AVG read no column type
+            t = _agg_type(
+                fn, None if fn in ("COUNT", "AVG") else src[col]
+            )
         parts.append(f"{name} {t}")
     return ", ".join(parts)
 
@@ -4882,18 +4698,7 @@ def stream_match_recognize(
     if not spec.partition_by:
         # global pattern — constant key, one state group (Flink runs
         # an unpartitioned streaming pattern at parallelism 1 too)
-        import dataclasses
-
-        from pyspark.sql import functions as F
-
-        gk = "__mr_gk__"
-        if gk in df.columns:
-            raise ValueError(
-                f"MATCH_RECOGNIZE: input column {gk!r} collides with"
-                " the global-pattern grouping key"
-            )
-        keyed = dataclasses.replace(spec, partition_by=[gk])
-        kdf = df.withColumn(gk, F.lit(0))
+        kdf, keyed = _with_global_key(df, spec)
         out = stream_match_recognize(
             kdf,
             keyed,
@@ -4902,7 +4707,7 @@ def stream_match_recognize(
             drain_out=drain_out,
             key_groups=key_groups,
         )
-        return out.drop(gk)
+        return out.drop(_GK)
     _reject_wide_permute(spec)  # streaming always runs the NFA fold
     fold = _stream_fold(spec)
     ord0 = spec.order_by[0]
@@ -5076,7 +4881,7 @@ def _stream_fold(spec: MatchSpec):
 # --------------------------------------------------------------------------
 
 
-def fb_stream_shape(df: DataFrame, spec: MatchSpec, output_schema: str):
+def fb_stream_shape(df: DataFrame, spec: MatchSpec):
     """Classify ``spec`` for the foreachBatch streaming tier route.
     ``df`` must be a (possibly empty) BATCH DataFrame with the keyed
     input schema and ``spec.partition_by`` non-empty (a global
@@ -5130,7 +4935,7 @@ def fb_stream_shape(df: DataFrame, spec: MatchSpec, output_schema: str):
     """
     if spec.all_rows or not spec.partition_by:
         return None
-    if _fixed_len_sql(df, spec, output_schema) is not None:
+    if _fixed_len_sql(df, spec) is not None:
         # tier A compiled it: fixed length = element count (tier A
         # only accepts patterns whose every element consumes one row)
         reach = max(
@@ -5157,49 +4962,16 @@ def fb_trailing_plus_split(df: DataFrame, spec: MatchSpec):
     containing the key's last row — still extensible by future rows),
     ``decided`` everything before it. Both carry exactly ``df``'s
     columns. Returns None when the spec isn't tier-C-compilable
-    (mirrors ``_trailing_plus_sql``'s eligibility gates). See
+    (the island builder :func:`_islands` gates it). See
     :func:`fb_stream_shape` for the soundness argument."""
-    if (
-        spec.all_rows
-        or spec.skip_mode != "past_last"
-        or isinstance(spec.pattern, PatternAST)
-        or spec.within_seconds is not None
-        or len(spec.pattern) != 2
-        or not spec.partition_by
-    ):
+    if spec.all_rows or not spec.partition_by:
         return None
-    (a0, q0), (a1, q1) = spec.pattern
-    if len(a0) != 1 or len(a1) != 1 or q0 != "1" or q1 not in ("+", "*"):
+    isl = _islands(df, spec, ("__mr_rn__", "__mr_head__", "__fb_ph__"))
+    if isl is None:
         return None
-    s_var, b_var = a0[0], a1[0]
-    if spec.raw_define.get(s_var) is not None:
-        return None
-    src = spec.raw_define.get(b_var)
-    if src is None:
-        return None
-    win, part_sql, lead, cols, eq_safe, col_types = _tier_window(
-        df, spec
-    )
-    cond = _tier_condition(src, b_var, 0, cols, eq_safe, lead)
-    if cond is None:
-        return None
-    if any(a in cols for a in ("__mr_rn__", "__mr_head__", "__fb_ph__")):
-        return None
-    lead.exprs["__mr_rn__"] = f"ROW_NUMBER() OVER {win}"
-    s1 = _lead_prelude(df, lead, cols)
-    if s1 is None:
-        return None
-    # identical head computation to _trailing_plus_sql (CASE falls
-    # through on FALSE and NULL; COALESCE covers a define-true run at
-    # the partition head) plus the per-key pending head: heads are
-    # monotone in __mr_rn__, so the last island's head is the MAX
-    s2 = s1.selectExpr(
-        "*",
-        f"COALESCE(MAX(CASE WHEN {cond} THEN CAST(NULL AS BIGINT)"
-        f" ELSE `__mr_rn__` END) OVER (PARTITION BY {part_sql}"
-        f" ORDER BY `__mr_rn__` ROWS BETWEEN UNBOUNDED PRECEDING AND"
-        f" CURRENT ROW), CAST(1 AS BIGINT)) AS `__mr_head__`",
-    )
+    # heads are monotone in __mr_rn__, so each key's last (pending)
+    # island head is the MAX
+    s2, part_sql = isl[:2]
     s3 = s2.selectExpr(
         "*",
         f"MAX(`__mr_head__`) OVER (PARTITION BY {part_sql})"

@@ -46,7 +46,6 @@ outer selects).
 
 from __future__ import annotations
 
-import dataclasses
 import json
 import os
 import shutil
@@ -54,10 +53,6 @@ import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: constant grouping key for global patterns — same name/contract as
-#: the batch dispatcher and stream_match_recognize
-_GK = "__mr_gk__"
 
 #: analyzed-plan node names that make an outer SELECT non-row-local:
 #: per-batch replay of such a plan would aggregate each micro-batch
@@ -89,18 +84,13 @@ def try_start(runner, src, spec, sink, outer: str, view: str, wm, idx: int):
     if sink.connector != "memory" or sink.primary_key:
         return None
     spark = runner.spark
-    keyed_spec = spec
-    gk = None
-    if not spec.partition_by:
-        if _GK in src.columns:
-            return None
-        gk = _GK
-        keyed_spec = dataclasses.replace(spec, partition_by=[gk])
     probe = spark.createDataFrame([], src.schema)
-    if gk:
-        probe = probe.withColumn(gk, F.lit(0))
+    keyed_spec, gk = spec, None
+    if not spec.partition_by:
+        probe, keyed_spec = cep._with_global_key(probe, spec)
+        gk = cep._GK
     keyed_schema = cep.infer_output_schema(keyed_spec, probe)
-    shape = cep.fb_stream_shape(probe, keyed_spec, keyed_schema)
+    shape = cep.fb_stream_shape(probe, keyed_spec)
     if shape is None:
         return None
     # outer SELECT must be row-local: it replays per micro-batch over
@@ -139,42 +129,48 @@ def try_start(runner, src, spec, sink, outer: str, view: str, wm, idx: int):
         ts_col=spec.order_by[0],
         delay_us=_delay_us(wm.delay),
     )
+    # unique per start, so no later run can resume from it: the
+    # query's stop removes it
+    ckpt = tempfile.mkdtemp(prefix=f"graft_fbcep_ckpt_q{idx}_")
     writer = (
         src.writeStream.foreachBatch(stream.foreach_batch)
         .outputMode("append")
         .queryName(f"fb_cep_{sink.name}_{idx}")
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix=f"graft_fbcep_ckpt_q{idx}_"),
-        )
+        .option("checkpointLocation", ckpt)
     )
     if runner._trigger:
         writer = writer.trigger(**runner._trigger)
     stream.register_view()  # the sink view exists even before data
     q = writer.start()
-    return FBDrainingQuery(q, stream, enabled=runner._stop_drain)
+    return FBDrainingQuery(q, stream, ckpt, enabled=runner._stop_drain)
 
 
 class FBDrainingQuery:
     """DrainingQuery analog for the foreachBatch tier route:
     ``stop()`` stops the wrapped query, surfaces its failure if any,
     then flushes the remaining pending + tail rows through the tier
-    as one final frame (Flink's ``stop --drain``). Everything else
-    delegates to the wrapped StreamingQuery."""
+    as one final frame (Flink's ``stop --drain``), and removes the
+    run-scoped checkpoint dir ``ckpt`` — also after a plain stop or a
+    failed query. Everything else delegates to the wrapped
+    StreamingQuery."""
 
-    def __init__(self, query, stream: "_FBCepStream", enabled=True):
+    def __init__(self, query, stream: "_FBCepStream", ckpt, enabled=True):
         self._q = query
         self._stream = stream
+        self._ckpt = ckpt
         self._enabled = enabled
 
     def __getattr__(self, name):
         return getattr(self._q, name)
 
     def stop(self) -> None:
-        self._q.stop()
-        self._q.awaitTermination()
-        if self._enabled:
-            self._stream.drain()
+        try:
+            self._q.stop()
+            self._q.awaitTermination()
+            if self._enabled:
+                self._stream.drain()
+        finally:
+            shutil.rmtree(self._ckpt, ignore_errors=True)
 
 
 class _FBCepStream:

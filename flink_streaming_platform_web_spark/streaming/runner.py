@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import tempfile
 import threading
 from dataclasses import dataclass, field
@@ -1840,9 +1841,12 @@ class JobRunner:
             )
         if c == "memory":
             # the memory sink's temp view keeps serving the streamed
-            # rows; re-register it as (streamed ∪ drained)
+            # rows; re-register it as (streamed ∪ drained). The drained
+            # rows are materialized first: they are read from the
+            # checkpoint's state store, which a later run may advance
+            # and a run-scoped one is removed on stop
             self.spark.table(sink.name).unionByName(
-                df
+                df.localCheckpoint()
             ).createOrReplaceTempView(sink.name)
         elif c == "filesystem":
             # a streaming file sink lists its committed files in
@@ -2281,6 +2285,7 @@ class JobRunner:
         else:
             raise ValueError(f"unsupported stream sink connector: {c!r}")
         ckpt_loc = self._query_checkpoint(sink, idx)
+        temp_ckpt = None
         if ckpt_loc is not None:
             writer = writer.option("checkpointLocation", ckpt_loc)
         if drain is not None and ckpt_loc is None:
@@ -2289,8 +2294,11 @@ class JobRunner:
             # the runner can find it — a run-scoped temp dir when the
             # job configured none. Unique per start, so a process-
             # local-state restart still replays from scratch (the
-            # in-process store contract above holds).
-            ckpt_loc = tempfile.mkdtemp(prefix=f"graft_drain_q{idx}_")
+            # in-process store contract above holds) — and the query's
+            # stop removes it.
+            ckpt_loc = temp_ckpt = tempfile.mkdtemp(
+                prefix=f"graft_drain_q{idx}_"
+            )
             writer = writer.option("checkpointLocation", ckpt_loc)
         if self._trigger:
             writer = writer.trigger(**self._trigger)
@@ -2327,6 +2335,7 @@ class JobRunner:
                 post,
                 lambda out, s=sink: self._append_drained(out, s),
                 enabled=self._stop_drain,
+                temp_dir=temp_ckpt,
             )
         result.streaming_queries.append(q)
 
@@ -2359,16 +2368,19 @@ class DrainingQuery:
     (ooo.drain_pending, executor-side) and appended to the sink, so
     bounded input loses no rows. Like Flink's ``--drain``, a drained
     query must not be restarted from the same checkpoint (the
-    drained rows would replay). Every other attribute delegates to
-    the wrapped query."""
+    drained rows would replay). ``temp_dir`` is a run-scoped
+    checkpoint no later run can resume from: ``stop()`` removes it
+    once the drain has read it, also after a plain stop or a failed
+    query. Every other attribute delegates to the wrapped query."""
 
     def __init__(
         self, query, spark, checkpoint_loc, spec, post, write,
-        enabled: bool = True,
+        enabled: bool = True, temp_dir: "str | None" = None,
     ):
         self._q = query
         self._spark = spark
         self._ckpt = checkpoint_loc
+        self._temp_dir = temp_dir
         self._spec = spec
         self._post = post
         self._write = write
@@ -2382,21 +2394,25 @@ class DrainingQuery:
         return getattr(self._q, name)
 
     def stop(self) -> None:
-        self._q.stop()
-        # surface a query failure instead of draining on top of it
-        self._q.awaitTermination()
-        if self._drained or not self._enabled:
-            return
-        self._drained = True
-        from flink_streaming_platform_web_spark.streaming.ooo import (
-            drain_pending,
-        )
+        try:
+            self._q.stop()
+            # surface a query failure instead of draining on top of it
+            self._q.awaitTermination()
+            if self._drained or not self._enabled:
+                return
+            self._drained = True
+            from flink_streaming_platform_web_spark.streaming.ooo import (
+                drain_pending,
+            )
 
-        out = drain_pending(self._spark, self._ckpt, self._spec)
-        if out is not None:
-            out = self._post(out)
-            if not out.isEmpty():
-                self._write(out)
+            out = drain_pending(self._spark, self._ckpt, self._spec)
+            if out is not None:
+                out = self._post(out)
+                if not out.isEmpty():
+                    self._write(out)
+        finally:
+            if self._temp_dir is not None:
+                shutil.rmtree(self._temp_dir, ignore_errors=True)
 
 
 @dataclass

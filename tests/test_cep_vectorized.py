@@ -489,7 +489,7 @@ def test_fixed_len_jvm_tier_equals_nfa_matcher(spark):
         )
         schema = infer_output_schema(spec, df)
         fast = match_recognize(df, spec, schema)
-        assert _fixed_len_sql(df, spec, schema) is not None
+        assert _fixed_len_sql(df, spec) is not None
         assert "MapInPandas" not in fast._jdf.queryExecution().executedPlan().toString()
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(cep, "_fixed_len_sql", lambda *a: None)
@@ -546,7 +546,7 @@ def test_fixed_len_tier_rejects_ineligible_shapes(spark):
         spec = parse_match_recognize(
             base.format(skip=skip, pat=pat, defs=defs)
         )
-        assert _fixed_len_sql(df, spec, "") is None, (skip, pat, defs)
+        assert _fixed_len_sql(df, spec) is None, (skip, pat, defs)
 
 
 def test_past_last_tier_rejects_ineligible_shapes(spark):
@@ -580,7 +580,7 @@ def test_past_last_tier_rejects_ineligible_shapes(spark):
         spec = parse_match_recognize(
             base.format(skip=skip, pat=pat, within=within, defs=defs)
         )
-        assert _fixed_len_past_sql(df, spec, "") is None, (skip, pat)
+        assert _fixed_len_past_sql(df, spec) is None, (skip, pat)
     for pat, within, defs in [
         # a DEFINED prefix re-anchors retries inside islands
         ("A B+", "", "A AS A.v < 5, B AS B.v > PREV(B.v)"),
@@ -600,7 +600,7 @@ def test_past_last_tier_rejects_ineligible_shapes(spark):
                 defs=defs,
             )
         )
-        assert _trailing_plus_sql(df, spec, "") is None, (pat, defs)
+        assert _trailing_plus_sql(df, spec) is None, (pat, defs)
 
 
 def test_fixed_len_tier_within_equals_nfa(spark):
@@ -635,7 +635,7 @@ def test_fixed_len_tier_within_equals_nfa(spark):
     df = spark.createDataFrame(pd.DataFrame(rows))
     schema = infer_output_schema(spec, df)
     fast = match_recognize(df, spec, schema)
-    assert _fixed_len_sql(df, spec, schema) is not None
+    assert _fixed_len_sql(df, spec) is not None
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan
     with pytest.MonkeyPatch.context() as mp:
@@ -683,7 +683,7 @@ def _tier_vs_nfa(spark, clause, rows, tier_fn, expect_nonempty=True):
     spec = parse_match_recognize(clause)
     df = spark.createDataFrame(pd.DataFrame(rows))
     schema = infer_output_schema(spec, df)
-    assert tier_fn(df, spec, schema) is not None, clause
+    assert tier_fn(df, spec) is not None, clause
     fast = match_recognize(df, spec, schema)
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan and "ArrowEval" not in plan
@@ -1039,7 +1039,7 @@ def test_tier_b_skip_to_var_rejects_ineligible(spark):
         spec = parse_match_recognize(
             base.format(skip=skip, pat=pat, defs=defs)
         )
-        assert cep._fixed_len_past_sql(df, spec, "") is None, (
+        assert cep._fixed_len_past_sql(df, spec) is None, (
             skip, pat,
         )
 
@@ -1112,7 +1112,6 @@ def test_tier_p_rejects_ineligible_shapes(spark):
     import pandas as pd
 
     from flink_streaming_platform_web_spark.operators.cep import (
-        infer_output_schema,
         parse_match_recognize,
     )
 
@@ -1154,15 +1153,12 @@ def test_tier_p_rejects_ineligible_shapes(spark):
     ]
     for clause in bad:
         spec = parse_match_recognize(clause)
-        schema = infer_output_schema(spec, df)
-        assert cep._permute_bands_sql(df, spec, schema) is None, clause
+        assert cep._permute_bands_sql(df, spec) is None, clause
     # sanity: the unmodified disjoint clause IS eligible
     spec = parse_match_recognize(
         base.format(skip="SKIP TO NEXT ROW", defs=disjoint)
     )
-    assert cep._permute_bands_sql(
-        df, spec, infer_output_schema(spec, df)
-    ) is not None
+    assert cep._permute_bands_sql(df, spec) is not None
 
 
 def test_disjoint_bands_redundant_conjunct_keeps_tighter():
@@ -1299,7 +1295,6 @@ def test_tier_a_all_rows_rejects_ineligible(spark):
     import pandas as pd
 
     from flink_streaming_platform_web_spark.operators.cep import (
-        infer_output_schema,
         parse_match_recognize,
     )
 
@@ -1329,10 +1324,107 @@ def test_tier_a_all_rows_rejects_ineligible(spark):
     ]
     for clause in bad:
         spec = parse_match_recognize(clause)
-        schema = infer_output_schema(spec, df)
-        assert (
-            cep._fixed_len_all_rows_sql(df, spec, schema) is None
-        ), clause
+        assert cep._fixed_len_all_rows_sql(df, spec) is None, clause
+
+
+#: one eligible shape per tier (tier C twice: its ONE ROW and ALL
+#: ROWS measures are separate code); every measure reads variable B
+_TYPED_SHAPES = [
+    ("_fixed_len_sql", "ONE ROW PER MATCH AFTER MATCH SKIP TO NEXT ROW"
+     " PATTERN (A B) DEFINE A AS A.d < 50"),
+    ("_fixed_len_all_rows_sql", "ALL ROWS PER MATCH"
+     " AFTER MATCH SKIP TO NEXT ROW PATTERN (A B) DEFINE A AS A.d < 50"),
+    ("_multi_len_sql", "ONE ROW PER MATCH AFTER MATCH SKIP TO NEXT ROW"
+     " PATTERN (A B?) DEFINE A AS A.d < 50, B AS B.d > 20"),
+    ("_permute_bands_sql", "ONE ROW PER MATCH"
+     " AFTER MATCH SKIP TO NEXT ROW PATTERN (PERMUTE(A, B))"
+     " DEFINE A AS A.d < 30, B AS B.d >= 60"),
+    ("_fixed_len_past_sql", "ONE ROW PER MATCH"
+     " AFTER MATCH SKIP PAST LAST ROW PATTERN (A B)"
+     " DEFINE A AS A.d < 50"),
+    ("_trailing_plus_sql", "ONE ROW PER MATCH"
+     " AFTER MATCH SKIP PAST LAST ROW PATTERN (A B+)"
+     " DEFINE B AS B.d > PREV(B.d)"),
+    ("_trailing_plus_sql", "ALL ROWS PER MATCH"
+     " AFTER MATCH SKIP PAST LAST ROW PATTERN (A B+)"
+     " DEFINE B AS B.d > PREV(B.d)"),
+]
+
+
+def test_tiers_type_measures_like_infer_output_schema(spark):
+    """Every tier either declines a measure or gives it exactly
+    infer_output_schema's type, for FIRST/LAST/bare/SUM/MIN/MAX/AVG
+    over int, bigint, double, decimal, string and timestamp columns
+    and COUNT(B.*); all the measures a tier accepts, run together,
+    return the NFA's rows."""
+    import datetime
+    from collections import Counter
+    from decimal import Decimal
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    rng = random.Random(29)
+
+    def maybe(v):
+        return None if rng.random() < 0.1 else v
+
+    rows = [
+        (
+            rng.randint(0, 2), float(n), maybe(rng.randint(-50, 50)),
+            maybe(rng.randint(-(2**40), 2**40)),
+            maybe(float(rng.randint(0, 99))),
+            maybe(Decimal(rng.randint(-9999, 9999)) / 100),
+            maybe(rng.choice(["x", "y", "z"])),
+            maybe(datetime.datetime(2024, 1, 1, 0, rng.randint(0, 59))),
+        )
+        for n in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "k int, ts double, i int, l bigint, d double, m decimal(10,2),"
+        " s string, t timestamp",
+    )
+    measures = ["COUNT(B.*)"] + [
+        f.format(c)
+        for c in ("i", "l", "d", "m", "s", "t")
+        for f in ("FIRST(B.{})", "LAST(B.{})", "B.{}", "SUM(B.{})",
+                  "MIN(B.{})", "MAX(B.{})", "AVG(B.{})")
+    ]
+
+    def spec_of(tail, ms):
+        return parse_match_recognize(
+            "PARTITION BY k ORDER BY ts MEASURES "
+            + ", ".join(f"{m} AS x{j}" for j, m in enumerate(ms))
+            + " " + tail
+        )
+
+    def types(schema):
+        if isinstance(schema, str):
+            schema = _parse_datatype_string(schema)
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for tier, tail in _TYPED_SHAPES:
+        tier_fn = getattr(cep, tier)
+        accepted = []
+        for m in measures:
+            spec = spec_of(tail, [m])
+            got = tier_fn(df, spec)
+            if got is not None:
+                want = cep.infer_output_schema(spec, df)
+                assert types(got.schema) == types(want), (tier, tail, m)
+                accepted.append(m)
+        assert "FIRST(B.d)" in accepted and "SUM(B.i)" in accepted, tier
+        spec = spec_of(tail, accepted)
+        schema = cep.infer_output_schema(spec, df)
+        fast = tier_fn(df, spec)
+        assert types(fast.schema) == types(schema), (tier, tail)
+        with pytest.MonkeyPatch.context() as mp:
+            _force_nfa(mp)
+            want = Counter(
+                map(tuple, cep.match_recognize(df, spec, schema).collect())
+            )
+        got = Counter(map(tuple, fast.collect()))
+        assert got == want and got, (tier, tail)
 
 
 def test_row_value_types_are_python_natives():
@@ -1366,3 +1458,35 @@ def test_row_value_types_are_python_natives():
     for r in (rows[1], cr[1]):
         assert r["t"] is pd.NaT
         assert r["f"] != r["f"]  # nan, as a Python float
+
+
+def test_nfa_aggregates_skip_nan_nulls():
+    """A NULL in a numeric or datetime column reaches the matcher as
+    NaN/NaT; SUM/MIN/MAX/AVG skip it as SQL does (they returned NULL
+    or an order-dependent value when it was kept)."""
+    nan, nat = float("nan"), pd.NaT
+    rows = [
+        {"v": nan, "t": nat},
+        {"v": 1.0, "t": pd.Timestamp("2024-01-02")},
+        {"v": 3.0, "t": pd.Timestamp("2024-01-01")},
+        {"v": nan, "t": nat},
+    ]
+    agg = _match_ctx(rows, 0, ["A"] * 4)["__agg"]
+    assert agg("sum", "A", "v") == 4.0
+    assert agg("avg", "A", "v") == 2.0
+    assert (agg("min", "A", "v"), agg("max", "A", "v")) == (1.0, 3.0)
+    assert agg("min", "A", "t") == pd.Timestamp("2024-01-01")
+    assert agg("max", "A", "t") == pd.Timestamp("2024-01-02")
+    assert agg("count", "A", None) == 4
+
+
+def test_global_pattern_key_collision_is_loud(spark):
+    """A pattern without PARTITION BY runs keyed by a constant column;
+    an input column of that name is refused, not overwritten."""
+    df = spark.createDataFrame([(1.0, 7)], "ts double, __mr_gk__ int")
+    spec = parse_match_recognize(
+        "ORDER BY ts MEASURES COUNT(*) AS n ONE ROW PER MATCH"
+        " PATTERN (A) DEFINE A AS A.ts > 0"
+    )
+    with pytest.raises(ValueError, match="global-pattern grouping key"):
+        cep.match_recognize(df, spec, "n bigint")

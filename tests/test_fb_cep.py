@@ -70,22 +70,13 @@ def _probe(spark):
 def test_shape_classification(spark):
     p = _probe(spark)
     spec14 = cep.parse_match_recognize(ST14_CLAUSE)
-    s14 = cep.fb_stream_shape(
-        p, spec14, cep.infer_output_schema(spec14, p)
-    )
+    s14 = cep.fb_stream_shape(p, spec14)
     assert s14 == ("trailing_plus", None)
     spec23 = cep.parse_match_recognize(ST23_CLAUSE)
-    s23 = cep.fb_stream_shape(
-        p, spec23, cep.infer_output_schema(spec23, p)
-    )
+    s23 = cep.fb_stream_shape(p, spec23)
     assert s23 == ("fixed_next", 2)
     spec19 = cep.parse_match_recognize(ST19_CLAUSE)
-    assert (
-        cep.fb_stream_shape(
-            p, spec19, cep.infer_output_schema(spec19, p)
-        )
-        is None
-    )
+    assert cep.fb_stream_shape(p, spec19) is None
 
 
 def test_trailing_split_partitions_frame(spark):
@@ -376,10 +367,7 @@ def test_prev_reaching_past_carried_rows_falls_back(spark, tmp_path):
     )
     spec = cep.parse_match_recognize(clause)
     p = _probe(spark)
-    assert (
-        cep.fb_stream_shape(p, spec, cep.infer_output_schema(spec, p))
-        is None
-    )
+    assert cep.fb_stream_shape(p, spec) is None
     files = [
         [_row(1, 0, 50), _row(2, 10, 30), _row(3, 15, 5), _row(4, 26, 90)],
         [_row(5, 40, 60)],  # batch 1 releases 0..15 s; wm -> 30 s
@@ -390,3 +378,44 @@ def test_prev_reaching_past_carried_rows_falls_back(spark, tmp_path):
     want = _batch_mr(spark, clause, files)
     assert (5.0, 90.0) in want
     assert got == want
+
+
+def test_run_scoped_checkpoints_removed_on_stop(spark, tmp_path):
+    """A buffered OVER job and an fb-route MATCH_RECOGNIZE job, both
+    without a checkpoint dir, each checkpoint to a temp dir unique to
+    that start, which no later run can resume from: stop removes
+    both, and the memory sinks still serve every row, the drained
+    ones included."""
+    import glob
+    import os
+    import tempfile
+
+    from tests.test_ooo import (
+        _batch_over,
+        _mk_rows,
+        _run_over,
+        _write_files,
+    )
+
+    def run_scoped():
+        tmp = tempfile.gettempdir()
+        return {
+            p
+            for pat in ("graft_drain_q*", "graft_fbcep_ckpt_q*")
+            for p in glob.glob(os.path.join(tmp, pat))
+        }
+
+    before = run_scoped()
+    rows = _mk_rows(n_per_key=8, keys=(1,))
+    p = str(tmp_path / "over")
+    _write_files(p, [rows[:4], rows[4:]])
+    assert _run_over(spark, p, "tmpckpt") == _batch_over(spark, rows)
+    clause = LOHI_CLAUSE.format(order="ts", lo="LO.value < 20.0")
+    files = [
+        [_row(1, 0, 5), _row(2, 5, 90), _row(3, 20, 10)],
+        [_row(4, 40, 85)],  # the drain releases the 20 s/40 s match
+    ]
+    got, q = _stream_mr(spark, tmp_path, "fbtmpckpt", clause, files)
+    assert type(q).__name__ == "FBDrainingQuery"
+    assert got == _batch_mr(spark, clause, files) == [(5.0, 90.0), (10.0, 85.0)]
+    assert run_scoped() == before
