@@ -549,7 +549,6 @@ def kafka_writer(df: DataFrame, table: TableDef):
     mode = "update" if table.primary_key else "append"
     path = kafka_file.broker_path(table.options)
     if path:
-        import tempfile
         import uuid
 
         kafka_file.ensure_registered(df.sparkSession)
@@ -577,14 +576,6 @@ def kafka_writer(df: DataFrame, table: TableDef):
             .format("graft-kafka")
             .option("path", path)
             .option("topic", topic)
-            # a v2 python sink requires a checkpoint; this default is
-            # overridden when the job configures its own (the runner
-            # sets checkpointLocation after building the writer)
-            .option(
-                "checkpointLocation",
-                f"{tempfile.gettempdir()}/graft_kafka_ckpt_"
-                f"{uuid.uuid4().hex}",
-            )
         )
     return (
         kafka_payload(df, table).writeStream.outputMode(mode).format("kafka")
@@ -593,6 +584,17 @@ def kafka_writer(df: DataFrame, table: TableDef):
             table.options.get("properties.bootstrap.servers", ""),
         )
         .option("topic", table.options.get("topic", ""))
+    )
+
+
+def kafka_sink_needs_checkpoint(table: TableDef) -> bool:
+    """Whether kafka_writer's sink for ``table`` is the file broker's
+    append sink: a python v2 sink, which Spark starts only with a
+    checkpoint location."""
+    from flink_streaming_platform_web_spark.sources import kafka_file
+
+    return not table.primary_key and bool(
+        kafka_file.broker_path(table.options)
     )
 
 

@@ -33,10 +33,10 @@ streaming plan):
   batch dispatcher runs the tier SQL over the decided part, the
   user's outer SELECT replays over the result, and the emitted rows
   land in a versioned parquet append dir the sink view reads;
-- ``stop()`` drains exactly like ``DrainingQuery``: the remaining
-  tail + pending rows run through the same tier as one final frame —
-  Flink's MAX_WATERMARK at end of bounded input — so the converged
-  table equals the batch result.
+- the query's stop wrapper (``runner.DrainingQuery``) drains it: the
+  remaining tail + pending rows run through the same tier as one
+  final frame — Flink's MAX_WATERMARK at end of bounded input — so
+  the converged table equals the batch result.
 
 Eligibility is decided spec-first (``fb_stream_shape``) and falls
 back to the NFA route for everything else (consuming skip modes,
@@ -70,19 +70,21 @@ def _delay_us(delay: str) -> int:
     return int(pd.Timedelta(delay).value // 1000)
 
 
-def try_start(runner, src, spec, sink, outer: str, view: str, wm, idx: int):
+def try_start(
+    runner, src, spec, sink, outer: str, view: str, wm, idx: int, result
+):
     """Start the foreachBatch tier route for an eligible streaming
-    MATCH_RECOGNIZE, or return None to let the caller fall back to
-    the watermark-buffered NFA route. ``runner`` is the JobRunner
-    (session, trigger, drain flag, sink alignment); ``wm`` the
-    source's WatermarkDef."""
+    MATCH_RECOGNIZE into ``result`` and return True, or return False
+    to let the caller fall back to the watermark-buffered NFA route.
+    ``runner`` is the JobRunner (session, query start, sink
+    alignment); ``wm`` the source's WatermarkDef."""
     from flink_streaming_platform_web_spark.functions.flink_compat import (
         translate_expr,
     )
     from flink_streaming_platform_web_spark.operators import cep
 
     if sink.connector != "memory" or sink.primary_key:
-        return None
+        return False
     spark = runner.spark
     probe = spark.createDataFrame([], src.schema)
     keyed_spec, gk = spec, None
@@ -92,7 +94,7 @@ def try_start(runner, src, spec, sink, outer: str, view: str, wm, idx: int):
     keyed_schema = cep.infer_output_schema(keyed_spec, probe)
     shape = cep.fb_stream_shape(probe, keyed_spec)
     if shape is None:
-        return None
+        return False
     # outer SELECT must be row-local: it replays per micro-batch over
     # the emitted matches, which is only distribution-safe for plain
     # project/filter plans. Probe it over an EMPTY relation bearing
@@ -107,14 +109,14 @@ def try_start(runner, src, spec, sink, outer: str, view: str, wm, idx: int):
         out_probe = runner._align_to_sink(spark.sql(outer_sql), sink)
         plan = out_probe._jdf.queryExecution().analyzed().toString()
     except Exception:
-        return None
+        return False
     finally:
         try:
             spark.catalog.dropTempView(view)
         except Exception:
             pass
     if any(n in plan for n in _NON_ROW_LOCAL):
-        return None
+        return False
     stream = _FBCepStream(
         runner=runner,
         spec=keyed_spec,
@@ -129,48 +131,19 @@ def try_start(runner, src, spec, sink, outer: str, view: str, wm, idx: int):
         ts_col=spec.order_by[0],
         delay_us=_delay_us(wm.delay),
     )
-    # unique per start, so no later run can resume from it: the
-    # query's stop removes it
-    ckpt = tempfile.mkdtemp(prefix=f"graft_fbcep_ckpt_q{idx}_")
     writer = (
         src.writeStream.foreachBatch(stream.foreach_batch)
         .outputMode("append")
         .queryName(f"fb_cep_{sink.name}_{idx}")
-        .option("checkpointLocation", ckpt)
     )
-    if runner._trigger:
-        writer = writer.trigger(**runner._trigger)
     stream.register_view()  # the sink view exists even before data
-    q = writer.start()
-    return FBDrainingQuery(q, stream, ckpt, enabled=runner._stop_drain)
-
-
-class FBDrainingQuery:
-    """DrainingQuery analog for the foreachBatch tier route:
-    ``stop()`` stops the wrapped query, surfaces its failure if any,
-    then flushes the remaining pending + tail rows through the tier
-    as one final frame (Flink's ``stop --drain``), and removes the
-    run-scoped checkpoint dir ``ckpt`` — also after a plain stop or a
-    failed query. Everything else delegates to the wrapped
-    StreamingQuery."""
-
-    def __init__(self, query, stream: "_FBCepStream", ckpt, enabled=True):
-        self._q = query
-        self._stream = stream
-        self._ckpt = ckpt
-        self._enabled = enabled
-
-    def __getattr__(self, name):
-        return getattr(self._q, name)
-
-    def stop(self) -> None:
-        try:
-            self._q.stop()
-            self._q.awaitTermination()
-            if self._enabled:
-                self._stream.drain()
-        finally:
-            shutil.rmtree(self._ckpt, ignore_errors=True)
+    # the route's pending frame lives in its own state dir, not in the
+    # run-scoped checkpoint, so its drain ignores the checkpoint
+    runner._start(
+        writer, result, run_scoped=f"graft_fbcep_ckpt_q{idx}_",
+        drain=lambda _checkpoint: stream.drain(),
+    )
+    return True
 
 
 class _FBCepStream:
@@ -197,7 +170,6 @@ class _FBCepStream:
         # frame schema = source columns (+ constant key); resolved
         # from the first batch (the staged parquet's exact types)
         self._frame_fields = None
-        self._drained = False
 
     # ---- state dir helpers -------------------------------------------
 
@@ -417,9 +389,6 @@ class _FBCepStream:
     def drain(self) -> None:
         """Flush pending + tail rows through the tier as one final
         frame (Flink's MAX_WATERMARK at end of bounded input)."""
-        if self._drained:
-            return
-        self._drained = True
         meta = self._latest_meta()
         if self._frame_fields is None:
             self.register_view()
@@ -439,7 +408,7 @@ class _FBCepStream:
                 json.dump(meta, fh)
         self.register_view(meta)
         # the buffer state is spent after a drain (a drained query
-        # must not resume — same contract as DrainingQuery); the
+        # must not resume, as on every stop-with-drain route); the
         # emits stay, the sink view reads them
         for kind in ("pending", "tails"):
             shutil.rmtree(

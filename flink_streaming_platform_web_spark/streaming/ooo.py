@@ -44,8 +44,8 @@ reads the query's last committed state through Spark's ``statestore``
 batch reader after ``StreamingQuery.stop()``, runs the remaining fold
 over each key's pending rows exactly as a MAX_WATERMARK release
 would (sorted, after the frontier), and returns the tail output rows
-for the runner to append to the sink (runner.DrainingQuery wires
-this onto ``stop()``). Like Flink's ``--drain``, a drained query must
+for the runner to append to the sink (the runner hands this drain
+to the query's stop wrapper, runner.DrainingQuery). Like Flink's ``--drain``, a drained query must
 not be restarted from the same checkpoint (the drained rows would
 replay).
 

@@ -26,6 +26,7 @@ Spark rebuild:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -155,10 +156,6 @@ class JobRunner:
         # rank-state TTL in batches (SET graft.topn.state-ttl-batches;
         # None = keep forever, Flink's continuous-Top-N contract)
         self._topn_state_ttl: int | None = None
-        # (DrainSpec, post-projection) staged by a buffered-operator
-        # route for the next _write_stream call — consumed there to
-        # wrap the started query in DrainingQuery (stop-with-drain)
-        self._drain_ctx: "tuple | None" = None
         # lookup dims with TTL caches (lookup_cache.DimCache by name)
         self.dim_caches: dict = {}
         # accumulated rows for memory sinks fed per micro-batch by the
@@ -503,92 +500,19 @@ class JobRunner:
             # which one foreachBatch can't give N ways → mirror pattern
             return self._read_once_mirror_fanout(src, inserts, result)
         sinks = [self.tables[j.target] for j in inserts]
-        for s in sinks:
-            # connector-first honesty (ADVICE r01): a PK EXTERNAL sink
-            # (upsert-kafka/ES/jdbc-with-url/filesystem) must go through
-            # _write_stream's real writers, not an in-process dict —
-            # fall back to per-query reads, which route correctly.
-            # Same for non-PK sinks the fanout body can't serve.
-            if s.primary_key:
-                if s.connector not in ("jdbc", "memory", "print") or (
-                    s.connector == "jdbc" and s.options.get("url")
-                ):
-                    return False
-            elif s.connector not in (
-                "print", "blackhole", "filesystem", "memory",
-            ):
-                return False
-        for s in sinks:
-            if s.primary_key:
-                self._replace_store(s.name, s.primary_key)
-        stream_df = self.spark.table(src)
-        queries = [translate_expr(j.query_sql) for j in inserts]
-        overwrites = [j.overwrite for j in inserts]
-        stores = self.upsert_stores
-
-        def fanout(batch, epoch_id: int) -> None:
-            # each micro-batch runs in a cloned session: register the
-            # shadow view and resolve SQL THERE, not on the outer one
-            sess = batch.sparkSession
-            batch.createOrReplaceTempView(src)
-            for sql, sink, overwrite in zip(queries, sinks, overwrites):
-                out = self._align_to_sink(sess.sql(sql), sink)
-                c = sink.connector
-                if sink.primary_key:
-                    stores[sink.name].merge_batch(out)
-                elif c == "print":
-                    out.show(truncate=False)
-                elif c == "blackhole":
-                    out.write.format("noop").mode("overwrite").save()
-                elif c == "filesystem":
-                    # streaming overwrite was rejected upstream —
-                    # every micro-batch appends
-                    from flink_streaming_platform_web_spark.sources.registry import (  # noqa: E501
-                        resolve_fs_format,
-                    )
-
-                    w = out.write.format(
-                        resolve_fs_format(
-                            self.spark,
-                            sink.options.get("format", "parquet"),
-                        )
-                    )
-                    if sink.partitioned_by:
-                        w = w.partitionBy(*sink.partitioned_by)
-                    w.mode("append").save(sink.options["path"])
-                elif c == "memory":
-                    # accumulate: replacing the view per batch kept
-                    # only the LAST micro-batch, diverging from the
-                    # default path's append-mode memory sink
-                    self._register_memory_result(
-                        out, sink, accumulate=True
-                    )
-                else:
-                    raise ValueError(
-                        f"sink {sink.name!r} ({c!r}) unsupported in"
-                        " read-once fan-out"
-                    )
-
-        writer = stream_df.writeStream.foreachBatch(fanout).outputMode(
-            "append"
+        # connector-first honesty (ADVICE r01): a PK EXTERNAL sink
+        # (upsert-kafka/ES/jdbc-with-url/filesystem) must go through
+        # _write_stream's real writers, not an in-process dict — fall
+        # back to per-query reads, which route correctly. Same for
+        # non-PK sinks the frame writer can't serve.
+        if not all(map(_frame_sink, sinks)):
+            return False
+        self._start_frame_fanout(
+            src,
+            [(translate_expr(j.query_sql), s) for j, s in zip(inserts, sinks)],
+            f"fanout_{src}",
+            result,
         )
-        # checkpoint ONLY when every sink is durable-external
-        # (filesystem append): with an in-process store or memory view
-        # in the set, a checkpointed restart would resume the source
-        # past batches whose state died with the process (the same
-        # invariant the default PK path enforces)
-        durable = all(
-            s.connector == "filesystem" and not s.primary_key
-            for s in sinks
-        )
-        if self.checkpoint.checkpoint_dir and durable:
-            writer = writer.option(
-                "checkpointLocation",
-                f"{self.checkpoint.checkpoint_dir}/fanout_{src}",
-            )
-        if self._trigger:
-            writer = writer.trigger(**self._trigger)
-        result.streaming_queries.append(writer.start())
         return True
 
     def _read_once_mirror_fanout(
@@ -615,14 +539,11 @@ class JobRunner:
         writer = (
             stream_df.writeStream.format("parquet")
             .option("path", mirror)
-            .option("checkpointLocation", ckpt)
             .outputMode("append")
         )
-        if self._trigger:
-            writer = writer.trigger(**self._trigger)
         # mirror FIRST in streaming_queries: drain order matters for
         # processAllAvailable-style tests and graceful shutdown
-        result.streaming_queries.append(writer.start())
+        self._start(writer, result, ckpt)
         mirrored = (
             self.spark.readStream.schema(stream_df.schema)
             .format("parquet")
@@ -670,75 +591,99 @@ class JobRunner:
                 job, stream_refs[0], ttl_dims, idx, result
             )
         sink = self.tables[job.target]
-        # connector-first honesty (ADVICE r01): only sinks this body
-        # actually serves are admitted; PK EXTERNAL sinks (jdbc-with-
+        # connector-first honesty (ADVICE r01): only sinks the frame
+        # writer serves are admitted; PK EXTERNAL sinks (jdbc-with-
         # url, upsert-kafka, ES, filesystem MERGE) and non-PK jdbc fall
         # back to the in-plan join + _write_stream's real writers —
         # never a silent drop or in-memory diversion
-        if sink.primary_key:
-            if sink.connector not in ("jdbc", "memory", "print") or (
-                sink.connector == "jdbc" and sink.options.get("url")
-            ):
-                return False
-        elif sink.connector not in (
-            "print", "blackhole", "filesystem", "memory",
-        ):
+        if not _frame_sink(sink):
             return False
-        src = stream_refs[0]
-        sql = translate_expr(job.query_sql)
-        caches = [self.dim_caches[d] for d in ttl_dims]
-        if sink.primary_key:
-            self._replace_store(sink.name, sink.primary_key)
-        stores = self.upsert_stores
+        self._start_frame_fanout(
+            stream_refs[0],
+            [(translate_expr(job.query_sql), sink)],
+            f"q{idx}_{sink.name}",
+            result,
+            caches=[self.dim_caches[d] for d in ttl_dims],
+        )
+        return True
 
-        def apply(batch: DataFrame, epoch_id: int) -> None:
+    def _start_frame_fanout(
+        self,
+        src: str,
+        pairs: "list[tuple[str, TableDef]]",
+        ckpt_name: str,
+        result: ExecutionResult,
+        caches=(),
+    ) -> None:
+        """One foreachBatch query over stream ``src``: each micro-batch
+        shadows the ``src`` view, refreshes the TTL dim ``caches``,
+        runs every (sql, sink) pair over it and writes the frame."""
+        for _, sink in pairs:
+            if sink.primary_key:
+                self._replace_store(sink.name, sink.primary_key)
+
+        def fanout(batch: DataFrame, epoch_id: int) -> None:
+            # each micro-batch runs in a cloned session: register the
+            # shadow view and resolve SQL THERE, not on the outer one
             sess = batch.sparkSession
             batch.createOrReplaceTempView(src)
             for cache in caches:
                 cache.ensure(sess)
-            out = self._align_to_sink(sess.sql(sql), sink)
-            if sink.primary_key:
-                stores[sink.name].merge_batch(out)
-            elif sink.connector == "print":
-                out.show(truncate=False)
-            elif sink.connector == "blackhole":
-                out.write.format("noop").mode("overwrite").save()
-            elif sink.connector == "filesystem":
-                # streaming overwrite rejected upstream — append only
-                from flink_streaming_platform_web_spark.sources.registry import (  # noqa: E501
-                    resolve_fs_format,
+            for sql, sink in pairs:
+                self._write_frame(
+                    self._align_to_sink(sess.sql(sql), sink), sink
                 )
-
-                w = out.write.format(
-                    resolve_fs_format(
-                        self.spark,
-                        sink.options.get("format", "parquet"),
-                    )
-                )
-                if sink.partitioned_by:
-                    w = w.partitionBy(*sink.partitioned_by)
-                w.mode("append").save(sink.options["path"])
-            elif sink.connector == "memory":
-                self._register_memory_result(out, sink, accumulate=True)
 
         writer = (
             self.spark.table(src)
-            .writeStream.foreachBatch(apply)
+            .writeStream.foreachBatch(fanout)
             .outputMode("append")
         )
-        # checkpoint only for the durable-external sink (filesystem
-        # append) — in-process stores/views must replay from scratch
-        if self.checkpoint.checkpoint_dir and (
-            sink.connector == "filesystem" and not sink.primary_key
-        ):
-            writer = writer.option(
-                "checkpointLocation",
-                f"{self.checkpoint.checkpoint_dir}/q{idx}_{sink.name}",
+        # checkpoint ONLY when every sink is durable-external
+        # (filesystem append): with an in-process store or memory view
+        # in the set, a checkpointed restart would resume the source
+        # past batches whose state died with the process (the same
+        # invariant the default PK path enforces)
+        durable = all(
+            s.connector == "filesystem" and not s.primary_key
+            for _, s in pairs
+        )
+        self._start(
+            writer, result, self._job_checkpoint(ckpt_name) if durable else None
+        )
+
+    def _write_frame(self, out: DataFrame, sink: TableDef) -> None:
+        """Write one micro-batch frame to a sink the frame channel
+        serves (``_frame_sink``). Streaming overwrite is rejected
+        upstream, so a filesystem sink appends."""
+        c = sink.connector
+        if c == "blackhole":
+            out.write.format("noop").mode("overwrite").save()
+        elif sink.primary_key:
+            self.upsert_stores[sink.name].merge_batch(out)
+        elif c == "print":
+            out.show(truncate=False)
+        elif c == "filesystem":
+            self._fs_writer(out.write, sink).mode("append").save(
+                sink.options["path"]
             )
-        if self._trigger:
-            writer = writer.trigger(**self._trigger)
-        result.streaming_queries.append(writer.start())
-        return True
+        elif c == "memory":
+            # accumulate: replacing the view per batch kept only the
+            # LAST micro-batch, diverging from the default path's
+            # append-mode memory sink
+            self._register_memory_result(out, sink, accumulate=True)
+
+    def _fs_writer(self, writer, sink: TableDef):
+        """A batch or stream ``writer`` in the filesystem sink's format
+        and partition layout."""
+        writer = writer.format(
+            registry.resolve_fs_format(
+                self.spark, sink.options.get("format", "parquet")
+            )
+        )
+        if sink.partitioned_by:
+            writer = writer.partitionBy(*sink.partitioned_by)
+        return writer
 
     def _write_stream_ttl_incremental_agg(
         self,
@@ -766,11 +711,7 @@ class JobRunner:
         returns False and the in-plan join with its pinned-snapshot
         caveat remains the documented fallback."""
         sink = self.tables[job.target]
-        if not sink.primary_key:
-            return False
-        if sink.connector not in ("jdbc", "memory", "print") or (
-            sink.connector == "jdbc" and sink.options.get("url")
-        ):
+        if not _in_process_upsert(sink):
             return False
         sql = translate_expr(job.query_sql)
         # the fold is only sound when each micro-batch's partial is the
@@ -857,9 +798,7 @@ class JobRunner:
         # IS the in-process store contract; a durable deployment puts
         # the fold server-side (jdbc MERGE x + EXCLUDED.x) with an
         # epoch ledger, and only then pins a checkpoint.
-        if self._trigger:
-            writer = writer.trigger(**self._trigger)
-        result.streaming_queries.append(writer.start())
+        self._start(writer, result)
         return True
 
     # -- SET mapping ----------------------------------------------------------
@@ -1174,19 +1113,14 @@ class JobRunner:
         writer = ranked.writeStream.outputMode("update").foreachBatch(
             foreach_batch_upsert(store)
         )
-        if self.checkpoint.checkpoint_dir:
-            # the OPERATOR state (per-key retained rows) checkpoints
-            # and restores; the in-process store is the test channel
-            # and re-converges for keys touched after restart (a
-            # durable deployment pairs the restored state with an
-            # idempotent upsert sink — test_rank_router restore test)
-            writer = writer.option(
-                "checkpointLocation",
-                f"{self.checkpoint.checkpoint_dir}/q{idx}_{sink.name}",
-            )
-        if self._trigger:
-            writer = writer.trigger(**self._trigger)
-        result.streaming_queries.append(writer.start())
+        # the OPERATOR state (per-key retained rows) checkpoints and
+        # restores; the in-process store is the test channel and
+        # re-converges for keys touched after restart (a durable
+        # deployment pairs the restored state with an idempotent
+        # upsert sink — test_rank_router restore test)
+        self._start(
+            writer, result, self._job_checkpoint(f"q{idx}_{sink.name}")
+        )
 
     def _rank_agg_stream(
         self,
@@ -1343,21 +1277,16 @@ class JobRunner:
         writer = inner_df.writeStream.outputMode("update").foreachBatch(
             apply
         )
-        if self.checkpoint.checkpoint_dir:
-            # restartable: the StateTable lives under the checkpoint
-            # dir (_state_dir) and its keyed MERGE is idempotent, so a
-            # resumed source + persisted rank state recompute
-            # correctly; foreachBatch epoch ids also resume, keeping
-            # the TTL ledger monotone. The in-process sink store
-            # remains the test channel (re-converges for partitions
-            # touched after restart — test_rank_router pins this).
-            writer = writer.option(
-                "checkpointLocation",
-                f"{self.checkpoint.checkpoint_dir}/q{idx}_{sink.name}",
-            )
-        if self._trigger:
-            writer = writer.trigger(**self._trigger)
-        result.streaming_queries.append(writer.start())
+        # restartable: the StateTable lives under the checkpoint dir
+        # (_state_dir) and its keyed MERGE is idempotent, so a resumed
+        # source + persisted rank state recompute correctly;
+        # foreachBatch epoch ids also resume, keeping the TTL ledger
+        # monotone. The in-process sink store remains the test channel
+        # (re-converges for partitions touched after restart —
+        # test_rank_router pins this).
+        self._start(
+            writer, result, self._job_checkpoint(f"q{idx}_{sink.name}")
+        )
 
     def _write_stream_over(
         self,
@@ -1401,12 +1330,11 @@ class JobRunner:
             drain_out=drains,
             key_groups=self._key_groups(sink, idx) if buffered else None,
         )
-        if drains:
+        self._write_stream(
+            self._align_to_sink(out, sink), sink, idx, result,
             # stop-with-drain: fold output is already in out_cols
             # order — no post-projection needed
-            self._drain_ctx = (drains[0], lambda d: d)
-        self._write_stream(
-            self._align_to_sink(out, sink), sink, idx, result
+            drain=(drains[0], lambda d: d) if drains else None,
         )
 
     _TEMPORAL_RE = re.compile(
@@ -1557,15 +1485,14 @@ class JobRunner:
             )
             order.append(im.group(3) or im.group(2))
         out = out.select(*order)
-        if drains:
+        self._write_stream(
+            self._align_to_sink(out, sink), sink, idx, result,
             # stop-with-drain: replay the select-list reorder on the
             # drained fold output before the sink align
-            self._drain_ctx = (
-                drains[0],
-                lambda d, _o=tuple(order): d.select(*_o),
-            )
-        self._write_stream(
-            self._align_to_sink(out, sink), sink, idx, result
+            drain=(
+                (drains[0], lambda d, _o=tuple(order): d.select(*_o))
+                if drains else None
+            ),
         )
 
     def _run_match_recognize(
@@ -1645,11 +1572,9 @@ class JobRunner:
                 fb_cep,
             )
 
-            fb_q = fb_cep.try_start(
-                self, src, spec, sink, outer, view, wm, idx
-            )
-            if fb_q is not None:
-                result.streaming_queries.append(fb_q)
+            if fb_cep.try_start(
+                self, src, spec, sink, outer, view, wm, idx, result
+            ):
                 return
             drains: list = []
             matched = cep.stream_match_recognize(
@@ -1662,18 +1587,17 @@ class JobRunner:
             )
             matched.createOrReplaceTempView(view)
             df = self.spark.sql(translate_expr(outer))
-            if drains:
 
-                def post(d, _v=view, _o=outer):
-                    # the streaming query is stopped by the time the
-                    # drain runs — re-point the view at the drained
-                    # batch and replay the same outer select
-                    d.createOrReplaceTempView(_v)
-                    return self.spark.sql(translate_expr(_o))
+            def post(d, _v=view, _o=outer):
+                # the streaming query is stopped by the time the drain
+                # runs — re-point the view at the drained batch and
+                # replay the same outer select
+                d.createOrReplaceTempView(_v)
+                return self.spark.sql(translate_expr(_o))
 
-                self._drain_ctx = (drains[0], post)
             self._write_stream(
-                self._align_to_sink(df, sink), sink, idx, result
+                self._align_to_sink(df, sink), sink, idx, result,
+                drain=(drains[0], post) if drains else None,
             )
             return
         matched = cep.match_recognize(
@@ -1772,9 +1696,6 @@ class JobRunner:
         layout: one file per batch (or ``.compact`` snapshot), first
         line a version marker, then one JSON ``SinkFileStatus`` per
         committed file."""
-        import json as _json
-        import shutil
-
         meta = os.path.join(path, "_spark_metadata")
         if not os.path.isdir(meta):
             return
@@ -1788,7 +1709,7 @@ class JobRunner:
                     if not line or not line.startswith("{"):
                         continue
                     try:
-                        entry = _json.loads(line)
+                        entry = json.loads(line)
                     except ValueError:
                         continue
                     p = entry.get("path")
@@ -1817,29 +1738,23 @@ class JobRunner:
         shutil.rmtree(meta)
 
     def _append_drained(self, df: DataFrame, sink: TableDef) -> None:
-        """Batch-append stop-with-drain tail rows to a streaming
-        sink — the write arm of DrainingQuery. Mirrors the
-        foreachBatch fan-out body's per-connector routing; connectors
-        without a batch append channel raise loudly (never a silent
-        loss of the drained rows)."""
+        """Batch-append stop-with-drain tail rows to a streaming sink.
+        The frame writer serves the PK store, print and the
+        filesystem append; connectors without a batch append channel
+        raise loudly (never a silent loss of the drained rows)."""
         df = self._align_to_sink(df, sink)
         c = sink.connector
-        if sink.primary_key:
-            store = self.upsert_stores.get(sink.name)
-            if store is not None:
-                store.merge_batch(df)
-                return
+        if sink.primary_key and sink.name not in self.upsert_stores:
             psink = self.parquet_upserts.get(sink.name)
-            if psink is not None:
-                # epoch beyond any micro-batch: the pointer guard
-                # must not mistake the drain for a replayed batch
-                psink.foreach_batch()(df, 2**31)
-                return
-            raise ValueError(
-                f"stop-with-drain: PRIMARY-KEY sink {sink.name!r}"
-                f" ({c!r}) has no batch upsert channel"
-            )
-        if c == "memory":
+            if psink is None:
+                raise ValueError(
+                    f"stop-with-drain: PRIMARY-KEY sink {sink.name!r}"
+                    f" ({c!r}) has no batch upsert channel"
+                )
+            # epoch beyond any micro-batch: the pointer guard must not
+            # mistake the drain for a replayed batch
+            psink.foreach_batch()(df, 2**31)
+        elif c == "memory" and not sink.primary_key:
             # the memory sink's temp view keeps serving the streamed
             # rows; re-register it as (streamed ∪ drained). The drained
             # rows are materialized first: they are read from the
@@ -1848,7 +1763,7 @@ class JobRunner:
             self.spark.table(sink.name).unionByName(
                 df.localCheckpoint()
             ).createOrReplaceTempView(sink.name)
-        elif c == "filesystem":
+        elif c == "filesystem" and not sink.primary_key:
             # a streaming file sink lists its committed files in
             # _spark_metadata, and every Spark read of the directory
             # trusts ONLY that log — a plain batch append here would
@@ -1862,23 +1777,10 @@ class JobRunner:
             # at-least-once, the same contract Flink gives
             # non-transactional file sinks on drain.
             self._collapse_sink_manifest(sink.options["path"])
-            from flink_streaming_platform_web_spark.sources.registry import (  # noqa: E501
-                resolve_fs_format,
-            )
-
-            w = df.write.format(
-                resolve_fs_format(
-                    self.spark, sink.options.get("format", "parquet")
-                )
-            )
-            if sink.partitioned_by:
-                w = w.partitionBy(*sink.partitioned_by)
-            w.mode("append").save(sink.options["path"])
-        elif c == "print":
-            df.show(truncate=False)
-        elif c == "blackhole":
-            pass
-        else:
+            self._write_frame(df, sink)
+        elif sink.primary_key or c == "print":
+            self._write_frame(df, sink)
+        elif c != "blackhole":
             raise ValueError(
                 f"stop-with-drain: sink connector {c!r} has no batch"
                 " append channel — drained rows would be lost"
@@ -1919,11 +1821,9 @@ class JobRunner:
         job refuses to start — never a silent in-memory diversion.
         Deltas are update-rate-bounded; at scale each arm is the
         MERGE/DELETE pair the target database applies atomically."""
-        c = sink.connector
-        if c in ("memory", "print") or (
-            c == "jdbc" and not sink.options.get("url")
-        ):
+        if _in_process_upsert(sink):
             return None
+        c = sink.connector
         if c == "jdbc":
             registry.jdbc_probe(
                 self.spark, registry.jdbc_reader_options(sink)
@@ -2118,9 +2018,7 @@ class JobRunner:
             # converges); a deployment that wants resume puts the
             # MERGE server-side where the sink itself holds the
             # previous state, and THEN checkpoints the source.
-            if self._trigger:
-                writer = writer.trigger(**self._trigger)
-            result.streaming_queries.append(writer.start())
+            self._start(writer, result)
 
     def _write_batch(
         self,
@@ -2134,23 +2032,12 @@ class JobRunner:
             df.show(truncate=False)
             result.batch_results[sink.name] = df.count()
         elif c == "blackhole":
-            df.write.format("noop").mode("overwrite").save()
+            self._write_frame(df, sink)
             result.batch_results[sink.name] = -1
         elif c == "filesystem":
-            from flink_streaming_platform_web_spark.sources.registry import (  # noqa: E501
-                resolve_fs_format,
-            )
-
-            writer = df.write.format(
-                resolve_fs_format(
-                    self.spark, sink.options.get("format", "parquet")
-                )
-            )
-            if sink.partitioned_by:
-                writer = writer.partitionBy(*sink.partitioned_by)
-            writer.mode("overwrite" if job.overwrite else "append").save(
-                sink.options["path"]
-            )
+            self._fs_writer(df.write, sink).mode(
+                "overwrite" if job.overwrite else "append"
+            ).save(sink.options["path"])
             result.batch_results[sink.name] = -1
         elif c == "memory":
             df.createOrReplaceTempView(sink.name)
@@ -2176,9 +2063,50 @@ class JobRunner:
         starts for INSERT ``idx``: under the job's checkpoint dir, or
         None when the job configured none or the sink keeps its state
         in process (replayed from scratch on restart)."""
-        if not self.checkpoint.checkpoint_dir or _in_process_upsert(sink):
+        if _in_process_upsert(sink):
             return None
-        return f"{self.checkpoint.checkpoint_dir}/q{idx}_{sink.name}"
+        return self._job_checkpoint(f"q{idx}_{sink.name}")
+
+    def _job_checkpoint(self, name: str) -> "str | None":
+        """``name`` under the job's checkpoint dir, or None when the
+        job configured none."""
+        base = self.checkpoint.checkpoint_dir
+        return f"{base}/{name}" if base else None
+
+    def _start(
+        self,
+        writer,
+        result: ExecutionResult,
+        checkpoint: "str | None" = None,
+        run_scoped: "str | None" = None,
+        drain=None,
+    ):
+        """Start ``writer`` as one of the job's streaming queries with
+        the job's trigger, and append it to ``result``. Each route
+        passes its own ``checkpoint`` policy. A query that cannot
+        start or drain without a checkpoint names a ``run_scoped``
+        prefix instead: it then checkpoints to a temp dir unique to
+        this start, which no later run can resume from and its stop
+        removes. ``drain(checkpoint)`` is the query's stop-with-drain,
+        dropped under ``SET graft.stop.drain = false``."""
+        temp = None
+        if checkpoint is None and run_scoped is not None:
+            checkpoint = temp = tempfile.mkdtemp(prefix=run_scoped)
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
+        if self._trigger:
+            writer = writer.trigger(**self._trigger)
+        try:
+            q = writer.start()
+        except BaseException:
+            if temp is not None:
+                shutil.rmtree(temp, ignore_errors=True)
+            raise
+        if drain is not None and self._stop_drain:
+            q = DrainingQuery(q, lambda: drain(checkpoint), temp)
+        elif temp is not None:
+            q = DrainingQuery(q, None, temp)
+        result.streaming_queries.append(q)
 
     def _key_groups(self, sink: TableDef, idx: int) -> int:
         """Key-group count for the buffered operator of INSERT
@@ -2199,11 +2127,15 @@ class JobRunner:
         sink: TableDef,
         idx: int,
         result: ExecutionResult,
+        drain: "tuple | None" = None,
     ) -> None:
-        drain = self._drain_ctx
-        self._drain_ctx = None
+        """Start the streaming INSERT ``idx`` on the sink connector's
+        writer. ``drain`` is (DrainSpec, post-projection) of a
+        buffered-operator route: its stop flushes the rows the
+        watermark never passed into the sink (stop-with-drain)."""
         c = sink.connector
         upsert = bool(sink.primary_key)
+        run_scoped = None
         # connector routes FIRST: a PK on upsert-kafka/ES selects the
         # connector's own upsert mechanism (key serialization / doc id),
         # never the in-process store (ADVICE r01: the generic upsert
@@ -2211,6 +2143,8 @@ class JobRunner:
         # diverted declared external sinks to an in-memory dict)
         if c in ("kafka", "upsert-kafka"):
             writer = registry.kafka_writer(df, sink)
+            if registry.kafka_sink_needs_checkpoint(sink):
+                run_scoped = f"graft_kafka_ckpt_q{idx}_"
         elif c == "elasticsearch-7":
             writer = registry.es_writer(df, sink)
         elif upsert and c == "filesystem":
@@ -2266,78 +2200,58 @@ class JobRunner:
                 .outputMode("complete" if _is_aggregated(df) else "append")
             )
         elif c == "filesystem":
-            from flink_streaming_platform_web_spark.sources.registry import (  # noqa: E501
-                resolve_fs_format,
-            )
-
-            writer = (
-                df.writeStream.format(
-                    resolve_fs_format(
-                        self.spark,
-                        sink.options.get("format", "parquet"),
-                    )
-                )
-                .option("path", sink.options["path"])
-                .outputMode("append")
-            )
-            if sink.partitioned_by:
-                writer = writer.partitionBy(*sink.partitioned_by)
+            writer = self._fs_writer(df.writeStream, sink).option(
+                "path", sink.options["path"]
+            ).outputMode("append")
         else:
             raise ValueError(f"unsupported stream sink connector: {c!r}")
         ckpt_loc = self._query_checkpoint(sink, idx)
-        temp_ckpt = None
-        if ckpt_loc is not None:
-            writer = writer.option("checkpointLocation", ckpt_loc)
-        if drain is not None and ckpt_loc is None:
+        if drain is None:
+            self._start(writer, result, ckpt_loc, run_scoped)
+            return
+        spec, post = drain
+
+        def drain_to_sink(checkpoint: str) -> None:
+            from flink_streaming_platform_web_spark.streaming.ooo import (
+                drain_pending,
+            )
+
+            out = drain_pending(self.spark, checkpoint, spec)
+            if out is not None:
+                out = post(out)
+                if not out.isEmpty():
+                    self._append_drained(out, sink)
+
+        # raise the Arrow batch size for the buffered-operator stream's
+        # lifetime: StreamExecution's constructor clones the session
+        # before start() returns, so restoring right after start()
+        # leaves batch queries untouched
+        arrow_prev = self.spark.conf.get(_ARROW_BATCH_KEY, None)
+        # track the set with its own flag (ADVICE r14): conf.get
+        # returns the SQL built-in default today, but if it ever
+        # returned None for an unset key, keying the restore on
+        # `arrow_prev is not None` would leak the raise into the
+        # session for every subsequent batch query
+        arrow_did_set = int(arrow_prev or 10000) < _WB_ARROW_BATCH
+        if arrow_did_set:
+            self.spark.conf.set(_ARROW_BATCH_KEY, str(_WB_ARROW_BATCH))
+        try:
             # stop-with-drain reads the state store back after stop
             # (ooo.drain_pending), so the checkpoint must live where
-            # the runner can find it — a run-scoped temp dir when the
-            # job configured none. Unique per start, so a process-
-            # local-state restart still replays from scratch (the
-            # in-process store contract above holds) — and the query's
-            # stop removes it.
-            ckpt_loc = temp_ckpt = tempfile.mkdtemp(
-                prefix=f"graft_drain_q{idx}_"
+            # the runner can find it — a run-scoped dir when the job
+            # configured none, so a process-local-state restart still
+            # replays from scratch (the in-process store contract
+            # above holds)
+            self._start(
+                writer, result, ckpt_loc, f"graft_drain_q{idx}_",
+                drain_to_sink,
             )
-            writer = writer.option("checkpointLocation", ckpt_loc)
-        if self._trigger:
-            writer = writer.trigger(**self._trigger)
-        if drain is not None:
-            # raise the Arrow batch size for the buffered-operator
-            # stream's lifetime: StreamExecution's constructor clones
-            # the session before start() returns, so restoring right
-            # after start() leaves batch queries untouched
-            _arrow_prev = self.spark.conf.get(_ARROW_BATCH_KEY, None)
-            # track the set with its own flag (ADVICE r14): conf.get
-            # returns the SQL built-in default today, but if it ever
-            # returned None for an unset key, keying the restore on
-            # `_arrow_prev is not None` would leak the raise into the
-            # session for every subsequent batch query
-            _arrow_did_set = False
-            if int(_arrow_prev or 10000) < _WB_ARROW_BATCH:
-                self.spark.conf.set(_ARROW_BATCH_KEY, str(_WB_ARROW_BATCH))
-                _arrow_did_set = True
-        try:
-            q = writer.start()
         finally:
-            if drain is not None and _arrow_did_set:
-                if _arrow_prev is not None:
-                    self.spark.conf.set(_ARROW_BATCH_KEY, _arrow_prev)
+            if arrow_did_set:
+                if arrow_prev is not None:
+                    self.spark.conf.set(_ARROW_BATCH_KEY, arrow_prev)
                 else:
                     self.spark.conf.unset(_ARROW_BATCH_KEY)
-        if drain is not None:
-            spec, post = drain
-            q = DrainingQuery(
-                q,
-                self.spark,
-                ckpt_loc,
-                spec,
-                post,
-                lambda out, s=sink: self._append_drained(out, s),
-                enabled=self._stop_drain,
-                temp_dir=temp_ckpt,
-            )
-        result.streaming_queries.append(q)
 
 
 def _in_process_upsert(sink: TableDef) -> bool:
@@ -2350,45 +2264,40 @@ def _in_process_upsert(sink: TableDef) -> bool:
     )
 
 
+def _frame_sink(sink: TableDef) -> bool:
+    """A sink JobRunner._write_frame serves: an in-process PK store, or
+    a non-PK print, blackhole, filesystem or memory sink."""
+    if sink.primary_key:
+        return _in_process_upsert(sink)
+    return sink.connector in ("print", "blackhole", "filesystem", "memory")
+
+
 def _is_aggregated(df: DataFrame) -> bool:
     plan = df._jdf.queryExecution().analyzed().toString()
     return "Aggregate" in plan
 
 
 class DrainingQuery:
-    """Proxy over a started ``StreamingQuery`` whose plan contains a
-    ``watermark_buffered`` operator (streaming OVER / event-time
-    temporal join / streaming MATCH_RECOGNIZE on watermarked
-    sources): ``stop()`` performs Flink's ``stop --drain`` — Flink
-    emits ``MAX_WATERMARK`` so event-time operators flush buffered
-    elements before shutdown (and bounded sources emit it at
-    end-of-input). After the wrapped query stops, the operator's
-    pending keyed state — the rows the watermark never passed, i.e.
-    the tail of every bounded run — is released through the fold
-    (ooo.drain_pending, executor-side) and appended to the sink, so
-    bounded input loses no rows. Like Flink's ``--drain``, a drained
-    query must not be restarted from the same checkpoint (the
+    """Proxy over a started ``StreamingQuery`` whose ``stop()`` is
+    Flink's ``stop --drain``: Flink emits ``MAX_WATERMARK`` so
+    event-time operators flush buffered elements before shutdown (and
+    bounded sources emit it at end-of-input). After the wrapped query
+    stops, and only if it did not fail, ``drain`` flushes the rows the
+    watermark never passed — the tail of every bounded run — into the
+    sink, once, so bounded input loses no rows. The runner's drain
+    runs the buffered operator's pending state through its fold
+    (ooo.drain_pending); the foreachBatch CEP route runs its pending
+    frame through its tier (fb_cep). Like Flink's ``--drain``, a
+    drained query must not be restarted from the same checkpoint (the
     drained rows would replay). ``temp_dir`` is a run-scoped
     checkpoint no later run can resume from: ``stop()`` removes it
     once the drain has read it, also after a plain stop or a failed
     query. Every other attribute delegates to the wrapped query."""
 
-    def __init__(
-        self, query, spark, checkpoint_loc, spec, post, write,
-        enabled: bool = True, temp_dir: "str | None" = None,
-    ):
+    def __init__(self, query, drain, temp_dir: "str | None" = None):
         self._q = query
-        self._spark = spark
-        self._ckpt = checkpoint_loc
+        self._drain = drain
         self._temp_dir = temp_dir
-        self._spec = spec
-        self._post = post
-        self._write = write
-        self._drained = False
-        #: ``SET graft.stop.drain = false`` → Flink's PLAIN stop:
-        #: buffered state stays in the checkpoint for a resume
-        #: instead of flushing (stop --drain is the default)
-        self._enabled = enabled
 
     def __getattr__(self, name):
         return getattr(self._q, name)
@@ -2398,18 +2307,10 @@ class DrainingQuery:
             self._q.stop()
             # surface a query failure instead of draining on top of it
             self._q.awaitTermination()
-            if self._drained or not self._enabled:
-                return
-            self._drained = True
-            from flink_streaming_platform_web_spark.streaming.ooo import (
-                drain_pending,
-            )
-
-            out = drain_pending(self._spark, self._ckpt, self._spec)
-            if out is not None:
-                out = self._post(out)
-                if not out.isEmpty():
-                    self._write(out)
+            # drain once: a second stop() must not append the tail again
+            drain, self._drain = self._drain, None
+            if drain is not None:
+                drain()
         finally:
             if self._temp_dir is not None:
                 shutil.rmtree(self._temp_dir, ignore_errors=True)

@@ -236,11 +236,11 @@ def _row(eid, sec, value, ts_null=False):
     }
 
 
-def _stream_mr(spark, tmp_path, tag, clause, files):
+def _stream_mr(spark, tmp_path, tag, clause, files, sets=""):
     """Stream ``files`` (one micro-batch each) through the runner's
     streaming MATCH_RECOGNIZE into a memory sink with a 10 s
-    watermark delay, stop with drain, and return (sorted sink rows,
-    the started query)."""
+    watermark delay, stop (with drain unless ``sets`` turns it off),
+    and return (sorted sink rows, the started query)."""
     from tests.test_ooo import _write_files
 
     from flink_streaming_platform_web_spark.streaming.runner import (
@@ -249,7 +249,7 @@ def _stream_mr(spark, tmp_path, tag, clause, files):
 
     p = str(tmp_path / tag)
     _write_files(p, files)
-    result = JobRunner(spark, mode="streaming").execute_script(f"""
+    result = JobRunner(spark, mode="streaming").execute_script(sets + f"""
         CREATE TABLE ev_{tag} (user_id BIGINT, event_id BIGINT,
           ts TIMESTAMP, value DOUBLE,
           WATERMARK FOR ts AS ts - INTERVAL '10' SECOND
@@ -315,7 +315,7 @@ def test_gc_keeps_tails_the_latest_meta_references(spark, tmp_path):
         [_row(7, 23, 3)],  # batch 3 releases nothing
     ]
     got, q = _stream_mr(spark, tmp_path, "fbgc", clause, files)
-    assert type(q).__name__ == "FBDrainingQuery"
+    assert q.name.startswith("fb_cep_")
     want = _batch_mr(spark, clause, files)
     assert got == want and want
 
@@ -339,7 +339,7 @@ def test_reverse_order_carries_null_keys(spark, tmp_path, order):
     ]
     tag = "fbdesc" if "DESC" in order else "fbasc"
     got, q = _stream_mr(spark, tmp_path, tag, clause, files)
-    assert type(q).__name__ == "FBDrainingQuery"
+    assert q.name.startswith("fb_cep_")
     want = _batch_mr(spark, clause, files)
     assert want == [(10.0, 90.0)]
     assert got == want
@@ -352,7 +352,7 @@ def test_null_event_time_dropped_on_arrival(spark, tmp_path):
     clause = LOHI_CLAUSE.format(order="ts", lo="LO.value < 20.0")
     files = [[_row(1, 0, 50), _row(2, 10, 5), _row(3, 0, 90, True)]]
     got, q = _stream_mr(spark, tmp_path, "fbnull", clause, files)
-    assert type(q).__name__ == "FBDrainingQuery"
+    assert q.name.startswith("fb_cep_")
     assert got == _batch_mr(spark, clause, files) == []
 
 
@@ -374,18 +374,19 @@ def test_prev_reaching_past_carried_rows_falls_back(spark, tmp_path):
         [_row(6, 50, 70)],  # batch 2 releases 26 s
     ]
     got, q = _stream_mr(spark, tmp_path, "fbprev", clause, files)
-    assert type(q).__name__ != "FBDrainingQuery"
+    assert not q.name.startswith("fb_cep_")
     want = _batch_mr(spark, clause, files)
     assert (5.0, 90.0) in want
     assert got == want
 
 
-def test_run_scoped_checkpoints_removed_on_stop(spark, tmp_path):
+@pytest.mark.parametrize("drain", [True, False], ids=["drain", "plain"])
+def test_run_scoped_checkpoints_removed_on_stop(spark, tmp_path, drain):
     """A buffered OVER job and an fb-route MATCH_RECOGNIZE job, both
     without a checkpoint dir, each checkpoint to a temp dir unique to
     that start, which no later run can resume from: stop removes
-    both, and the memory sinks still serve every row, the drained
-    ones included."""
+    both, with or without a drain. The memory sinks still serve every
+    streamed row, plus the drained ones when the stop drains."""
     import glob
     import os
     import tempfile
@@ -401,21 +402,33 @@ def test_run_scoped_checkpoints_removed_on_stop(spark, tmp_path):
         tmp = tempfile.gettempdir()
         return {
             p
-            for pat in ("graft_drain_q*", "graft_fbcep_ckpt_q*")
+            for pat in (
+                "graft_drain_q*", "graft_fbcep_ckpt_q*", "graft_kafka_ckpt_*",
+            )
             for p in glob.glob(os.path.join(tmp, pat))
         }
 
+    sets = "" if drain else "SET graft.stop.drain = false;"
     before = run_scoped()
     rows = _mk_rows(n_per_key=8, keys=(1,))
     p = str(tmp_path / "over")
     _write_files(p, [rows[:4], rows[4:]])
-    assert _run_over(spark, p, "tmpckpt") == _batch_over(spark, rows)
+    got = _run_over(spark, p, f"tmpckpt{int(drain)}", sets)
+    want = _batch_over(spark, rows)
+    if drain:
+        assert got == want
+    else:
+        assert got.items() < want.items()
     clause = LOHI_CLAUSE.format(order="ts", lo="LO.value < 20.0")
     files = [
         [_row(1, 0, 5), _row(2, 5, 90), _row(3, 20, 10)],
         [_row(4, 40, 85)],  # the drain releases the 20 s/40 s match
     ]
-    got, q = _stream_mr(spark, tmp_path, "fbtmpckpt", clause, files)
-    assert type(q).__name__ == "FBDrainingQuery"
-    assert got == _batch_mr(spark, clause, files) == [(5.0, 90.0), (10.0, 85.0)]
+    got, q = _stream_mr(
+        spark, tmp_path, f"fbtmpckpt{int(drain)}", clause, files, sets
+    )
+    assert q.name.startswith("fb_cep_")
+    want = _batch_mr(spark, clause, files)
+    assert want == [(5.0, 90.0), (10.0, 85.0)]
+    assert got == (want if drain else want[:1])
     assert run_scoped() == before

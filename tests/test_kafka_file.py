@@ -181,6 +181,42 @@ def test_kafka_sink_roundtrip_and_batch_read(spark, broker, tmp_path):
     assert rows == {(i, f"u{i}") for i in range(20)}
 
 
+def test_kafka_sink_run_scoped_checkpoint_removed_on_stop(
+    spark, broker, tmp_path
+):
+    """Spark starts the file broker's append sink only with a
+    checkpoint. A job without a checkpoint dir gets one unique to that
+    start, which no later run can resume from, so stop removes it."""
+    import glob
+    import os
+    import tempfile
+
+    def run_scoped():
+        return set(
+            glob.glob(os.path.join(tempfile.gettempdir(), "graft_kafka_ckpt_*"))
+        )
+
+    before = run_scoped()
+    src = f"{tmp_path}/rows_rs"
+    spark.createDataFrame(
+        [(i, f"u{i}") for i in range(5)], "id BIGINT, name STRING"
+    ).write.parquet(src)
+    result = JobRunner(spark, mode="streaming").execute_script(
+        f"""
+        CREATE TABLE src_rs (id BIGINT, name STRING)
+        WITH ('connector'='filesystem','path'='{src}','format'='parquet');
+        CREATE TABLE out_rs (id BIGINT, name STRING)
+        WITH ('connector'='kafka', 'topic'='rs_t',
+              'properties.bootstrap.servers'='file://{broker.path}',
+              'format'='json');
+        INSERT INTO out_rs SELECT id, name FROM src_rs;
+        """
+    )
+    _drain(result)
+    assert sum(broker.end_offsets("rs_t").values()) == 5
+    assert run_scoped() == before
+
+
 def test_upsert_kafka_sink_keys_records(spark, broker, tmp_path):
     """A PK-declared kafka sink serializes the PRIMARY KEY into the
     record key (log-compaction upsert contract) and keyed records land

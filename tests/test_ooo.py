@@ -35,12 +35,12 @@ def _write_files(path, files):
         os.utime(f, (base + i, base + i))
 
 
-def _run_over(spark, path, tag):
+def _run_over(spark, path, tag, sets=""):
     """Stream the staged files through the runner's OVER route
     (watermarked source → watermark_buffered → stop-with-drain) and
-    return {(k, ts_s): (n, mx)}."""
+    return {(k, ts_s): (n, mx)}. ``sets`` prefixes SET statements."""
     runner = JobRunner(spark, mode="streaming")
-    result = runner.execute_script(f"""
+    result = runner.execute_script(sets + f"""
         CREATE TABLE ev_{tag} (
           k BIGINT, ts TIMESTAMP, v DOUBLE,
           ts_s AS date_format(ts, 'yyyy-MM-dd HH:mm:ss'),

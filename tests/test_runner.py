@@ -530,3 +530,114 @@ def test_memory_sink_row_cap_overflows_loudly(spark, tmp_path):
             q.awaitTermination(60)
             if (e := q.exception()) is not None:
                 raise e
+
+
+_FRAME_SINKS = {
+    "fs_partitioned": "PARTITIONED BY (user_id) WITH ("
+    "'connector'='filesystem', 'path'='{path}', 'format'='parquet')",
+    "memory": "WITH ('connector'='memory')",
+    "blackhole": "WITH ('connector'='blackhole')",
+    "pk_memory": "WITH ('connector'='memory')",
+}
+
+
+@pytest.mark.parametrize("kind", list(_FRAME_SINKS))
+@pytest.mark.parametrize("route", ["fanout", "replan"])
+def test_frame_sink_arms_converge(spark, tmp_path, route, kind):
+    """The two per-micro-batch foreachBatch routes — the read-once
+    statement-set fan-out and the TTL lookup re-plan — write each
+    frame through the same per-connector arms. Every arm the routes
+    admit converges to the batch SQL result over the same rows."""
+    tag = f"{route}_{kind}"
+    src = f"{tmp_path}/src"
+    dim = f"{tmp_path}/dim"
+    rows = [(i, i % 3) for i in range(12)]
+    spark.createDataFrame(
+        [(0, 100), (1, 101)], "id BIGINT, coupon BIGINT"
+    ).write.parquet(dim)
+    for part in (rows[:6], rows[6:]):
+        spark.createDataFrame(
+            part, "event_id BIGINT, user_id BIGINT"
+        ).coalesce(1).write.mode("append").parquet(src)
+    pk = ", PRIMARY KEY (event_id) NOT ENFORCED" if kind == "pk_memory" else ""
+    names = [f"fa_{tag}", f"fb_{tag}"] if route == "fanout" else [f"r_{tag}"]
+    ddl = "".join(
+        f"CREATE TABLE {n} (event_id BIGINT, user_id BIGINT,"
+        f" coupon BIGINT{pk}) "
+        + _FRAME_SINKS[kind].format(path=f"{tmp_path}/{n}")
+        + ";\n"
+        for n in names
+    )
+    if route == "fanout":
+        # two stateless INSERTs over one stream: the read-once fan-out
+        wheres = ["user_id = 1", "user_id <> 1"]
+        inserts = "".join(
+            f"INSERT INTO {n} SELECT event_id, user_id,"
+            f" event_id * 10 AS coupon FROM ev_{tag} WHERE {w};\n"
+            for n, w in zip(names, wheres)
+        )
+        script = (
+            "SET graft.statement-set.read-once = 'true';\n"
+            + ddl
+            + f"BEGIN STATEMENT SET;\n{inserts}END;"
+        )
+        batch_sql = [
+            f"SELECT event_id, user_id, event_id * 10 AS coupon"
+            f" FROM b_src WHERE {w}"
+            for w in wheres
+        ]
+    else:
+        # a stateless enrichment against a TTL-cached lookup dim: the
+        # per-micro-batch re-plan
+        script = ddl + (
+            f"CREATE TABLE dim_{tag} (id BIGINT, coupon BIGINT) WITH"
+            f" ('connector'='filesystem', 'path'='{dim}',"
+            f" 'format'='parquet', 'lookup.cache.ttl'='1h');\n"
+            f"INSERT INTO {names[0]} SELECT ev.event_id, ev.user_id,"
+            f" d.coupon FROM ev_{tag} AS ev LEFT JOIN dim_{tag}"
+            f" FOR SYSTEM_TIME AS OF ev.proctime AS d"
+            f" ON d.id = ev.user_id;"
+        )
+        batch_sql = [
+            "SELECT e.event_id, e.user_id, d.coupon FROM b_src e"
+            " LEFT JOIN b_dim d ON d.id = e.user_id"
+        ]
+    runner = JobRunner(spark, mode="streaming")
+    result = runner.execute_script(
+        f"""
+        CREATE TABLE ev_{tag} (event_id BIGINT, user_id BIGINT,
+          proctime AS PROCTIME()) WITH ('connector'='filesystem',
+          'path'='{src}', 'format'='parquet',
+          'source.max-files-per-trigger'='1');
+        """
+        + script
+    )
+    (q,) = result.streaming_queries
+    try:
+        q.processAllAvailable()
+        assert q.lastProgress["sink"]["description"] == "ForeachBatchSink"
+    finally:
+        for c in runner.dim_caches.values():
+            c.release()
+        q.stop()
+        q.awaitTermination(60)
+    assert q.exception() is None
+    spark.createDataFrame(
+        rows, "event_id BIGINT, user_id BIGINT"
+    ).createOrReplaceTempView("b_src")
+    spark.read.parquet(dim).createOrReplaceTempView("b_dim")
+    if kind == "blackhole":
+        return
+    cols = ["event_id", "user_id", "coupon"]
+    for n, sql in zip(names, batch_sql):
+        want = sorted(tuple(r) for r in spark.sql(sql).collect())
+        if kind == "fs_partitioned":
+            got = spark.read.parquet(f"{tmp_path}/{n}")
+            assert {f"user_id={r[1]}" for r in want} <= {
+                p.name for p in (tmp_path / n).iterdir()
+            }
+        elif kind == "pk_memory":
+            got = runner.upsert_stores[n].to_df(spark)
+        else:
+            got = spark.table(n)
+        assert sorted(tuple(r) for r in got.select(*cols).collect()) == want
