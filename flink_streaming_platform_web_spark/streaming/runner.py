@@ -622,17 +622,26 @@ class JobRunner:
             if sink.primary_key:
                 self._replace_store(sink.name, sink.primary_key)
 
+        # more than one INSERT: read the micro-batch once, not per INSERT
+        shared = len(pairs) > 1
+
         def fanout(batch: DataFrame, epoch_id: int) -> None:
             # each micro-batch runs in a cloned session: register the
             # shadow view and resolve SQL THERE, not on the outer one
             sess = batch.sparkSession
-            batch.createOrReplaceTempView(src)
-            for cache in caches:
-                cache.ensure(sess)
-            for sql, sink in pairs:
-                self._write_frame(
-                    self._align_to_sink(sess.sql(sql), sink), sink
-                )
+            if shared:
+                batch = batch.persist()
+            try:
+                batch.createOrReplaceTempView(src)
+                for cache in caches:
+                    cache.ensure(sess)
+                for sql, sink in pairs:
+                    self._write_frame(
+                        self._align_to_sink(sess.sql(sql), sink), sink
+                    )
+            finally:
+                if shared:
+                    batch.unpersist()
 
         writer = (
             self.spark.table(src)

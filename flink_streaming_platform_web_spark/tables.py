@@ -9,7 +9,12 @@ like the reference's pass-through ``tEnv.executeSql``.
 
 from __future__ import annotations
 
+import os
+import stat
+from urllib.parse import urlsplit
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _BUILTINS_INSTALLED: set[int] = set()
 
@@ -31,9 +36,67 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
+#: the session confs that change the schema Spark infers from a
+#: parquet footer
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: absolute path of a local parquet file → (st_size, st_mtime_ns,
+#: _SCHEMA_CONFS values, inferred schema); one entry per distinct path
+_SCHEMAS: dict[str, tuple[int, int, tuple, StructType]] = {}
+
+
+def _local_file(spark: SparkSession, path: str) -> os.stat_result | None:
+    """``os.stat(path)`` when Spark reads ``path`` as this local regular
+    file: an absolute bare path under a ``file:`` default filesystem.
+    Under any other default filesystem Spark resolves the same path
+    remotely, so the driver's disk says nothing about it."""
+    if not os.path.isabs(path):
+        return None
+    # a session SET of fs.defaultFS reaches the reader's Hadoop conf
+    default_fs = spark.conf.get("fs.defaultFS", None) or (
+        spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    )
+    if urlsplit(default_fs or "").scheme not in ("", "file"):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st if stat.S_ISREG(st.st_mode) else None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference Spark
+    job (70-84 ms on 4 cores) when ``path`` is a local regular file
+    read before.
+
+    Only the schema is kept, never data: the reader still lists and
+    scans the file on every call. A hit needs the file's size and
+    mtime and the schema confs to match the inference; a rewritten
+    file infers again. A directory, a relative path, a URI or any path
+    under a non-local default filesystem infers every time."""
+    st = _local_file(spark, path)
+    if st is None:
+        return spark.read.parquet(path)
+    key = (st.st_size, st.st_mtime_ns,
+           tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[:3] == key:
+        return spark.read.schema(hit[3]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (*key, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table; column pruning + predicate pushdown reach the
-    parquet scan because we never materialize or cache eagerly.
+    parquet scan because no data is materialized or cached here (only
+    the file's schema, by ``read_parquet``).
 
     The driver's `events` parquet stores `ts` as INT64
     TIMESTAMP(NANOS), which Spark's reader rejects. We read nanos as
@@ -72,7 +135,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _BUILTINS_INSTALLED.add(skey)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         from pyspark.sql import functions as F
 
         if dict(df.dtypes).get("ts") == "bigint":
@@ -86,7 +149,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def register_views(

@@ -616,6 +616,9 @@ def test_frame_sink_arms_converge(spark, tmp_path, route, kind):
     try:
         q.processAllAvailable()
         assert q.lastProgress["sink"]["description"] == "ForeachBatchSink"
+        # every INSERT reads the same micro-batch: the source is
+        # scanned once per batch, not once per INSERT
+        assert sum(p["numInputRows"] for p in q.recentProgress) == len(rows)
     finally:
         for c in runner.dim_caches.values():
             c.release()

@@ -38,3 +38,17 @@ def test_cpus_default_to_the_affinity_mask(monkeypatch):
     assert default_cpus() == str(len(os.sched_getaffinity(0)))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cpus() == "3"
+
+
+def test_warm_plan_is_not_recompiled(spark):
+    """A plan run again after ~150 other distinct plans reuses its
+    compiled classes: the codegen cache outlasts a working set larger
+    than Spark's default 100 entries."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    first = "id + 1000000"
+    spark.range(3).selectExpr(first).collect()
+    for i in range(150):
+        spark.range(3).selectExpr(f"id + {i}").collect()
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    spark.range(3).selectExpr(first).collect()
+    assert compiles.METRIC_COMPILATION_TIME().getCount() == before
