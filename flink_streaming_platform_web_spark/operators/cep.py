@@ -4639,31 +4639,16 @@ ORACLES = {
 }
 
 
-def _row_dicts(new: "pd.DataFrame") -> list[dict]:
-    """Row dicts via raw column arrays — delegates to the canonical
-    :func:`streaming.ooo.rows_of_frame` (the rows-protocol front end
-    and this fold's DataFrame path must box identically: datetime64 →
-    pd.Timestamp, everything else → Python natives; raw np.int64 in
-    row values lets measure arithmetic wrap silently at 2**63,
-    ADVICE r13)."""
-    from flink_streaming_platform_web_spark.streaming.ooo import (
-        rows_of_frame,
-    )
-
-    return rows_of_frame(new)
-
-
 def stream_match_recognize(
     df: DataFrame,
     spec: MatchSpec,
     output_schema: str,
-    buffered: bool = False,
     drain_out: "list | None" = None,
     key_groups: "int | None" = None,
 ) -> DataFrame:
-    """STREAMING MATCH_RECOGNIZE over an event-time-ordered ingest —
-    per-key NFA state via ``applyInPandasWithState`` (Flink's
-    CepOperator shape: keyed state, matches spanning micro-batches).
+    """STREAMING MATCH_RECOGNIZE — per-key NFA state via
+    ``applyInPandasWithState`` (Flink's CepOperator shape: keyed
+    state, matches spanning micro-batches).
 
     Emission frontier: a match is emitted only once it is CLOSED —
     i.e. it ends before the first *viable pending* position (a
@@ -4672,14 +4657,11 @@ def stream_match_recognize(
     key retains exactly the buffer suffix from that frontier — for
     run-shaped patterns that is the active tail, not the history.
 
-    Ingest order: ``buffered=True`` (the route for watermarked
-    sources) runs the matcher behind the watermark-buffered
+    Ingest order: the matcher runs behind the watermark-buffered
     out-of-order front end (streaming/ooo.py — Flink CepOperator's
     element buffer: rows held in keyed state until the watermark
-    passes them, folded in ORDER BY order, late rows dropped).
-    Without a watermark the ordered-assert front end applies: rows
-    must arrive per-key-ordered on the first ORDER BY column across
-    micro-batches, and disorder raises loudly.
+    passes them, folded in ORDER BY order, late rows dropped), so
+    ``df`` must carry a watermark on the first ORDER BY column.
 
     Every AFTER MATCH strategy is supported (round 10 late; Flink
     streams all of them too). The one emission rule that is correct
@@ -4703,39 +4685,25 @@ def stream_match_recognize(
             kdf,
             keyed,
             infer_output_schema(keyed, kdf),
-            buffered=buffered,
             drain_out=drain_out,
             key_groups=key_groups,
         )
         return out.drop(_GK)
     _reject_wide_permute(spec)  # streaming always runs the NFA fold
-    fold = _stream_fold(spec)
-    ord0 = spec.order_by[0]
-
     from flink_streaming_platform_web_spark.streaming.ooo import (
-        ordered_assert_apply,
         watermark_buffered,
     )
 
-    if buffered:
-        return watermark_buffered(
-            df,
-            list(spec.partition_by),
-            ord0,
-            list(spec.order_by),
-            fold,
-            output_schema,
-            drain_out=drain_out,
-            sort_asc=spec.order_asc or None,
-            key_groups=key_groups,
-        )
-    return ordered_assert_apply(
+    return watermark_buffered(
         df,
         list(spec.partition_by),
+        spec.order_by[0],
         list(spec.order_by),
-        fold,
+        _stream_fold(spec),
         output_schema,
+        drain_out=drain_out,
         sort_asc=spec.order_asc or None,
+        key_groups=key_groups,
     )
 
 
@@ -4762,17 +4730,12 @@ def _prev_reach(src: str) -> int:
 
 
 def _stream_fold(spec: MatchSpec):
-    """Per-key streaming fold (state bytes, new rows, final) →
-    (state bytes, emitted rows) — module-level so the randomized
-    batch-cut convergence test can drive it directly."""
+    """Per-key streaming fold (state bytes, new row dicts, final) →
+    (state bytes, emitted row dicts or None) — module-level so tests
+    can drive it directly with their own micro-batch cuts."""
     import pickle
 
-    import pandas as pd
-
     ord0 = spec.order_by[0]
-    base_names = (
-        None if spec.all_rows else list(spec.partition_by)
-    )  # all_rows: resolved per batch from the pandas columns
     # PREV can reach BEFORE the match start (physical offset — Flink
     # match_recognize §Logical offsets). Retain that many rows ahead
     # of the frontier as non-attempted lookback context, or a retained
@@ -4781,31 +4744,18 @@ def _stream_fold(spec: MatchSpec):
     lookback = _prev_lookback(spec)
 
     def fold(
-        inner: bytes | None,
-        new: "pd.DataFrame | list",
-        final: bool = False,
-    ) -> "tuple[bytes, pd.DataFrame | list | None]":
-        state = pickle.loads(inner) if inner is not None else []
-        # state: (tail, decided-attempt cache, scan_from) since round
-        # 11; a bare list is a pre-r11 checkpoint — empty cache, no
-        # lookback prefix
-        if isinstance(state, tuple):
-            tail, cache, scan_from = state
-        else:
-            tail, cache, scan_from = state, {}, 0
-        # rows protocol (round 14): the buffered front end already
-        # materialized row dicts bucket-wide and passes this key's
-        # slice as a plain list; output returns as raw rows too and
-        # the bucket assembles ONE DataFrame per micro-batch. The
-        # DataFrame path stays for drain and the ordered-assert route
-        as_rows = isinstance(new, list)
-        rows = new if as_rows else _row_dicts(new)
+        inner: bytes | None, rows: list, final: bool = False
+    ) -> "tuple[bytes, list | None]":
+        # state: (tail, decided-attempt cache, scan_from)
+        tail, cache, scan_from = (
+            pickle.loads(inner) if inner is not None else ([], {}, 0)
+        )
         if tail and rows and rows[0][ord0] < tail[-1][ord0]:
             raise RuntimeError(
                 "stream_match_recognize: out-of-order ingest —"
                 f" batch starts at {rows[0][ord0]} before buffered"
-                f" {tail[-1][ord0]}; stage the stream event-time-"
-                "ordered (or declare a WATERMARK for buffering)"
+                f" {tail[-1][ord0]}; the watermark buffer released a"
+                " key's rows behind its frontier"
             )
         buf = tail + rows
         # the decided-attempt memo kills the overlap-mode re-scan
@@ -4850,22 +4800,13 @@ def _stream_fold(spec: MatchSpec):
         kept_cache = {
             s - trim_at: v for s, v in cache.items() if s >= frontier
         }
-        out = None
-        if emit:
-            if as_rows:
-                out = emit
-            else:
-                out_names = (
-                    base_names
-                    if base_names is not None
-                    else list(new.columns)
-                ) + [n for _, n in spec.measures]
-                out = pd.DataFrame(emit, columns=out_names)
-        return pickle.dumps((keep, kept_cache, frontier - trim_at)), out
+        return (
+            pickle.dumps((keep, kept_cache, frontier - trim_at)),
+            emit or None,
+        )
 
-    fold.rows_protocol = True
     fold.out_cols = lambda in_cols: (
-        list(base_names) if base_names is not None else list(in_cols)
+        list(in_cols) if spec.all_rows else list(spec.partition_by)
     ) + [n for _, n in spec.measures]
     return fold
 

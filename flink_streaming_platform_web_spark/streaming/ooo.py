@@ -1,5 +1,6 @@
-"""Watermark-buffered out-of-order ingest for custom stateful
-streaming operators.
+"""Watermark-buffered out-of-order ingest: the one ingest front end
+of the custom event-time streaming operators (streaming CEP, OVER and
+the event-time temporal join).
 
 Flink's event-time operators (CepOperator, TemporalRowTimeJoinOperator,
 the OverAggregate row-time operators — all reachable from the
@@ -7,16 +8,16 @@ reference's SQL surface via Flink 1.13, reference `pom.xml:41`) accept
 out-of-order streams by BUFFERING each element in keyed state until the
 watermark passes its timestamp, then processing elements in event-time
 order; elements older than the watermark at arrival are late and are
-dropped. Until round 6 this repo's custom stateful operators
-(streaming CEP / OVER / temporal join) instead ASSERTED per-key
-time-ordered arrival (BACKLOG "ordered-ingest contract"); this module
-is the watermark front end that replaces the assertion.
+dropped. Flink rejects these operators unless they order by a
+watermarked time attribute, and so does the runner
+(``JobRunner._event_time_watermark``): without a watermark nothing
+would ever release.
 
 ``watermark_buffered`` wraps any operator expressed as a FOLD —
 ``fold(inner_state | None, released_rows) -> (inner_state, out_rows)``
 where ``released_rows`` is one key's rows as a list of row dicts in
-the operator's ORDER BY (the rows protocol; drain passes a sorted
-DataFrame) — in an ``applyInPandasWithState`` stage:
+the operator's ORDER BY (``rows_of_frame``) — in an
+``applyInPandasWithState`` stage:
 
 - state is key-GROUPED (``hash(key) % key_groups`` state keys —
   Flink's key-group layout; see ``sized_key_groups``): each bucket
@@ -86,10 +87,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
-Fold = Callable[
-    ["bytes | None", "list[dict] | pd.DataFrame"],
-    "tuple[bytes, list | pd.DataFrame | None]",
-]
+Fold = Callable[["bytes | None", "list[dict]"], "tuple[bytes, list | None]"]
 
 #: key-group count of a checkpoint written before the count was
 #: recorded: every buffered operator hashed into 1024 buckets then
@@ -170,9 +168,8 @@ def _norm_key(kt) -> tuple:
 
 
 def rows_of_frame(frame: pd.DataFrame) -> list[dict]:
-    """Row dicts via raw column arrays — the canonical
-    materialization both the buffered front end (rows protocol) and
-    the CEP fold's DataFrame path share. pandas ``to_dict("records")``
+    """Row dicts via raw column arrays — how the front end hands a
+    fold its rows, live and at drain. pandas ``to_dict("records")``
     pays ~1 ms of machinery per call regardless of size; this path is
     ~20× cheaper on the ~10-row frames the per-key folds see (round
     13). datetime64 boxes to pd.Timestamp via astype(object) (NaT
@@ -235,19 +232,15 @@ class DrainSpec:
     fold and the release ordering, plus the output schema. Captured
     at plan-build time (``watermark_buffered(..., drain_out=[...])``)
     and carried by the runner next to the started query.
-    ``in_cols`` is the buffered input's column list, so a FINAL-aware
-    fold (one accepting ``fold(inner, rows, final)``) can be invoked
-    with an empty, correctly-columned frame even for keys whose
-    pending buffer is empty — a streaming-CEP key may hold everything
-    in its inner state (the match buffer tail) and still owe output
-    at end-of-input."""
+    ``in_cols`` is the buffered input's column list, which names the
+    fold's output columns (``fold.out_cols(in_cols)``)."""
 
     key_cols: list[str]
     ts_col: str
     sort_cols: list[str]
     fold: Fold
     out_schema: "StructType | str"
-    in_cols: "list[str] | None" = None
+    in_cols: list[str]
     #: per-sort-column ascending flags; None = all ascending. The
     #: first (event-time) column is always ascending — secondary
     #: False entries give DESC tie ordering within a timestamp.
@@ -273,6 +266,47 @@ def to_epoch_us(col: pd.Series):
     )
 
 
+def _release(
+    released: pd.DataFrame,
+    key_list: list,
+    fold: Fold,
+    inners: dict,
+    out_cols: list,
+    final: bool = False,
+) -> "tuple[list, pd.DataFrame | None]":
+    """Fold one bucket's released rows, already in release order, key
+    by key: each logical key's rows go to ``fold`` as row dicts with
+    the key's inner state, and ``inners`` keeps the state it returns.
+    Row dicts are materialized once for the whole bucket and the
+    output is ONE frame per bucket — per-key DataFrame slicing,
+    converting and building was ~75% of the streaming CEP fold's cost
+    at sf5 (round 14 profile). ``final`` is drain's end-of-input call
+    to a fold that takes ``final``: every key in ``inners`` is folded,
+    with ``[]`` when it has no released rows, so a fold holding
+    emittable rows in its inner state flushes them. Returns the keys
+    folded and the output frame in ``out_cols`` (None if empty)."""
+    groups: dict[tuple, list] = {}
+    for r in rows_of_frame(released):
+        kt = tuple(
+            None if pd.isna(v) else v for v in (r[c] for c in key_list)
+        )
+        groups.setdefault(kt, []).append(r)
+    if final:
+        for kt in inners:
+            groups.setdefault(kt, [])
+    out_rows: list = []
+    for kt, rows in groups.items():
+        if final:
+            inner, orows = fold(inners.get(kt), rows, True)
+        else:
+            inner, orows = fold(inners.get(kt), rows)
+        inners[kt] = inner
+        if orows:
+            out_rows.extend(orows)
+    out = pd.DataFrame(out_rows, columns=out_cols) if out_rows else None
+    return list(groups), out
+
+
 def watermark_buffered(
     df: DataFrame,
     key_cols: list[str],
@@ -294,11 +328,10 @@ def watermark_buffered(
     operator's ``DrainSpec`` so the runner can flush pending state at
     stop.
 
-    ``fold`` speaks the rows protocol: it takes this key's released
-    rows as a list of row dicts and returns its output rows as a list
-    (of dicts or column-ordered lists), and exposes
-    ``fold.rows_protocol = True`` and ``fold.out_cols(in_cols)``.
-    Drain hands it a sorted DataFrame instead (``drain_pending``).
+    ``fold`` takes this key's released rows as a list of row dicts
+    and returns its output rows as a list (of dicts or column-ordered
+    lists), or None; ``fold.out_cols(in_cols)`` names the output
+    columns.
 
     State is key-GROUPED: the state key is
     ``hash(key_cols) % key_groups``, one pickled
@@ -310,16 +343,12 @@ def watermark_buffered(
     (CEP NFA, OVER buffer, temporal versions) are untouched.
     ``key_groups`` must be the count the query's state was written
     with (``pinned_key_groups``); None sizes it for fresh state."""
-    if not getattr(fold, "rows_protocol", False):
-        raise TypeError(
-            "watermark_buffered: fold must speak the rows protocol"
-            " (fold.rows_protocol = True, fold.out_cols(in_cols))"
-        )
+    in_cols = list(df.columns)
     if drain_out is not None:
         drain_out.append(
             DrainSpec(
                 key_cols, ts_col, sort_cols, fold, out_schema,
-                in_cols=list(df.columns), sort_asc=sort_asc,
+                in_cols, sort_asc=sort_asc,
             )
         )
     if _KG in df.columns:
@@ -330,6 +359,7 @@ def watermark_buffered(
     if key_groups is None:
         key_groups = sized_key_groups(df.sparkSession)
     key_list = list(key_cols)
+    out_cols = fold.out_cols(in_cols)
     asc = sort_asc if sort_asc is not None else True
     # NaT's epoch-µs value: the `>` cut below drops NULL event times
     nat_us = -(2**63)
@@ -401,38 +431,16 @@ def watermark_buffered(
                 )
                 pending = pending[~mask].reset_index(drop=True)
                 pts = pts[~mask]
-                # materialize row dicts ONCE for the whole bucket's
-                # released frame and assemble ONE output DataFrame per
-                # bucket call — the per-key DataFrame slice/convert/
-                # construct machinery was ~75% of the streaming CEP
-                # fold's cost at sf5 (round 14 profile: _row_dicts
-                # 41%, per-key output frames 33%, the NFA itself ~20%)
-                groups: dict[tuple, list] = {}
-                for r in rows_of_frame(released):
-                    kt = tuple(
-                        None if pd.isna(v) else v
-                        for v in (r[c] for c in key_list)
-                    )
-                    groups.setdefault(kt, []).append(r)
-                out_rows: list = []
-                for kt, grp_rows in groups.items():
-                    inner, orows = fold(inners.get(kt), grp_rows)
-                    inners[kt] = inner
+                folded, out = _release(
+                    released, key_list, fold, inners, out_cols
+                )
+                for kt in folded:
                     f = frontiers.get(kt)
                     frontiers[kt] = (
                         wm_us if f is None else max(f, wm_us)
                     )
-                    if orows:
-                        out_rows.extend(orows)
-                if out_rows:
-                    outs.append(
-                        pd.DataFrame(
-                            out_rows,
-                            columns=fold.out_cols(
-                                list(released.columns)
-                            ),
-                        )
-                    )
+                if out is not None:
+                    outs.append(out)
         state.update(
             (pickle.dumps((pending, pts, frontiers, inners)),)
         )
@@ -561,38 +569,20 @@ def drain_pending(
         else spark.createDataFrame([], spec.out_schema).schema
     )
     names = [f.name for f in struct.fields]
-    fold, sort_cols, in_cols = spec.fold, spec.sort_cols, spec.in_cols
+    fold, sort_cols = spec.fold, spec.sort_cols
+    out_cols = fold.out_cols(spec.in_cols)
     sort_asc = spec.sort_asc if spec.sort_asc is not None else True
     # a 3-parameter fold is END-OF-INPUT aware: drain calls it with
     # final=True so folds holding emittable rows in their INNER state
     # (streaming CEP's match-buffer tail) flush them like batch EOF
     # would; 2-parameter folds (OVER, temporal join) emit only from
-    # released rows, so empty-pending keys are skipped outright
-    final_aware = len(inspect.signature(fold).parameters) >= 3
-
+    # released rows, so keys with nothing pending are skipped
+    final = len(inspect.signature(fold).parameters) >= 3
     key_list = list(spec.key_cols)
+    empty = pd.DataFrame(columns=spec.in_cols)
 
     def release(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         outs = []
-
-        def run_key(pending_grp, inner) -> None:
-            has_pending = pending_grp is not None and len(pending_grp)
-            if not has_pending and not final_aware:
-                return
-            released = (
-                pending_grp.sort_values(
-                    sort_cols, ascending=sort_asc, kind="mergesort"
-                )
-                if has_pending
-                else pd.DataFrame(columns=in_cols or [])
-            )
-            if final_aware:
-                _, out = fold(inner, released, True)
-            else:
-                _, out = fold(inner, released)
-            if out is not None and len(out):
-                outs.append(out.reindex(columns=names))
-
         for pdf in batches:
             for blob in pdf["s"]:
                 if blob is None:
@@ -600,68 +590,23 @@ def drain_pending(
                 pending, _pts, _frontiers, inners = _load_bucket(
                     bytes(blob)
                 )
-                # key-grouped layout (round 13): one bucket blob holds
-                # the bucket's pending frame + per-logical-key inner
-                # states — drain each logical key like a final
-                # infinite watermark would, in deterministic order
-                groups: dict = {}
-                if pending is not None and len(pending):
-                    for kt, grp in pending.groupby(
-                        key_list, sort=False, dropna=False
-                    ):
-                        groups[_norm_key(kt)] = grp
-                for kt in dict.fromkeys(
-                    list(groups)
-                    + [k for k in inners if k not in groups]
-                ):
-                    inner = inners.get(kt)
-                    grp = groups.get(kt)
-                    if inner is None and grp is None:
-                        continue
-                    run_key(grp, inner)
+                # release every pending row of the bucket, as a final
+                # infinite watermark would
+                released = (
+                    pending.sort_values(
+                        sort_cols, ascending=sort_asc, kind="mergesort"
+                    )
+                    if pending is not None and len(pending)
+                    else empty
+                )
+                _, out = _release(
+                    released, key_list, fold, inners, out_cols, final
+                )
+                if out is not None:
+                    outs.append(out.reindex(columns=names))
         if outs:
             yield pd.concat(outs, ignore_index=True)
 
     return st.select(
         F.col("value.groupState.s").alias("s")
     ).mapInPandas(release, struct)
-
-
-def ordered_assert_apply(
-    df: DataFrame,
-    key_cols: list[str],
-    sort_cols: list[str],
-    fold: Fold,
-    out_schema: StructType | str,
-    sort_asc: "list[bool] | None" = None,
-) -> DataFrame:
-    """The unbuffered front end — for sources WITHOUT a watermark,
-    where buffering would deadlock (nothing ever releases). Each
-    batch's rows are sorted and folded directly; the fold's own
-    monotonicity check raises loudly on out-of-order arrival across
-    micro-batches (the pre-round-7 ordered-ingest contract, now the
-    documented fallback)."""
-
-    def update(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        new = pd.concat(list(batches)).sort_values(
-            sort_cols,
-            ascending=sort_asc if sort_asc is not None else True,
-            kind="mergesort",
-        )
-        inner = state.get[0] if state.exists else None
-        inner, out = fold(inner, new)
-        state.update((inner,))
-        if out is not None and len(out):
-            yield out
-
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        update,
-        out_schema,
-        "s binary",
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )

@@ -44,6 +44,7 @@ from flink_streaming_platform_web_spark.functions.flink_compat import (
 from flink_streaming_platform_web_spark.sources import registry
 from flink_streaming_platform_web_spark.sources.ddl import (
     TableDef,
+    WatermarkDef,
     parse_create_table,
 )
 from flink_streaming_platform_web_spark.sql.script import (
@@ -1314,36 +1315,24 @@ class JobRunner:
             streaming_over,
         )
 
-        src_df = self.spark.table(over.src)
-        src_tbl = self.tables.get(over.src)
-        # watermarked source → Flink's row-time OverAggregate
-        # contract: buffer out-of-order rows until the watermark
-        # passes them (ooo.watermark_buffered); unwatermarked sources
-        # keep the ordered-assert fallback
-        buffered = (
-            src_tbl is not None
-            and src_tbl.watermark is not None
-            and bool(src_tbl.watermark.delay)
-            and src_tbl.watermark.column == over.ts_col
-        )
+        self._event_time_watermark(over.src, over.ts_col, "OVER")
         drains: list = []
         out = streaming_over(
-            src_df,
+            self.spark.table(over.src),
             over.part_cols,
             over.ts_col,
             over.mode,
             over.size,
             over.aggs,
             over.out_cols,
-            buffered=buffered,
             drain_out=drains,
-            key_groups=self._key_groups(sink, idx) if buffered else None,
+            key_groups=self._key_groups(sink, idx),
         )
         self._write_stream(
             self._align_to_sink(out, sink), sink, idx, result,
             # stop-with-drain: fold output is already in out_cols
             # order — no post-projection needed
-            drain=(drains[0], lambda d: d) if drains else None,
+            drain=(drains[0], lambda d: d),
         )
 
     _TEMPORAL_RE = re.compile(
@@ -1455,21 +1444,14 @@ class JobRunner:
                 )
             tgt.append((col, name or col))
         build_ts = self.tables[dim].watermark.column
-        probe_wm = self.tables[probe].watermark
+        self._event_time_watermark(
+            probe, m.group("ascol"), "event-time temporal join"
+        )
         sink = self.tables.get(job.target)
         if sink is None:
             raise ValueError(
                 f"temporal join sink {job.target!r} must be declared"
             )
-        # both sides watermarked → Flink's TemporalRowTimeJoinOperator
-        # contract: buffer out-of-order rows until the two-input
-        # watermark passes them; a probe without a watermark keeps
-        # the ordered-assert fallback
-        buffered = (
-            probe_wm is not None
-            and bool(probe_wm.delay)
-            and probe_wm.column == m.group("ascol")
-        )
         drains: list = []
         out = event_time_temporal_join(
             self.spark.table(probe),
@@ -1480,9 +1462,8 @@ class JobRunner:
             build_ts,
             probe_out,
             build_out,
-            buffered=buffered,
             drain_out=drains,
-            key_groups=self._key_groups(sink, idx) if buffered else None,
+            key_groups=self._key_groups(sink, idx),
         )
         # restore select-list column order (probe/build interleave)
         order = []
@@ -1498,10 +1479,7 @@ class JobRunner:
             self._align_to_sink(out, sink), sink, idx, result,
             # stop-with-drain: replay the select-list reorder on the
             # drained fold output before the sink align
-            drain=(
-                (drains[0], lambda d, _o=tuple(order): d.select(*_o))
-                if drains else None
-            ),
+            drain=(drains[0], lambda d, _o=tuple(order): d.select(*_o)),
         )
 
     def _run_match_recognize(
@@ -1555,21 +1533,9 @@ class JobRunner:
                 " declared table"
             )
         if src.isStreaming:
-            tbl_def = self.tables.get(tbl)
-            wm = tbl_def.watermark if tbl_def is not None else None
-            if (
-                wm is None
-                or not wm.delay
-                or wm.column != spec.order_by[0]
-            ):
-                raise ValueError(
-                    "MATCH_RECOGNIZE on a streaming source needs a"
-                    " WATERMARK on its first ORDER BY column"
-                    f" ({spec.order_by[0]!r}) — the matcher buffers"
-                    " out-of-order rows behind the watermark"
-                    " (Flink CepOperator semantics); declare one or"
-                    " run the job in batch mode"
-                )
+            wm = self._event_time_watermark(
+                tbl, spec.order_by[0], "MATCH_RECOGNIZE"
+            )
             # foreachBatch tier route (round 15): tier-eligible shapes
             # run the BATCH tier SQL over the watermark-released
             # frames per micro-batch — zero Python in the per-batch
@@ -1590,7 +1556,6 @@ class JobRunner:
                 src,
                 spec,
                 cep.infer_output_schema(spec, src),
-                buffered=True,
                 drain_out=drains,
                 key_groups=self._key_groups(sink, idx),
             )
@@ -1606,7 +1571,7 @@ class JobRunner:
 
             self._write_stream(
                 self._align_to_sink(df, sink), sink, idx, result,
-                drain=(drains[0], post) if drains else None,
+                drain=(drains[0], post),
             )
             return
         matched = cep.match_recognize(
@@ -2116,6 +2081,28 @@ class JobRunner:
         elif temp is not None:
             q = DrainingQuery(q, None, temp)
         result.streaming_queries.append(q)
+
+    def _event_time_watermark(
+        self, table: str, col: str, op: str
+    ) -> WatermarkDef:
+        """Plan-time check for the event-time streaming operators
+        (OVER, the event-time temporal join, MATCH_RECOGNIZE): the
+        source ``table`` must declare a WATERMARK on ``col``, the
+        operator's ordering column. Flink 1.13 rejects these
+        operators unless they order by a watermarked time attribute,
+        and their watermark buffer (ooo.watermark_buffered) releases
+        nothing without one. Returns the watermark."""
+        tdef = self.tables.get(table)
+        wm = tdef.watermark if tdef is not None else None
+        if wm is None or wm.column != col:
+            raise ValueError(
+                f"streaming {op} over {table!r} needs a WATERMARK on"
+                f" its ordering column {col!r}: the operator buffers"
+                " out-of-order rows until the watermark passes them"
+                " (as Flink's does); declare one or run the job in"
+                " batch mode"
+            )
+        return wm
 
     def _key_groups(self, sink: TableDef, idx: int) -> int:
         """Key-group count for the buffered operator of INSERT

@@ -216,7 +216,6 @@ def streaming_over(
     size: float | int | None,
     aggs: list[tuple[str, str | None, int | None, str]],
     out_cols: list[str],
-    buffered: bool = False,
     drain_out: "list | None" = None,
     key_groups: "int | None" = None,
 ) -> DataFrame:
@@ -233,12 +232,10 @@ def streaming_over(
     rows newer than max_ts - range; rows-mode: the last n rows;
     unbounded: O(1) accumulators — the incremental fold, never a
     buffer). RANGE frames include equal-timestamp peers on both sides
-    (the SQL frame contract). ``buffered=True`` (the default route for
-    watermarked sources) runs the fold behind the watermark-buffered
-    out-of-order front end (ooo.watermark_buffered — Flink's
-    OverAggregate row-time buffering); without a watermark the
-    ordered-assert front end applies and out-of-order arrival across
-    micro-batches raises loudly (the documented fallback contract).
+    (the SQL frame contract). The fold runs behind the
+    watermark-buffered out-of-order front end (ooo.watermark_buffered
+    — Flink's OverAggregate row-time buffering), so ``df`` must carry
+    a watermark on ``ts_col``.
 
     ``aggs``: (fn, col, dec_scale, alias). SUM over doubles must
     declare a decimal scale (the cross-engine carrier — raw
@@ -299,70 +296,25 @@ def streaming_over(
             return int(v)
         return v
 
-    def fold(
-        inner: bytes | None, new: "pd.DataFrame | list"
-    ) -> "tuple[bytes, pd.DataFrame | list]":
-        # `new` arrives sorted by ts_col (stable) from the front end.
-        # rows protocol (round 14): the buffered front end passes this
-        # key's slice as a plain row-dict list (values already Python
-        # natives, timestamps as pd.Timestamp) and takes raw output
-        # rows back — the per-key DataFrame machinery was the
-        # dominant fold cost at sf5. The DataFrame path stays for the
-        # ordered-assert route and drain.
-        as_rows = isinstance(new, list)
-        if as_rows:
-            rows_in = new
-            # NaT → int64 min, matching the datetime64[us]→int64
-            # cast of the frame path
-            ts_us = [
-                (-(2**63)) if pd.isna(v) else v.value // 1000
-                for v in (r[ts_col] for r in rows_in)
-            ]
-        else:
-            rows_in = None
-            ts_us = (
-                pd.to_datetime(new[ts_col])
-                .values.astype("datetime64[us]")
-                .astype("int64")
-            )
-        # buffer rows carry only the agg inputs + timestamp; raw
-        # column arrays instead of to_dict("records") — pandas pays
-        # ~1 ms of per-call machinery regardless of frame size, and
-        # the key-grouped front end calls this fold once per logical
-        # key per batch on ~10-row frames (round 13)
-        if agg_cols:
-            # NaN → None (mirroring ooo._norm_key): a null in a
-            # nullable integer agg column arrives as float NaN after
-            # pandas' promotion, passes the `is None` guards, and
-            # int(nan) in prep() would crash the fold — SQL semantics
-            # skip nulls, so normalize them back to None here
-            if as_rows:
-                new_buf = [
-                    {
-                        "__ts": int(t),
-                        **{
-                            c: (
-                                None if pd.isna(r[c]) else r[c]
-                            )
-                            for c in agg_cols
-                        },
-                    }
-                    for t, r in zip(ts_us, rows_in)
-                ]
-            else:
-                a_arrs = [new[c].to_numpy() for c in agg_cols]
-                new_buf = [
-                    {
-                        "__ts": int(t),
-                        **{
-                            c: (None if pd.isna(v) else v)
-                            for c, v in zip(agg_cols, vals)
-                        },
-                    }
-                    for t, vals in zip(ts_us, zip(*a_arrs))
-                ]
-        else:
-            new_buf = [{"__ts": int(t)} for t in ts_us]
+    def fold(inner: bytes | None, rows_in: list) -> "tuple[bytes, list]":
+        # `rows_in`: this key's released row dicts, sorted by ts_col
+        # (stable); NaT → int64 min
+        ts_us = [
+            (-(2**63)) if pd.isna(v) else v.value // 1000
+            for v in (r[ts_col] for r in rows_in)
+        ]
+        # buffer rows carry only the agg inputs + timestamp. NaN →
+        # None: a null in a nullable integer agg column arrives as
+        # float NaN after pandas' promotion, passes the `is None`
+        # guards, and int(nan) in prep() would crash the fold — SQL
+        # semantics skip nulls, so normalize them back to None here
+        new_buf = [
+            {
+                "__ts": int(t),
+                **{c: (None if pd.isna(r[c]) else r[c]) for c in agg_cols},
+            }
+            for t, r in zip(ts_us, rows_in)
+        ]
         if mode in ("range", "rows"):
             buf: list[dict] = (
                 pickle.loads(inner) if inner is not None else []
@@ -371,8 +323,8 @@ def streaming_over(
                 raise RuntimeError(
                     "streaming OVER: out-of-order ingest — batch"
                     f" starts at {new_buf[0]['__ts']} before buffered"
-                    f" {buf[-1]['__ts']}; stage the stream"
-                    " event-time-ordered"
+                    f" {buf[-1]['__ts']}; the watermark buffer released"
+                    " a key's rows behind its frontier"
                 )
             full = buf + new_buf
             all_ts = [r["__ts"] for r in full]
@@ -494,14 +446,14 @@ def streaming_over(
                 and new_buf
                 and new_buf[0]["__ts"] < prev_max
             ):
-                # same ingest contract as the buffered modes — an
+                # same frontier invariant as the framed modes — an
                 # out-of-order row would silently fold into totals
                 # the already-emitted rows never saw
                 raise RuntimeError(
                     "streaming OVER: out-of-order ingest — batch"
                     f" starts at {new_buf[0]['__ts']} before"
-                    f" processed {prev_max}; stage the stream"
-                    " event-time-ordered"
+                    f" processed {prev_max}; the watermark buffer"
+                    " released a key's rows behind its frontier"
                 )
             out_vals = {a: [] for _, _, _, a in aggs}
             i = 0
@@ -559,41 +511,23 @@ def streaming_over(
                     else max(prev_max, new_buf[-1]["__ts"])
                 )
             inner = pickle.dumps((prev_max, accs))
-        if as_rows:
-            return inner, [
-                [
-                    out_vals[c][i] if c in out_vals else rows_in[i][c]
-                    for c in out_cols
-                ]
-                for i in range(len(rows_in))
-            ]
-        out = pd.DataFrame(
-            {
-                c: (
-                    out_vals[c]
-                    if c in out_vals
-                    else new[c].to_numpy()
-                )
+        return inner, [
+            [
+                out_vals[c][i] if c in out_vals else rows_in[i][c]
                 for c in out_cols
-            }
-        )
-        return inner, out
+            ]
+            for i in range(len(rows_in))
+        ]
 
-    fold.rows_protocol = True
     fold.out_cols = lambda in_cols: list(out_cols)
 
     from flink_streaming_platform_web_spark.streaming.ooo import (
-        ordered_assert_apply,
         watermark_buffered,
     )
 
-    if buffered:
-        return watermark_buffered(
-            df, part_cols, ts_col, [ts_col], fold, out_schema(),
-            drain_out=drain_out, key_groups=key_groups,
-        )
-    return ordered_assert_apply(
-        df, part_cols, [ts_col], fold, out_schema()
+    return watermark_buffered(
+        df, part_cols, ts_col, [ts_col], fold, out_schema(),
+        drain_out=drain_out, key_groups=key_groups,
     )
 
 

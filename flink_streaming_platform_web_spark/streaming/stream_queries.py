@@ -1063,7 +1063,7 @@ def _displace_across_cuts(chunks, ts_col, window):
     which stays behind to anchor the watermark) are MOVED into chunk
     i+1 — so they arrive a full micro-batch late, behind rows with
     larger timestamps. The watermark-buffered front end must reorder
-    them (the ordered-assert front end would raise). ``window`` must
+    them. ``window`` must
     stay safely inside the source's declared watermark delay or the
     displaced rows would be late-dropped and diverge from the batch
     oracle."""

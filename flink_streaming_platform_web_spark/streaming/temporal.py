@@ -21,15 +21,13 @@ Spark-first rebuild is the same shape:
   (what Flink's watermark does) — state per key = active version +
   any future-dated versions, not the full history.
 
-Ingest order: with ``buffered=True`` (the default route when both
-sides carry watermarks) the unioned stream runs behind the
-watermark-buffered out-of-order front end (ooo.watermark_buffered) —
-rows are held in keyed state until the global watermark (the min of
-both sides' watermarks, Spark's union rule — the same two-input
-watermark rule as Flink's TemporalRowTimeJoinOperator) passes them,
-then fold in (event_time, side) order; late rows are dropped.
-Unwatermarked sources fall back to the ordered-assert front end
-(per-key time-ordered arrival across micro-batches, raising loudly).
+Ingest order: the unioned stream runs behind the watermark-buffered
+out-of-order front end (ooo.watermark_buffered), so both sides must
+carry a watermark on their event-time column — rows are held in keyed
+state until the global watermark (the min of both sides' watermarks,
+Spark's union rule — the same two-input watermark rule as Flink's
+TemporalRowTimeJoinOperator) passes them, then fold in
+(event_time, side) order; late rows are dropped.
 
 Scale shape: one shuffle keying both streams; state sharded per key
 across executors (Flink's keyed-state layout); per-batch work is
@@ -56,7 +54,6 @@ def event_time_temporal_join(
     build_ts: str,
     probe_out: list[tuple[str, str]],  # (source col, output name)
     build_out: list[tuple[str, str]],
-    buffered: bool = False,
     drain_out: "list | None" = None,
     key_groups: "int | None" = None,
 ) -> DataFrame:
@@ -113,8 +110,8 @@ def event_time_temporal_join(
     unioned = tagged_build.unionByName(tagged_probe)
 
     def fold(
-        inner: bytes | None, new: "pd.DataFrame | list"
-    ) -> "tuple[bytes, pd.DataFrame | list | None]":
+        inner: bytes | None, rows: list
+    ) -> "tuple[bytes, list | None]":
         import bisect
 
         versions: list[tuple[int, tuple]]
@@ -122,28 +119,15 @@ def event_time_temporal_join(
             versions, max_ts = pickle.loads(inner)
         else:
             versions, max_ts = [], None
-        # rows protocol (round 14): the buffered front end passes row
-        # dicts directly; the per-key to_dict("records") +
-        # to_datetime machinery dominated the fold at scale
-        as_rows = isinstance(new, list)
-        if as_rows:
-            rows = new
-            ts_us = [
-                (-(2**63)) if pd.isna(v) else v.value // 1000
-                for v in (r["__ts"] for r in rows)
-            ]
-        else:
-            ts_us = (
-                pd.to_datetime(new["__ts"])
-                .values.astype("datetime64[us]")
-                .astype("int64")
-            )
-            rows = new.to_dict("records")
+        ts_us = [
+            (-(2**63)) if pd.isna(v) else v.value // 1000
+            for v in (r["__ts"] for r in rows)
+        ]
         if max_ts is not None and len(rows) and int(ts_us[0]) < max_ts:
             raise RuntimeError(
                 "temporal join: out-of-order ingest — batch starts at"
-                f" {ts_us[0]} before processed {max_ts}; stage both"
-                " sides event-time-ordered on shared boundaries"
+                f" {ts_us[0]} before processed {max_ts}; the watermark"
+                " buffer released a key's rows behind its frontier"
             )
         vts = [t for t, _ in versions]
         out: list[list] = []  # probe outputs in p_names + b_names order
@@ -171,34 +155,21 @@ def event_time_temporal_join(
             i = bisect.bisect_right(vts, max_ts)
             if i > 1:
                 versions = versions[i - 1:]
-        if as_rows:
-            return pickle.dumps((versions, max_ts)), out or None
-        return (
-            pickle.dumps((versions, max_ts)),
-            pd.DataFrame(out, columns=p_names + b_names)
-            if out
-            else None,
-        )
+        return pickle.dumps((versions, max_ts)), out or None
 
-    fold.rows_protocol = True
     fold.out_cols = lambda in_cols: p_names + b_names
 
     from flink_streaming_platform_web_spark.streaming.ooo import (
-        ordered_assert_apply,
         watermark_buffered,
     )
 
-    if buffered:
-        return watermark_buffered(
-            unioned,
-            key_cols,
-            "__ts",
-            ["__ts", "__side"],
-            fold,
-            out_schema,
-            drain_out=drain_out,
-            key_groups=key_groups,
-        )
-    return ordered_assert_apply(
-        unioned, key_cols, ["__ts", "__side"], fold, out_schema
+    return watermark_buffered(
+        unioned,
+        key_cols,
+        "__ts",
+        ["__ts", "__side"],
+        fold,
+        out_schema,
+        drain_out=drain_out,
+        key_groups=key_groups,
     )

@@ -98,9 +98,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     parquet scan because no data is materialized or cached here (only
     the file's schema, by ``read_parquet``).
 
-    The driver's `events` parquet stores `ts` as INT64
-    TIMESTAMP(NANOS), which Spark's reader rejects. We read nanos as
-    long (runtime-settable legacy conf) and floor-truncate to
+    The corpus `events` parquet stores `ts` as INT64
+    TIMESTAMP(MICROS, not UTC-adjusted), which Spark reads as
+    `timestamp_ntz` with no rewrite. An `events` file that stores it as
+    TIMESTAMP(NANOS), which Spark's reader rejects, is read with nanos
+    as long (runtime-settable legacy conf) and floor-truncated to
     microseconds — exactly what DuckDB's TIMESTAMP_NS→µs conversion
     does, so both engines see identical instants.
     """

@@ -449,39 +449,11 @@ def test_within_bounds_matches(spark):
     assert out == [(0.0, 2), (12.0, 2)]
 
 
-def test_stream_match_recognize_spans_batches(spark, tmp_path):
+def test_stream_match_recognize_spans_batches():
     """A match whose rows span micro-batches must be assembled from
     keyed state: batch 1 ends mid-streak (pending, nothing emitted
     for it), batch 2 continues then breaks the streak — only then is
     the match closed and emitted."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = tmp_path / "mr_stream"
-    d.mkdir()
-
-    def write(rows, name, mt):
-        tbl = pa.table(
-            {
-                "k": pa.array([r[0] for r in rows]),
-                "t": pa.array([r[1] for r in rows], type=pa.int64()),
-                "v": pa.array([r[2] for r in rows], type=pa.float64()),
-            }
-        )
-        f = str(d / name)
-        pq.write_table(tbl, f)
-        os.utime(f, (mt, mt))
-
-    now = time.time()
-    write([("a", 1, 1.0), ("a", 2, 2.0)], "f1.parquet", now)
-    write(
-        [("a", 3, 3.0), ("a", 4, 0.5), ("a", 5, 9.0)],
-        "f2.parquet",
-        now + 2,
-    )
     clause = """
       PARTITION BY k
       ORDER BY t
@@ -492,30 +464,15 @@ def test_stream_match_recognize_spans_batches(spark, tmp_path):
       PATTERN (S U+)
       DEFINE U AS U.v > PREV(U.v)
     """
-    spec = cep.parse_match_recognize(clause)
-    stream = (
-        spark.readStream.schema("k STRING, t BIGINT, v DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    out = cep.stream_match_recognize(
-        stream, spec, "k string, start_t bigint, end_t bigint,"
-        " n_up bigint"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("mr_span")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(60)
     got = sorted(
         (r["start_t"], r["end_t"], r["n_up"])
-        for r in spark.table("mr_span").collect()
+        for r in _mr_stream_run(
+            [
+                [("a", 1, 1.0), ("a", 2, 2.0)],
+                [("a", 3, 3.0), ("a", 4, 0.5), ("a", 5, 9.0)],
+            ],
+            clause,
+        )
     )
     # streak 1..3 spans the file boundary and closes at t=4; the
     # trailing 4↗5 streak stays PENDING (no closing row) — exactly
@@ -523,54 +480,20 @@ def test_stream_match_recognize_spans_batches(spark, tmp_path):
     assert got == [(1, 3, 2)]
 
 
-def _mr_stream_run(spark, tmp_path, name, batches, clause, out_schema):
-    """Write each batch as a parquet file (one micro-batch each via
-    maxFilesPerTrigger=1), run stream_match_recognize, return the
-    converged memory-sink rows."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = tmp_path / name
-    d.mkdir()
-    now = time.time()
-    for i, rows in enumerate(batches):
-        tbl = pa.table(
-            {
-                "k": pa.array([r[0] for r in rows]),
-                "t": pa.array([r[1] for r in rows], type=pa.int64()),
-                "v": pa.array([r[2] for r in rows], type=pa.float64()),
-            }
-        )
-        f = str(d / f"f{i}.parquet")
-        pq.write_table(tbl, f)
-        os.utime(f, (now + 2 * i, now + 2 * i))
-    spec = cep.parse_match_recognize(clause)
-    stream = (
-        spark.readStream.schema("k STRING, t BIGINT, v DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    out = cep.stream_match_recognize(stream, spec, out_schema)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    return spark.table(name).collect()
+def _mr_stream_run(batches, clause, cols=("k", "t", "v")):
+    """Feed one key's micro-batches (tuples in ``cols`` order) through
+    the streaming fold (``cep._stream_fold``) as the watermark buffer
+    releases them, and return the emitted rows. No drain follows, so
+    matches still pending at the end stay unemitted."""
+    fold = cep._stream_fold(cep.parse_match_recognize(clause))
+    state, got = None, []
+    for rows in batches:
+        state, out = fold(state, [dict(zip(cols, r)) for r in rows])
+        got.extend(out or [])
+    return got
 
 
-def test_stream_match_skip_to_var_overlaps_across_batches(
-    spark, tmp_path
-):
+def test_stream_match_skip_to_var_overlaps_across_batches(spark):
     """AFTER MATCH SKIP TO LAST <var> streaming (round 10 late):
     consecutive matches SHARE the resume row, and the shared row sits
     exactly on a micro-batch cut — the start-based emission frontier
@@ -596,10 +519,8 @@ def test_stream_match_skip_to_var_overlaps_across_batches(
     got = sorted(
         (r["start_t"], r["top_t"], r["top_v"])
         for r in _mr_stream_run(
-            spark, tmp_path, "mr_tolast",
             [rows[:4], rows[4:]],  # cut mid-second-match
             clause,
-            "k string, start_t bigint, top_t bigint, top_v double",
         )
     )
     assert got == [(0, 2, 3.0), (2, 4, 5.0)]
@@ -619,7 +540,7 @@ def test_stream_match_skip_to_var_overlaps_across_batches(
     assert got == batch
 
 
-def test_stream_match_to_next_overlaps_across_batches(spark, tmp_path):
+def test_stream_match_to_next_overlaps_across_batches(spark):
     """SKIP TO NEXT ROW streaming: every predicate-true position
     emits, matches overlap freely, and a match whose rows straddle
     the cut assembles from state without re-emitting its
@@ -643,10 +564,8 @@ def test_stream_match_to_next_overlaps_across_batches(spark, tmp_path):
     got = sorted(
         (r["a_t"], r["b_t"])
         for r in _mr_stream_run(
-            spark, tmp_path, "mr_tonext",
             [rows[:2], rows[2:4], rows[4:]],
             clause,
-            "k string, a_t bigint, b_t bigint",
         )
     )
     import pandas as pd
@@ -675,6 +594,10 @@ def test_stream_fold_randomized_converges_to_batch():
     import random
 
     import pandas as pd
+
+    from flink_streaming_platform_web_spark.streaming.ooo import (
+        rows_of_frame,
+    )
 
     clauses = [
         # disjoint matches (the old end-based rule's domain)
@@ -743,22 +666,18 @@ def test_stream_fold_randomized_converges_to_batch():
                 prev = c
             state, got = None, []
             for ch in chunks:
-                state, out = fold(state, pd.DataFrame(ch))
-                if out is not None:
-                    got.extend(out.to_dict("records"))
-            _, out = fold(
-                state, pd.DataFrame([], columns=["k", "t", "v"]), True
-            )
-            if out is not None:
-                got.extend(out.to_dict("records"))
+                # row dicts boxed as the watermark buffer boxes them
+                state, out = fold(state, rows_of_frame(pd.DataFrame(ch)))
+                got.extend(out or [])
+            _, out = fold(state, [], True)
+            got.extend(out or [])
 
             def _denan(v):
-                # the fold hands Spark a pandas frame, where a None
-                # measure in a float64 column is NaN; the raw batch
-                # matcher emits dicts that keep None. Both real routes
-                # (batch applyInPandas / streaming state fold) coerce
-                # identically, so the fold-level differential
-                # normalizes rather than distinguishing them.
+                # both real routes (batch applyInPandas / streaming
+                # state fold) hand Spark a pandas frame, where a None
+                # measure in a float64 column is NaN, so the
+                # fold-level differential normalizes NaN and None
+                # rather than distinguishing them.
                 return (
                     None
                     if isinstance(v, float) and v != v
@@ -777,103 +696,38 @@ def test_stream_fold_randomized_converges_to_batch():
         assert want or clause, clause
 
 
-def test_stream_match_recognize_rejects_out_of_order(spark, tmp_path):
-    """The ordered-ingest contract is asserted, not assumed: a batch
-    starting before the buffered tail fails the query loudly."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = tmp_path / "mr_ooo"
-    d.mkdir()
-
-    def write(rows, name, mt):
-        tbl = pa.table(
-            {
-                "k": pa.array([r[0] for r in rows]),
-                "t": pa.array([r[1] for r in rows], type=pa.int64()),
-                "v": pa.array([r[2] for r in rows], type=pa.float64()),
-            }
+def test_stream_match_recognize_rejects_out_of_order():
+    """The fold asserts its per-key frontier invariant, not assumes
+    it: a batch starting before the buffered tail fails loudly."""
+    with pytest.raises(Exception, match="out-of-order"):
+        _mr_stream_run(
+            [
+                [("a", 10, 1.0), ("a", 11, 2.0)],
+                [("a", 3, 3.0)],  # late row
+            ],
+            """PARTITION BY k
+               ORDER BY t
+               MEASURES FIRST(S.t) AS start_t
+               ONE ROW PER MATCH
+               AFTER MATCH SKIP PAST LAST ROW
+               PATTERN (S U+)
+               DEFINE U AS U.v > PREV(U.v)""",
         )
-        f = str(d / name)
-        pq.write_table(tbl, f)
-        os.utime(f, (mt, mt))
-
-    now = time.time()
-    write([("a", 10, 1.0), ("a", 11, 2.0)], "f1.parquet", now)
-    write([("a", 3, 3.0)], "f2.parquet", now + 2)  # late row
-    spec = cep.parse_match_recognize(
-        """PARTITION BY k
-           ORDER BY t
-           MEASURES FIRST(S.t) AS start_t
-           ONE ROW PER MATCH
-           AFTER MATCH SKIP PAST LAST ROW
-           PATTERN (S U+)
-           DEFINE U AS U.v > PREV(U.v)"""
-    )
-    out = cep.stream_match_recognize(
-        stream := spark.readStream.schema(
-            "k STRING, t BIGINT, v DOUBLE"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d)),
-        spec,
-        "k string, start_t bigint",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("mr_ooo")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        with pytest.raises(Exception, match="out-of-order"):
-            q.processAllAvailable()
-            if q.exception() is not None:
-                raise q.exception()
-    finally:
-        try:  # stop() re-raises the query failure — already asserted
-            q.stop()
-            q.awaitTermination(60)
-        except Exception:
-            pass
 
 
-def test_stream_backtracked_match_stays_pending(spark, tmp_path):
+def test_stream_backtracked_match_stays_pending():
     """A match found by BACKTRACKING after a greedy quantifier hit the
     buffer end could still grow with future rows — it must stay
     pending, not emit early (code-review r5 finding): pattern (A+ B)
     over v=[1,5,1 | 1,5 | -1] has exactly ONE batch-semantics match
     (A=rows0-3, B=row4); a premature batch-1 emission would have
     produced A=[row0], B=row1."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = tmp_path / "mr_grow"
-    d.mkdir()
-
-    def write(rows, name, mt):
-        tbl = pa.table(
-            {
-                "k": pa.array([r[0] for r in rows]),
-                "t": pa.array([r[1] for r in rows], type=pa.int64()),
-                "v": pa.array([r[2] for r in rows], type=pa.float64()),
-            }
-        )
-        f = str(d / name)
-        pq.write_table(tbl, f)
-        os.utime(f, (mt, mt))
-
-    now = time.time()
-    write([("a", 1, 1.0), ("a", 2, 5.0), ("a", 3, 1.0)], "f1.parquet", now)
-    write([("a", 4, 1.0), ("a", 5, 5.0)], "f2.parquet", now + 2)
-    write([("a", 6, -1.0)], "f3.parquet", now + 4)
-    spec = cep.parse_match_recognize(
+    out = _mr_stream_run(
+        [
+            [("a", 1, 1.0), ("a", 2, 5.0), ("a", 3, 1.0)],
+            [("a", 4, 1.0), ("a", 5, 5.0)],
+            [("a", 6, -1.0)],
+        ],
         """PARTITION BY k
            ORDER BY t
            MEASURES FIRST(A.t) AS start_t, COUNT(A.*) AS n_a,
@@ -881,32 +735,9 @@ def test_stream_backtracked_match_stays_pending(spark, tmp_path):
            ONE ROW PER MATCH
            AFTER MATCH SKIP PAST LAST ROW
            PATTERN (A+ B)
-           DEFINE A AS A.v > 0, B AS B.v = 5"""
+           DEFINE A AS A.v > 0, B AS B.v = 5""",
     )
-    stream = (
-        spark.readStream.schema("k STRING, t BIGINT, v DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    out = cep.stream_match_recognize(
-        stream, spec,
-        "k string, start_t bigint, n_a bigint, b_t bigint",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("mr_grow")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    got = [
-        (r["start_t"], r["n_a"], r["b_t"])
-        for r in spark.table("mr_grow").collect()
-    ]
+    got = [(r["start_t"], r["n_a"], r["b_t"]) for r in out]
     assert got == [(1, 4, 5)]
 
 
@@ -1171,30 +1002,16 @@ def test_classifier_measure():
     assert [o[0]["var_name"] for _, _, o, _ in got2] == ["U", "D"]
 
 
-def test_stream_all_rows_per_match(spark, tmp_path):
+def test_stream_all_rows_per_match():
     """STREAMING MATCH_RECOGNIZE under ALL ROWS PER MATCH: a match
     closed by later input emits one row per matched row with RUNNING
     measures, matches spanning micro-batches."""
-    import json as _json
-    import os as _os
-
-    src = tmp_path / "allrows"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(
-            _json.dumps({"k": "a", "seq": s, "v": v})
-            for s, v in [(1, 1.0), (2, 5.0)]
-        )
-    )
-    (src / "b2.json").write_text(
-        "\n".join(
-            _json.dumps({"k": "a", "seq": s, "v": v})
-            for s, v in [(3, 7.0), (4, 0.0)]
-        )
-    )
-    t1 = _os.path.getmtime(src / "b1.json")
-    _os.utime(src / "b2.json", (t1 + 1, t1 + 1))
-    spec = cep.parse_match_recognize("""
+    out = _mr_stream_run(
+        [
+            [("a", 1, 1.0), ("a", 2, 5.0)],
+            [("a", 3, 7.0), ("a", 4, 0.0)],
+        ],
+        """
       PARTITION BY k
       ORDER BY seq
       MEASURES COUNT(*) AS step_no, LAST(UP.v) AS run_v
@@ -1202,33 +1019,11 @@ def test_stream_all_rows_per_match(spark, tmp_path):
       AFTER MATCH SKIP PAST LAST ROW
       PATTERN (STRT UP+)
       DEFINE UP AS UP.v > PREV(UP.v)
-    """)
-    stream = (
-        spark.readStream.schema("k string, seq bigint, v double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
+    """,
+        cols=("k", "seq", "v"),
     )
-    out = cep.stream_match_recognize(
-        stream,
-        spec,
-        "k string, seq bigint, v double, step_no bigint,"
-        " run_v double",
-    )
-    qname = f"allrows_{abs(hash(str(tmp_path)))}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(120)
     rows = sorted(
-        (r["seq"], r["v"], r["step_no"], r["run_v"])
-        for r in spark.table(qname).collect()
+        (r["seq"], r["v"], r["step_no"], r["run_v"]) for r in out
     )
     # the rising run 1→5→7 closes when 0.0 arrives; the STRT row's
     # running LAST(UP.v) is NULL
@@ -1812,18 +1607,23 @@ def test_global_pattern_streaming(spark, tmp_path):
         parse_match_recognize,
         stream_match_recognize,
     )
+    from flink_streaming_platform_web_spark.streaming.ooo import (
+        drain_pending,
+    )
 
     import random
 
     rng = random.Random(59)
+    t0 = pd.Timestamp("2024-01-01")
     rows = [
-        {"ts": i, "v": float(rng.randint(0, 9))} for i in range(120)
+        {"ts": t0 + pd.Timedelta(seconds=i), "v": float(rng.randint(0, 9))}
+        for i in range(120)
     ]
     pdf = pd.DataFrame(rows)
     src = tmp_path / "in"
     src.mkdir()
-    # ts-ordered files (ordered-assert front end requires per-key
-    # order across micro-batches)
+    # ts-ordered files: a later file's rows stay after the watermark
+    # the earlier ones set, so none is dropped late
     for i in range(0, 120, 40):
         spark.createDataFrame(pdf.iloc[i: i + 40]).coalesce(
             1
@@ -1849,24 +1649,39 @@ def test_global_pattern_streaming(spark, tmp_path):
         spark.readStream.schema(batch_df.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
+        .withWatermark("ts", "1 second")
     )
+    drains: list = []
     out = stream_match_recognize(
-        stream, spec, infer_output_schema(spec, batch_df)
+        stream, spec, infer_output_schema(spec, batch_df),
+        drain_out=drains,
     )
     qname = "global_cep_test"
+    ckpt = str(tmp_path / "ckpt")
     q = (
         out.writeStream.format("memory")
         .queryName(qname)
         .outputMode("append")
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
+    # stop-with-drain: the rows the watermark never passed
+    tail = drain_pending(spark, ckpt, drains[0])
     got = sorted(
-        map(tuple, spark.sql(f"SELECT * FROM {qname}").collect())
+        map(
+            tuple,
+            spark.sql(f"SELECT * FROM {qname}").collect()
+            + (
+                tail.select(*out.columns).collect()
+                if tail is not None
+                else []
+            ),
+        )
     )
-    # the stream holds back the still-growable tail match; everything
-    # emitted must be a prefix of the batch result
+    # everything emitted must be a prefix of the batch result (the
+    # drain closes the tail match as batch EOF does)
     assert got == want[: len(got)] or set(got) <= set(want)
     assert len(got) >= len(want) - 2
     assert got, "vacuous"
@@ -1879,8 +1694,6 @@ def test_stream_fold_attempt_cache_round_trips():
     walks via a counting wrapper — starts decided in batch 1 and
     retained must not be re-walked in batch 2."""
     import pickle
-
-    import pandas as pd
 
     clause = (
         "PARTITION BY k ORDER BY t"
@@ -1897,7 +1710,7 @@ def test_stream_fold_attempt_cache_round_trips():
         {"k": 1, "t": 2, "v": 20.0},
         {"k": 1, "t": 3, "v": 30.0},  # pending: A matched, B probes end
     ]
-    state, out = fold(None, pd.DataFrame(rows1))
+    state, out = fold(None, rows1)
     tail, cache, scan_from = pickle.loads(state)
     # t=0 emitted (start < frontier); the retained suffix starts at
     # the first undecided start; decided fails inside it are cached
@@ -1907,14 +1720,12 @@ def test_stream_fold_attempt_cache_round_trips():
     assert all(0 <= k2 < len(tail) for k2 in cache)
     # batch 2 closes everything; output must equal the batch matcher
     rows2 = [{"k": 1, "t": 4, "v": 70.0}]
-    state2, out2 = fold(state, pd.DataFrame(rows2))
-    _, out3 = fold(
-        state2, pd.DataFrame([], columns=["k", "t", "v"]), True
-    )
+    state2, out2 = fold(state, rows2)
+    _, out3 = fold(state2, [], True)
     got = []
     for o in (out, out2, out3):
         if o is not None:
-            got.extend(o["at"].tolist())
+            got.extend(r["at"] for r in o)
     want = [
         d["at"]
         for d in cep._match_partition(rows1 + rows2, spec)
@@ -1934,6 +1745,10 @@ def test_stream_fold_within_datetime_randomized():
     import random
 
     import pandas as pd
+
+    from flink_streaming_platform_web_spark.streaming.ooo import (
+        rows_of_frame,
+    )
 
     clause = (
         "PARTITION BY k ORDER BY ts"
@@ -1966,14 +1781,13 @@ def test_stream_fold_within_datetime_randomized():
         state, got = None, []
         prev = 0
         for c in cuts + [n]:
-            state, out = fold(state, pd.DataFrame(rows[prev:c]))
+            # row dicts boxed as the watermark buffer boxes them
+            state, out = fold(
+                state, rows_of_frame(pd.DataFrame(rows[prev:c]))
+            )
             prev = c
-            if out is not None:
-                got.extend(out.to_dict("records"))
-        _, out = fold(
-            state, pd.DataFrame([], columns=["k", "ts", "v"]), True
-        )
-        if out is not None:
-            got.extend(out.to_dict("records"))
+            got.extend(out or [])
+        _, out = fold(state, [], True)
+        got.extend(out or [])
         got_s = sorted(tuple(sorted(d.items())) for d in got)
         assert got_s == want, f"trial {trial}: {len(got_s)} vs {len(want)}"

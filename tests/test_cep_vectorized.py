@@ -1429,8 +1429,8 @@ def test_tiers_type_measures_like_infer_output_schema(spark):
 
 def test_row_value_types_are_python_natives():
     """ADVICE r13: both row-materialization paths (the batch
-    _ColRows lazy view and the streaming fold's _row_dicts) must
-    produce exactly to_dict('records') types — np.int64 leaking into
+    _ColRows lazy view and the streaming front end's rows_of_frame)
+    must produce exactly to_dict('records') types — np.int64 leaking into
     measure arithmetic wraps silently at 2**63 where Python ints
     stay exact. Pin natives for int/float/bool, pd.Timestamp (not
     np.datetime64) for datetimes, NaT preserved for datetime nulls,
@@ -1445,7 +1445,11 @@ def test_row_value_types_are_python_natives():
         }
     )
 
-    rows = cep._row_dicts(frame)
+    from flink_streaming_platform_web_spark.streaming.ooo import (
+        rows_of_frame,
+    )
+
+    rows = rows_of_frame(frame)
     cr = cep._ColRows(frame)
     for r in (rows[0], cr[0]):
         assert type(r["i"]) is int

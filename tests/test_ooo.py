@@ -708,8 +708,6 @@ def test_drain_resolves_buffered_operator_behind_second_stateful_op(
     operator 0 — drain_pending must resolve its id from the
     state-metadata reader and flush the pending tail, never unpickle
     the dedup operator's state."""
-    import pandas as pd
-
     from flink_streaming_platform_web_spark.streaming import ooo
 
     rows = [
@@ -727,20 +725,15 @@ def test_drain_resolves_buffered_operator_behind_second_stateful_op(
         .withWatermark("ts", "60 seconds")
     )
 
-    def fold(inner, new, final=False):
-        # rows protocol: row dicts from the buffer, a sorted frame
-        # from drain
-        rows = new if isinstance(new, list) else ooo.rows_of_frame(new)
+    def fold(inner, rows, final=False):
+        # row dicts from the buffer, live and at drain
         n = inner or 0
         out = [
             {"k": r["k"], "ts": r["ts"], "n": n + i}
             for i, r in enumerate(rows, 1)
         ]
-        if not isinstance(new, list):
-            out = pd.DataFrame(out, columns=["k", "ts", "n"])
         return n + len(rows), out
 
-    fold.rows_protocol = True
     fold.out_cols = lambda in_cols: ["k", "ts", "n"]
     drains: list = []
     buffered = ooo.watermark_buffered(

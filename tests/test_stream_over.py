@@ -17,7 +17,8 @@ from flink_streaming_platform_web_spark.streaming.runner import (
 
 _DDL = """
 CREATE TABLE ev (
-  k BIGINT, ts TIMESTAMP, v DOUBLE, n BIGINT
+  k BIGINT, ts TIMESTAMP, v DOUBLE, n BIGINT,
+  WATERMARK FOR ts AS ts - INTERVAL '1' SECOND
 ) WITH ('connector' = 'filesystem', 'path' = '{path}',
         'format' = 'json', 'source.max-files-per-trigger' = '1');
 """
@@ -31,6 +32,8 @@ def _write(path, name, rows):
 
 
 def _run(runner, script):
+    # stop() is stop-with-drain: it flushes the rows the watermark
+    # never passed into the sink
     result = runner.execute_script(script)
     for q in result.streaming_queries:
         q.processAllAvailable()
@@ -226,6 +229,39 @@ def test_double_sum_without_decimal_cast_is_loud(spark, tmp_path):
             """)
 
 
+@pytest.mark.parametrize(
+    "watermark",
+    ["", ",\n  WATERMARK FOR ts2 AS ts2 - INTERVAL '1' SECOND"],
+    ids=["unwatermarked", "watermark_on_other_column"],
+)
+def test_over_needs_watermark_on_order_column(spark, tmp_path, watermark):
+    """Flink 1.13 rejects a streaming OVER that does not order by a
+    watermarked time attribute: an unwatermarked source, or one whose
+    watermark sits on another column. So does the runner, at plan
+    time, before any query starts."""
+    src = str(tmp_path / "src")
+    _write(src, "f1.json", [
+        {"k": 1, "ts": "2024-01-01 00:00:01", "v": 1.0, "n": 1,
+         "ts2": "2024-01-01 00:00:01"},
+    ])
+    ddl = _DDL.format(path=src).replace(
+        "n BIGINT,\n  WATERMARK FOR ts AS ts - INTERVAL '1' SECOND",
+        "n BIGINT, ts2 TIMESTAMP" + watermark,
+    )
+    assert "WATERMARK FOR ts " not in ddl
+    runner = JobRunner(spark, mode="streaming")
+    with pytest.raises(ValueError, match="WATERMARK.*'ts'"):
+        runner.execute_script(ddl + """
+            CREATE TABLE over_sink (k BIGINT, n BIGINT, c BIGINT)
+              WITH ('connector' = 'memory');
+            INSERT INTO over_sink
+            SELECT k, n, COUNT(*) OVER w AS c
+            FROM ev
+            WINDOW w AS (PARTITION BY k ORDER BY ts
+                         ROWS BETWEEN 1 PRECEDING AND CURRENT ROW);
+            """)
+
+
 def test_differential_vs_batch_window(spark, tmp_path):
     """Randomized differential check: the stateful operator must
     equal Spark's own batch window functions on the same rows —
@@ -236,6 +272,9 @@ def test_differential_vs_batch_window(spark, tmp_path):
     import pyspark.sql.functions as F
     from pyspark.sql.window import Window
 
+    from flink_streaming_platform_web_spark.streaming.ooo import (
+        drain_pending,
+    )
     from flink_streaming_platform_web_spark.streaming.stateful import (
         streaming_over,
     )
@@ -304,7 +343,9 @@ def test_differential_vs_batch_window(spark, tmp_path):
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .json(read_path)
+            .withWatermark("ts", "1 second")
         )
+        drains: list = []
         out = streaming_over(
             stream,
             part_cols=["k"],
@@ -317,12 +358,15 @@ def test_differential_vs_batch_window(spark, tmp_path):
                 ("min", "n", None, "lo"),
             ],
             out_cols=["rid", "s", "c", "lo"],
+            drain_out=drains,
         )
         qname = f"diff_{mode}_{abs(hash(str(tmp_path)))}"
+        ckpt = str(tmp_path / f"ckpt_{mode}")
         q = (
             out.writeStream.format("memory")
             .queryName(qname)
             .outputMode("append")
+            .option("checkpointLocation", ckpt)
             .start()
         )
         try:
@@ -330,9 +374,12 @@ def test_differential_vs_batch_window(spark, tmp_path):
         finally:
             q.stop()
             q.awaitTermination(120)
+        # stop-with-drain: the rows the watermark never passed
+        tail = drain_pending(spark, ckpt, drains[0])
         got = {
             r["rid"]: (r["s"], r["c"], r["lo"])
             for r in spark.table(qname).collect()
+            + (tail.collect() if tail is not None else [])
         }
         ref_df = spark.read.schema(schema).json(read_path)
         w = Window.partitionBy("k").orderBy(

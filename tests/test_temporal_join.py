@@ -115,6 +115,29 @@ def test_non_equi_on_is_loud(spark, tmp_path):
         )
 
 
+def test_unwatermarked_probe_is_rejected_at_plan_time(spark, tmp_path):
+    """Flink 1.13 rejects an event-time temporal join whose probe has
+    no watermark on the AS OF column; so does the runner, before any
+    query starts."""
+    orders = str(tmp_path / "o3")
+    rates = str(tmp_path / "r3")
+    _write(orders, "c0.json", [
+        {"order_id": 1, "currency": "EUR",
+         "ts": "2024-01-01 00:00:01", "amount": 1.0},
+    ])
+    _write(rates, "c0.json", [
+        {"currency": "EUR", "rts": "2024-01-01 00:00:01", "rate": 1.0},
+    ])
+    script = _SCRIPT.format(orders=orders, rates=rates).replace(
+        "amount DOUBLE,\n  WATERMARK FOR ts AS ts - INTERVAL '60' SECOND",
+        "amount DOUBLE",
+    )
+    assert "WATERMARK FOR ts " not in script
+    runner = JobRunner(spark, mode="streaming")
+    with pytest.raises(ValueError, match="WATERMARK.*'ts'"):
+        runner.execute_script(script)
+
+
 def test_differential_vs_batch_asof(spark, tmp_path):
     """Randomized differential check: the streaming temporal join
     must equal a batch as-of join (per probe, the version with the
@@ -126,6 +149,9 @@ def test_differential_vs_batch_asof(spark, tmp_path):
     import pyspark.sql.functions as F
     from pyspark.sql.window import Window
 
+    from flink_streaming_platform_web_spark.streaming.ooo import (
+        drain_pending,
+    )
     from flink_streaming_platform_web_spark.streaming.temporal import (
         event_time_temporal_join,
     )
@@ -169,25 +195,31 @@ def test_differential_vs_batch_asof(spark, tmp_path):
 
     vschema = "k bigint, vts timestamp, rate double"
     pschema = "pid bigint, k bigint, pts timestamp, amt double"
+    drains: list = []
     out = event_time_temporal_join(
         spark.readStream.schema(pschema)
         .option("maxFilesPerTrigger", 1)
-        .json(str(pdir)),
+        .json(str(pdir))
+        .withWatermark("pts", "1 second"),
         spark.readStream.schema(vschema)
         .option("maxFilesPerTrigger", 1)
-        .json(str(vdir)),
+        .json(str(vdir))
+        .withWatermark("vts", "1 second"),
         ["k"],
         ["k"],
         "pts",
         "vts",
         [("pid", "pid"), ("amt", "amt")],
         [("rate", "rate")],
+        drain_out=drains,
     )
     qname = f"difftj_{abs(hash(str(tmp_path)))}"
+    ckpt = str(tmp_path / "ckpt")
     q = (
         out.writeStream.format("memory")
         .queryName(qname)
         .outputMode("append")
+        .option("checkpointLocation", ckpt)
         .start()
     )
     try:
@@ -195,8 +227,12 @@ def test_differential_vs_batch_asof(spark, tmp_path):
     finally:
         q.stop()
         q.awaitTermination(120)
+    # stop-with-drain: the rows the watermark never passed
+    tail = drain_pending(spark, ckpt, drains[0])
     got = {
-        r["pid"]: r["rate"] for r in spark.table(qname).collect()
+        r["pid"]: r["rate"]
+        for r in spark.table(qname).collect()
+        + (tail.collect() if tail is not None else [])
     }
     # batch as-of reference with Spark's own operators
     probes = spark.read.schema(pschema).json(str(pdir))

@@ -1,8 +1,15 @@
 """Streaming throughput micro-bench: rate source → watermarked tumble
 window agg → noop sink. Prints one JSON line with rows/sec processed.
 
-    python tools/stream_bench.py [seconds] [rows_per_second]
-    python tools/stream_bench.py rank [seconds] [rows_per_second]
+    python tools/stream_bench.py [MODE] [seconds] [rows_per_second]
+
+MODE is one of ``rank``, ``over_buffered``, ``temporal``, ``cep``,
+``cep_coarse``, ``cep_permute``, ``cep_overlap`` or ``pairs``;
+without one it runs the window agg. ``over_buffered``, ``temporal``
+and the ``cep*`` modes run the event-time operators behind their
+watermark buffer (streaming/ooo.py), so each side of their plan
+carries a watermark. ``pairs`` alternates ``cep_coarse`` and
+``cep_overlap`` twice in one session.
 
 ``rank`` mode drives the round-6 executor-side rank operator
 (streaming/stateful.retained_topn — the raw-mode streaming ROW_NUMBER
@@ -39,7 +46,7 @@ def main() -> None:
     args = sys.argv[1:]
     mode = "agg"
     if args and args[0] in (
-        "rank", "over", "over_buffered", "temporal", "cep",
+        "rank", "over_buffered", "temporal", "cep",
         "cep_coarse", "cep_permute", "cep_overlap", "pairs",
     ):
         mode = args[0]
@@ -58,7 +65,6 @@ def main() -> None:
             {
                 "metric": {
                     "rank": "rate_rank_topn_throughput",
-                    "over": "rate_over_agg_throughput",
                     "over_buffered": "rate_over_buffered_throughput",
                     "temporal": "rate_temporal_join_throughput",
                     "cep": "rate_cep_buffered_throughput",
@@ -156,21 +162,18 @@ def _plan(spark, mode: str, rps: int):
             rn_alias="rn",
             out_cols=["k", "v", "ts_s", "rn"],
         )
-    elif mode in ("over", "over_buffered"):
+    elif mode == "over_buffered":
         from flink_streaming_platform_web_spark.streaming.stateful import (
             streaming_over,
         )
 
+        # rows held in keyed state until the watermark passes them,
+        # released sorted into the OVER fold
         keyed = src.select(
             (F.col("value") % 1000).alias("k"),
             F.col("timestamp").alias("ts"),
             F.col("value").alias("v"),
-        )
-        if mode == "over_buffered":
-            # the round-8 watermark-buffered front end: rows held in
-            # keyed state until the watermark passes them, released
-            # sorted — the production route for watermarked sources
-            keyed = keyed.withWatermark("ts", "2 seconds")
+        ).withWatermark("ts", "2 seconds")
         agg = streaming_over(
             keyed,
             part_cols=["k"],
@@ -182,7 +185,6 @@ def _plan(spark, mode: str, rps: int):
                 ("max", "v", None, "hi"),
             ],
             out_cols=["k", "v", "n", "hi"],
-            buffered=(mode == "over_buffered"),
         )
     elif mode == "cep":
         from flink_streaming_platform_web_spark.operators.cep import (
@@ -213,7 +215,6 @@ def _plan(spark, mode: str, rps: int):
         )
         agg = stream_match_recognize(
             keyed, spec, "k bigint, n bigint, bsum bigint",
-            buffered=True,
         )
     elif mode == "cep_coarse":
         from flink_streaming_platform_web_spark.operators.cep import (
@@ -248,7 +249,6 @@ def _plan(spark, mode: str, rps: int):
         )
         agg = stream_match_recognize(
             keyed, spec, "k bigint, n bigint, bsum bigint",
-            buffered=True,
         )
     elif mode == "cep_permute":
         from flink_streaming_platform_web_spark.operators.cep import (
@@ -282,7 +282,6 @@ def _plan(spark, mode: str, rps: int):
         )
         agg = stream_match_recognize(
             keyed, spec, "k bigint, n bigint, asum bigint",
-            buffered=True,
         )
     elif mode == "cep_overlap":
         from flink_streaming_platform_web_spark.operators.cep import (
@@ -314,7 +313,6 @@ def _plan(spark, mode: str, rps: int):
         )
         agg = stream_match_recognize(
             keyed, spec, "k bigint, sv double, tv double",
-            buffered=True,
         )
     elif mode == "temporal":
         from flink_streaming_platform_web_spark.streaming.temporal import (
@@ -328,10 +326,14 @@ def _plan(spark, mode: str, rps: int):
             F.col("timestamp").alias("ts"),
             F.col("value").alias("v"),
         )
-        build = base.filter(F.col("v") % 100 == 0).select(
-            "k", "ts", (F.col("v") * 2).alias("rate")
+        build = (
+            base.filter(F.col("v") % 100 == 0)
+            .select("k", "ts", (F.col("v") * 2).alias("rate"))
+            .withWatermark("ts", "2 seconds")
         )
-        probe = base.filter(F.col("v") % 100 != 0)
+        probe = base.filter(F.col("v") % 100 != 0).withWatermark(
+            "ts", "2 seconds"
+        )
         agg = event_time_temporal_join(
             probe,
             build,
@@ -365,7 +367,7 @@ def _drain(agg, mode: str, duration: float) -> int:
         # the window agg emit updates
         .outputMode(
             "append"
-            if mode in ("over", "over_buffered", "temporal", "cep",
+            if mode in ("over_buffered", "temporal", "cep",
                         "cep_coarse", "cep_permute", "cep_overlap")
             else "update"
         )
