@@ -28,9 +28,15 @@ the operator's ORDER BY (``rows_of_frame``) — in an
   (event time ≤ the frontier already released — Flink's late-element
   drop; Spark's stateful operator pre-filters rows older than the
   watermark the same way), then releases every pending row whose event
-  time ≤ the current global watermark (``GroupState.
-  getCurrentWatermarkMs`` — the same watermark Spark computed from the
-  sources' ``withWatermark``), sorted, into the fold;
+  time ≤ the bucket's release cut, sorted, into the fold. The cut is
+  the current global watermark (``GroupState.getCurrentWatermarkMs``
+  — the watermark Spark computed from the batches before this one),
+  lifted, when the front end knows the source's watermark delay, to
+  the watermark this batch's own rows imply: the bucket's largest
+  event time in the batch, floored to ms, minus the delay — Spark's
+  formula for the NEXT batch's watermark, applied one batch sooner,
+  as a Flink watermark advances while elements pass (see
+  ``watermark_buffered``);
 - keys with rows still pending arm an ``EventTimeTimeout`` timer just
   below the earliest pending timestamp, so the key is re-invoked when
   the watermark passes it even if no further data arrives for the key
@@ -214,17 +220,6 @@ def _frontier_mask(
     return ts_us > cuts
 
 
-def _frontier_cut(
-    new: pd.DataFrame, stale: dict, key_list: list, ts_col: str
-) -> pd.DataFrame:
-    """Drop rows at or before their key's stale frontier (the
-    mask form above, applied; kept as the sentinel-semantics test
-    surface)."""
-    return new[
-        _frontier_mask(new, stale, key_list, to_epoch_us(new[ts_col]))
-    ]
-
-
 @dataclass
 class DrainSpec:
     """Everything ``drain_pending`` needs to flush one
@@ -307,6 +302,52 @@ def _release(
     return list(groups), out
 
 
+def delay_ms(delay: str) -> int:
+    """A Spark watermark delay string (``"10 seconds"``) → whole ms."""
+    return int(pd.Timedelta(delay).value // 1_000_000)
+
+
+def _sole_watermark_on(df: DataFrame, ts_col: str, delay: int) -> bool:
+    """True when ``df``'s analyzed plan holds exactly one
+    ``EventTimeWatermark`` node, every streaming source of the plan
+    lies below it, and it is set on the very attribute ``df`` outputs
+    as ``ts_col`` with a delay of ``delay`` ms. Only then is Spark's
+    next watermark bounded below by the largest event time of this
+    batch's rows minus that delay: with several watermarks (a union
+    of watermarked sources, the temporal join's two sides) Spark
+    takes their minimum (``spark.sql.streaming.multipleWatermarkPolicy``
+    defaults to ``min``), which one input's rows cannot bound, and
+    rows of a stream outside the node never move the watermark."""
+    plan = df._jdf.queryExecution().analyzed()
+    nodes, bare, stack = [], 0, [(plan, False)]
+    while stack:
+        n, under = stack.pop()
+        if n.nodeName() == "EventTimeWatermark":
+            nodes.append(n)
+            under = True
+        kids = n.children()
+        if kids.isEmpty():
+            bare += n.isStreaming() and not under
+        it = kids.iterator()
+        while it.hasNext():
+            stack.append((it.next(), under))
+    if len(nodes) != 1 or bare:
+        return False
+    (node,) = nodes
+    it = plan.output().iterator()
+    while it.hasNext():
+        a = it.next()
+        if a.name() == ts_col:
+            jvm = df.sparkSession._jvm
+            wm = jvm.org.apache.spark.sql.catalyst.plans.logical
+            return (
+                a.exprId().id() == node.eventTime().exprId().id()
+                and wm.EventTimeWatermark.getDelayMs(node.delay())
+                == delay
+            )
+    return False
+
+
 def watermark_buffered(
     df: DataFrame,
     key_cols: list[str],
@@ -317,6 +358,7 @@ def watermark_buffered(
     drain_out: "list[DrainSpec] | None" = None,
     sort_asc: "list[bool] | None" = None,
     key_groups: "int | None" = None,
+    watermark_delay_ms: "int | None" = None,
 ) -> DataFrame:
     """Buffer ``df``'s rows per key until the watermark passes them,
     then feed them — event-time sorted — into ``fold``. ``df`` (or
@@ -342,7 +384,22 @@ def watermark_buffered(
     per logical key in released order, so every fold's semantics
     (CEP NFA, OVER buffer, temporal versions) are untouched.
     ``key_groups`` must be the count the query's state was written
-    with (``pinned_key_groups``); None sizes it for fresh state."""
+    with (``pinned_key_groups``); None sizes it for fresh state.
+
+    ``watermark_delay_ms`` is the delay of the source's watermark on
+    ``ts_col``. Given it, and when that watermark is the plan's only
+    one (``_sole_watermark_on``), each bucket releases up to the
+    larger of the current watermark and its largest event time among
+    this batch's rows, floored to ms, minus the delay — the value
+    Spark itself will hand the next batch as its watermark. Rows
+    reach the operator only through the plan's ``EventTimeWatermark``
+    node in the same batch, so no bucket's cut passes that next
+    watermark (which Spark persists in the commit log and restores
+    on restart): every row released early is one the next batch
+    would release, in the same per-key order, and any later row at
+    or below the cut is one the next batch drops as late. The output
+    is unchanged; it appears one trigger sooner. Without the delay,
+    or with several watermarks, the cut is the current watermark."""
     in_cols = list(df.columns)
     if drain_out is not None:
         drain_out.append(
@@ -358,6 +415,9 @@ def watermark_buffered(
         )
     if key_groups is None:
         key_groups = sized_key_groups(df.sparkSession)
+    delay = watermark_delay_ms
+    if delay is not None and not _sole_watermark_on(df, ts_col, delay):
+        delay = None
     key_list = list(key_cols)
     out_cols = fold.out_cols(in_cols)
     asc = sort_asc if sort_asc is not None else True
@@ -375,6 +435,7 @@ def watermark_buffered(
             pending, pts, frontiers, inners = None, None, {}, {}
         wm_ms = state.getCurrentWatermarkMs()
         wm_us = wm_ms * 1000
+        cut_us = wm_us
         if not state.hasTimedOut:
             dfs = list(batches)
             # single-chunk fast path: pd.concat pays ~2 ms of
@@ -385,6 +446,13 @@ def watermark_buffered(
             if len(new):
                 new = new.drop(columns=[_KG])
                 nts = to_epoch_us(new[ts_col])
+                if delay is not None:
+                    # Spark's next-watermark arithmetic over this
+                    # bucket's rows (EventTimeWatermarkExec: µs / 1000,
+                    # minus the delay), taken only when it advances
+                    nxt_ms = int(nts.max()) // 1000 - delay
+                    if nxt_ms > wm_ms:
+                        cut_us = nxt_ms * 1000
                 # late: at or before the current watermark OR the
                 # key's frontier already folded — dropped, Flink's
                 # late-element contract (ts <= watermark). Spark's
@@ -398,10 +466,12 @@ def watermark_buffered(
                 keep = nts > (wm_us if wm_ms > 0 else nat_us)
                 if not keep.all():
                     new, nts = new[keep], nts[keep]
-                # per-key frontier cut: the watermark is monotone
-                # within a run, so a frontier above the current wm
-                # only exists defensively (wm regression across a
-                # restart) — apply it per row only when one does
+                # per-key frontier cut: a frontier never passes the
+                # watermark of the batch after the one that set it
+                # (the release cut is bounded by it, and Spark keeps
+                # the watermark monotone across restarts), so one
+                # above the current wm only exists defensively (a
+                # watermark regression) — apply it per row only then
                 stale = {
                     k: f
                     for k, f in frontiers.items()
@@ -424,7 +494,7 @@ def watermark_buffered(
                     pts = _np.concatenate([pts, nts])
         outs = []
         if pending is not None and len(pending):
-            mask = pts <= wm_us
+            mask = pts <= cut_us
             if mask.any():
                 released = pending[mask].sort_values(
                     sort_cols, ascending=asc, kind="mergesort"
@@ -437,7 +507,7 @@ def watermark_buffered(
                 for kt in folded:
                     f = frontiers.get(kt)
                     frontiers[kt] = (
-                        wm_us if f is None else max(f, wm_us)
+                        cut_us if f is None else max(f, cut_us)
                     )
                 if out is not None:
                     outs.append(out)

@@ -236,11 +236,14 @@ def _row(eid, sec, value, ts_null=False):
     }
 
 
-def _stream_mr(spark, tmp_path, tag, clause, files, sets=""):
+def _stream_mr(
+    spark, tmp_path, tag, clause, files, sets="", before_stop=None
+):
     """Stream ``files`` (one micro-batch each) through the runner's
     streaming MATCH_RECOGNIZE into a memory sink with a 10 s
-    watermark delay, stop (with drain unless ``sets`` turns it off),
-    and return (sorted sink rows, the started query)."""
+    watermark delay, call ``before_stop(query)``, stop (with drain
+    unless ``sets`` turns it off), and return (sorted sink rows, the
+    started query)."""
     from tests.test_ooo import _write_files
 
     from flink_streaming_platform_web_spark.streaming.runner import (
@@ -262,6 +265,8 @@ def _stream_mr(spark, tmp_path, tag, clause, files, sets=""):
         """)
     (q,) = result.streaming_queries
     q.processAllAvailable()
+    if before_stop is not None:
+        before_stop(q)
     q.stop()
     q.awaitTermination(120)
     got = sorted(
@@ -301,16 +306,16 @@ LOHI_CLAUSE = """
 
 
 def test_gc_keeps_tails_the_latest_meta_references(spark, tmp_path):
-    """One releasing batch, then two that release nothing, then a
+    """One releasing batch, then three that release nothing, then a
     drain: the tails version the releasing batch wrote is still the
     latest one, so garbage collection must keep it (deleting every
     version older than the previous batch made the drain fail with
     PATH_NOT_FOUND)."""
     clause = LOHI_CLAUSE.format(order="ts", lo="LO.value < 20.0")
     files = [
-        # batch 0: no watermark yet, nothing released; wm -> 10 s
+        # batch 0 releases 0..10 s on its own watermark: 20 s - 10 s
         [_row(1, 0, 5), _row(2, 5, 90), _row(3, 10, 10), _row(4, 20, 85)],
-        [_row(5, 25, 15)],  # batch 1 releases 0..10 s; wm -> 15 s
+        [_row(5, 25, 15)],  # batch 1 releases nothing; wm -> 15 s
         [_row(6, 24, 95)],  # batch 2 releases nothing
         [_row(7, 23, 3)],  # batch 3 releases nothing
     ]
@@ -334,8 +339,9 @@ def test_reverse_order_carries_null_keys(spark, tmp_path, order):
             _row(None, 10, 10),  # last row of the 10 s peers
             _row(7, 30, 90),
         ],
-        [_row(8, 40, 95)],  # batch 1 releases 0..10 s; wm -> 30 s
-        [_row(9, 60, 5)],  # batch 2 releases 30 s
+        # batch 0 releases 0..10 s on its own watermark: 30 s - 10 s
+        [_row(8, 40, 95)],  # batch 1 releases 30 s; wm -> 30 s
+        [_row(9, 60, 5)],  # batch 2 releases 40 s
     ]
     tag = "fbdesc" if "DESC" in order else "fbasc"
     got, q = _stream_mr(spark, tmp_path, tag, clause, files)
@@ -369,9 +375,10 @@ def test_prev_reaching_past_carried_rows_falls_back(spark, tmp_path):
     p = _probe(spark)
     assert cep.fb_stream_shape(p, spec) is None
     files = [
+        # batch 0 releases 0..15 s on its own watermark: 26 s - 10 s
         [_row(1, 0, 50), _row(2, 10, 30), _row(3, 15, 5), _row(4, 26, 90)],
-        [_row(5, 40, 60)],  # batch 1 releases 0..15 s; wm -> 30 s
-        [_row(6, 50, 70)],  # batch 2 releases 26 s
+        [_row(5, 40, 60)],  # batch 1 releases 26 s; wm -> 30 s
+        [_row(6, 50, 70)],  # batch 2 releases 40 s
     ]
     got, q = _stream_mr(spark, tmp_path, "fbprev", clause, files)
     assert not q.name.startswith("fb_cep_")
@@ -432,3 +439,76 @@ def test_run_scoped_checkpoints_removed_on_stop(spark, tmp_path, drain):
     assert want == [(5.0, 90.0), (10.0, 85.0)]
     assert got == (want if drain else want[:1])
     assert run_scoped() == before
+
+
+def test_match_decided_by_batch_zero_is_in_the_sink_after_batch_zero(
+    spark, tmp_path
+):
+    """Batch 0 holds a match (LO at 0 s, HI at 5 s), the row after it,
+    and an event at 30 s: with the 10 s delay its own rows imply a
+    20 s watermark, which releases the match, so the sink view holds
+    it once batch 0 commits. Releasing on the watermark of the
+    batches before (none in batch 0) left the sink empty until the
+    drain."""
+    clause = LOHI_CLAUSE.format(order="ts", lo="LO.value < 20.0")
+    files = [[_row(1, 0, 5), _row(2, 5, 90), _row(3, 8, 50),
+              _row(4, 30, 50)]]
+    seen = {}
+
+    def after_batch_zero(q):
+        seen["batches"] = {p["batchId"] for p in q.recentProgress}
+        seen["rows"] = sorted(
+            (r["lo_v"], r["hi_v"])
+            for r in spark.table("snk_fbb0").collect()
+        )
+
+    got, q = _stream_mr(
+        spark, tmp_path, "fbb0", clause, files,
+        before_stop=after_batch_zero,
+    )
+    assert q.name.startswith("fb_cep_")
+    assert seen["batches"] == {0}
+    assert seen["rows"] == [(5.0, 90.0)]
+    assert got == _batch_mr(spark, clause, files) == [(5.0, 90.0)]
+
+
+def test_meta_files_stay_bounded_and_a_retry_reads_its_predecessor(
+    spark, tmp_path, monkeypatch
+):
+    """Seven batches each write a meta file, and every one but the
+    committed meta and the one before it is deleted: a retry of the
+    last batch reads only its predecessor. Batch 4 runs twice, as a
+    retry after its commit would, and still finds batch 3's meta; the
+    converged output is the batch matcher's."""
+    import glob
+
+    from flink_streaming_platform_web_spark.streaming import fb_cep
+
+    real = fb_cep._FBCepStream.foreach_batch
+    counts = []
+
+    def batch_then_count(self, batch_df, epoch_id):
+        real(self, batch_df, epoch_id)
+        if epoch_id == 4:
+            assert self._meta_before(4)[0] == 3
+            real(self, batch_df, epoch_id)
+        counts.append(len(glob.glob(f"{self.state_dir}/meta_v*")))
+
+    monkeypatch.setattr(
+        fb_cep._FBCepStream, "foreach_batch", batch_then_count
+    )
+    clause = LOHI_CLAUSE.format(order="ts", lo="LO.value < 20.0")
+    values = [5, 90, 50, 10, 60, 85, 15, 95, 40, 2, 30, 5, 85, 50,
+              81, 60, 1, 99, 50, 7, 82]
+    files = [
+        [_row(3 * b + i, 10 * b + 3 * i, values[3 * b + i])
+         for i in range(3)]
+        for b in range(7)
+    ]
+    got, q = _stream_mr(spark, tmp_path, "fbmeta", clause, files)
+    assert q.name.startswith("fb_cep_")
+    assert len(counts) >= 6 and max(counts) <= 2
+    want = _batch_mr(spark, clause, files)
+    assert got == want
+    assert want == [(1.0, 99.0), (5.0, 85.0), (5.0, 90.0), (7.0, 82.0),
+                    (15.0, 95.0)]

@@ -106,15 +106,21 @@ def _mk_rows(n_per_key=24, keys=(1, 2), step_s=10):
     return rows
 
 
-def _random_disorder(rows, seed, files=4, slack_s=_DELAY_S - 20):
+def _random_disorder(
+    rows, seed, files=4, slack_s=_DELAY_S - 20, random_cuts=False
+):
     """Random arrival permutation that stays inside the watermark
-    delay: rows are cut into ts-ordered files, then each row within
-    ``slack_s`` of its file's max is displaced into the next file
-    with p=.5, and every file's internal order is shuffled. Any such
-    permutation must produce the ordered run's exact output."""
+    delay: rows are cut into ts-ordered files (evenly, or at random
+    points with ``random_cuts``), then each row within ``slack_s`` of
+    its file's max is displaced into the next file with p=.5, and
+    every file's internal order is shuffled. Any such permutation
+    must produce the ordered run's exact output."""
     rng = random.Random(seed)
     n = len(rows)
-    cuts = [i * n // files for i in range(files)] + [n]
+    if random_cuts:
+        cuts = [0, *sorted(rng.sample(range(1, n), files - 1)), n]
+    else:
+        cuts = [i * n // files for i in range(files)] + [n]
     chunks = [rows[cuts[i]:cuts[i + 1]] for i in range(files)]
     for i in range(files - 1):
         cur = chunks[i]
@@ -360,16 +366,25 @@ def test_displace_helper_moves_inside_window():
     assert sum(len(c) for c in out) == 4
 
 
+def _frontier_cut(new, stale, key_list, ts_col):
+    """Drop rows at or before their key's stale frontier: the
+    front end's per-row mask (``ooo._frontier_mask``), applied."""
+    from flink_streaming_platform_web_spark.streaming.ooo import (
+        _frontier_mask,
+        to_epoch_us,
+    )
+
+    return new[
+        _frontier_mask(new, stale, key_list, to_epoch_us(new[ts_col]))
+    ]
+
+
 def test_frontier_cut_keeps_pre_epoch_rows_for_frontierless_keys():
     """ADVICE r13: the per-key stale-frontier cut used sentinel
     -1 µs for keys WITHOUT a frontier, so negative-epoch (pre-1970)
     rows of those keys were silently dropped whenever any stale
     frontier existed (wm_ms == 0 or a watermark regression). The
     sentinel must sit below every representable timestamp."""
-    from flink_streaming_platform_web_spark.streaming.ooo import (
-        _frontier_cut,
-    )
-
     new = pd.DataFrame(
         {
             "k": [1, 1, 2, 2],
@@ -961,3 +976,383 @@ def test_three_tuple_bucket_state_is_refused():
 
     with pytest.raises(ValueError, match=r"3-tuple \(pending, frontiers"):
         ooo._load_bucket(pickle.dumps((None, {}, {})))
+
+
+# -- release on the watermark of the batch that carries the rows ----------
+
+
+def _ts(sec):
+    return (
+        pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=sec)
+    ).strftime("%Y-%m-%d %H:%M:%S")
+
+
+def _committed_batch_rows(spark, snk, schema, batch):
+    """Rows of the files a file sink committed for micro-batch
+    ``batch``, as its ``_spark_metadata`` log entry lists them."""
+    with open(os.path.join(snk, "_spark_metadata", str(batch))) as fh:
+        entries = fh.read().splitlines()[1:]  # line 0 is the version
+    paths = [json.loads(e)["path"] for e in entries if e.strip()]
+    return spark.read.schema(schema).json(paths).collect() if paths else []
+
+
+_LOHI_MR = """
+          PARTITION BY k
+          ORDER BY ts
+          MEASURES FIRST(LO.v) AS lo_v, FIRST(HI.v) AS hi_v
+          ONE ROW PER MATCH
+          AFTER MATCH SKIP PAST LAST ROW
+          PATTERN (LO HI)
+          DEFINE LO AS LO.v < 20.0, HI AS HI.v >= 80.0
+"""
+
+
+def _mr_file_script(tag, src, snk, sets=""):
+    """NFA-route script: a file sink keeps MATCH_RECOGNIZE off the
+    memory-sink foreachBatch route."""
+    return f"""
+        {sets}
+        CREATE TABLE ev_{tag} (k STRING, ts TIMESTAMP, v DOUBLE,
+          WATERMARK FOR ts AS ts - INTERVAL '{_DELAY_S}' SECOND
+        ) WITH ('connector'='filesystem','path'='{src}',
+                'format'='json','source.max-files-per-trigger'='1');
+        CREATE TABLE snk_{tag} (k STRING, lo_v DOUBLE, hi_v DOUBLE)
+          WITH ('connector'='filesystem','path'='{snk}',
+                'format'='json');
+        INSERT INTO snk_{tag}
+        SELECT k, lo_v, hi_v FROM ev_{tag} MATCH_RECOGNIZE ({_LOHI_MR});
+        """
+
+
+def _run_script(spark, script, before_stop=None, **kw):
+    """Run ``script`` to the end of its staged input, call
+    ``before_stop()`` (the stop-with-drain removes a file sink's
+    ``_spark_metadata``), then stop."""
+    result = JobRunner(spark, mode="streaming", **kw).execute_script(
+        script
+    )
+    for q in result.streaming_queries:
+        q.processAllAvailable()
+    seen = before_stop() if before_stop is not None else None
+    for q in result.streaming_queries:
+        q.stop()
+        q.awaitTermination(120)
+    return result, seen
+
+
+def test_nfa_route_releases_on_its_own_batch_watermark(spark, tmp_path):
+    """Batch 0 carries a match (LO at 0 s, HI at 10 s), the row at
+    20 s that closes it (the matcher holds a match ending at the
+    buffer end, as a longer one could still follow), and an event at
+    100 s: past the 60 s delay, batch 0's rows imply a 40 s
+    watermark, which releases all three, so the file sink commits
+    the match with batch 0. Releasing on Spark's watermark alone (0
+    in batch 0) committed it only with batch 1. The converged output
+    is the batch matcher's."""
+    src, snk = str(tmp_path / "src"), str(tmp_path / "snk")
+    _write_files(src, [
+        [
+            {"k": "a", "ts": _ts(0), "v": 5.0},
+            {"k": "a", "ts": _ts(10), "v": 90.0},
+            {"k": "a", "ts": _ts(20), "v": 50.0},
+            {"k": "a", "ts": _ts(100), "v": 50.0},
+        ],
+        [{"k": "a", "ts": _ts(110), "v": 6.0},
+         {"k": "a", "ts": _ts(120), "v": 95.0}],
+    ])
+    schema = "k string, lo_v double, hi_v double"
+    result, first = _run_script(
+        spark, _mr_file_script("sb", src, snk),
+        lambda: _committed_batch_rows(spark, snk, schema, 0),
+    )
+    assert not any(
+        (q.name or "").startswith("fb_cep_")
+        for q in result.streaming_queries
+    )
+    assert [(r["lo_v"], r["hi_v"]) for r in first] == [(5.0, 90.0)]
+    got = sorted(
+        (r["lo_v"], r["hi_v"])
+        for r in spark.read.schema(schema).json(snk).collect()
+    )
+    assert got == [(5.0, 90.0), (6.0, 95.0)]
+
+
+def test_over_route_releases_on_its_own_batch_watermark(spark, tmp_path):
+    """The OVER route's twin of the test above: the two rows batch 0's
+    own watermark (100 s − 60 s) passes are committed with batch 0."""
+    src, snk = str(tmp_path / "src"), str(tmp_path / "snk")
+    rows = [
+        {"k": 1, "ts": _ts(0), "v": 1.0},
+        {"k": 1, "ts": _ts(10), "v": 2.0},
+        {"k": 1, "ts": _ts(100), "v": 3.0},
+    ]
+    _write_files(src, [rows])
+    schema = "k long, ts_s string, n long, mx double"
+    _, first = _run_script(
+        spark, _over_script("osb", src, snk),
+        lambda: _committed_batch_rows(spark, snk, schema, 0),
+    )
+    assert sorted(r["ts_s"] for r in first) == [_ts(0), _ts(10)]
+    got = {
+        (r["k"], r["ts_s"]): (r["n"], r["mx"])
+        for r in spark.read.schema(schema).json(snk).collect()
+    }
+    assert got == _batch_over(spark, rows)
+
+
+def _map_delay(monkeypatch, delay_ms):
+    """Make every ``watermark_buffered`` call carry ``delay_ms``."""
+    from flink_streaming_platform_web_spark.streaming import ooo
+
+    real = ooo.watermark_buffered
+
+    def with_delay(*a, **kw):
+        kw["watermark_delay_ms"] = delay_ms
+        return real(*a, **kw)
+
+    monkeypatch.setattr(ooo, "watermark_buffered", with_delay)
+
+
+@pytest.mark.parametrize("shape", ["union", "temporal"])
+def test_multi_watermark_inputs_keep_current_watermark_cut(
+    spark, tmp_path, monkeypatch, shape
+):
+    """An input with two watermarks — a view UNION ALL of two
+    watermarked sources, or the temporal join's two sides — gets
+    Spark's minimum of them, which one side's rows cannot bound. So
+    even handed the delay, such an operator releases on the current
+    watermark only: nothing in batch 0, whose rows lift one side 140 s
+    past the other. Releasing up to the faster side's 140 s would
+    have dropped batch 1's rows at 30–60 s, which Spark's 40 s (or
+    earlier) watermark admits; the converged output keeps them."""
+    from flink_streaming_platform_web_spark.operators import cep
+    from flink_streaming_platform_web_spark.streaming import ooo
+    from flink_streaming_platform_web_spark.streaming.temporal import (
+        event_time_temporal_join,
+    )
+
+    _map_delay(monkeypatch, _DELAY_S * 1000)
+    pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
+
+    def stream(path, schema, col):
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(path)
+            .withWatermark(col, f"{_DELAY_S} seconds")
+        )
+
+    if shape == "union":
+        _write_files(pa, [[
+            {"k": "a", "ts": _ts(0), "v": 5.0},
+            {"k": "a", "ts": _ts(10), "v": 90.0},
+            {"k": "a", "ts": _ts(200), "v": 50.0},
+        ]])
+        _write_files(pb, [
+            [{"k": "a", "ts": _ts(100), "v": 50.0}],
+            [{"k": "a", "ts": _ts(50), "v": 6.0},
+             {"k": "a", "ts": _ts(60), "v": 95.0}],
+        ])
+        schema = "k STRING, ts TIMESTAMP, v DOUBLE"
+        stream(pa, schema, "ts").createOrReplaceTempView("mw_a")
+        stream(pb, schema, "ts").createOrReplaceTempView("mw_b")
+        src = spark.sql("SELECT * FROM mw_a UNION ALL SELECT * FROM mw_b")
+        delay = _DELAY_S * 1000
+        assert ooo._sole_watermark_on(spark.table("mw_a"), "ts", delay)
+        assert not ooo._sole_watermark_on(src, "ts", delay)
+        # one watermark, but a stream outside it: its rows never move
+        # Spark's watermark, so they cannot lift the cut either
+        bare = spark.readStream.schema(schema).json(pb)
+        assert not ooo._sole_watermark_on(
+            spark.table("mw_a").unionByName(bare), "ts", delay
+        )
+        spec = cep.parse_match_recognize(_LOHI_MR)
+        out_schema = "k string, lo_v double, hi_v double"
+        drains: list = []
+        out = cep.stream_match_recognize(
+            src, spec, cep.infer_output_schema(spec, src),
+            drain_out=drains,
+        )
+        key = ("lo_v", "hi_v")
+        want = [(5.0, 90.0), (6.0, 95.0)]
+    else:
+        _write_files(pa, [  # build side: versions
+            [{"k": 1, "vts": _ts(0), "rate": 1.1}],
+            [{"k": 1, "vts": _ts(30), "rate": 1.3}],
+        ])
+        _write_files(pb, [  # probe side
+            [{"pid": 1, "k": 1, "pts": _ts(5), "amt": 1.0},
+             {"pid": 3, "k": 1, "pts": _ts(200), "amt": 3.0}],
+            [{"pid": 2, "k": 1, "pts": _ts(40), "amt": 2.0}],
+        ])
+        out_schema = "pid long, amt double, rate double"
+        drains = []
+        out = event_time_temporal_join(
+            stream(pb, "pid bigint, k bigint, pts timestamp, amt double",
+                   "pts"),
+            stream(pa, "k bigint, vts timestamp, rate double", "vts"),
+            ["k"], ["k"], "pts", "vts",
+            [("pid", "pid"), ("amt", "amt")], [("rate", "rate")],
+            drain_out=drains,
+        )
+        key = ("pid", "rate")
+        want = [(1, 1.1), (2, 1.3), (3, 1.3)]
+    snk, ckpt = str(tmp_path / "snk"), str(tmp_path / "ckpt")
+    q = (
+        out.writeStream.format("json")
+        .option("path", snk)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination(120)
+    assert _committed_batch_rows(spark, snk, out_schema, 0) == []
+    tail = ooo.drain_pending(spark, ckpt, drains[0])
+    rows = spark.read.schema(out_schema).json(snk).collect() + (
+        tail.collect() if tail is not None else []
+    )
+    assert sorted(tuple(r[c] for c in key) for r in rows) == want
+
+
+def test_frontiers_stay_at_or_below_the_next_watermark(spark, tmp_path):
+    """Every frontier a batch sets is at or below the watermark Spark
+    records for the next batch (``nextBatchWatermarkMs`` in the commit
+    log), across a plain stop and a restore from the checkpoint — so
+    the per-row frontier cut never has a stale frontier to apply."""
+    from flink_streaming_platform_web_spark.streaming import ooo
+    from flink_streaming_platform_web_spark.streaming.checkpoints import (
+        CheckPointParam,
+    )
+
+    rng = random.Random(5)
+    rows = [
+        {"k": k, "ts": _ts(10 * i + j), "v": float(rng.randrange(100))}
+        for i in range(30)
+        for j, k in enumerate("abcd")
+    ]
+    src, snk = str(tmp_path / "src"), str(tmp_path / "snk")
+    ckpt = str(tmp_path / "ckpt")
+    _write_files(src, [rows[:40], rows[40:80]])
+    plain = "SET 'graft.stop.drain' = 'false';"
+    script = _mr_file_script("fi", src, snk, plain)
+    _run_script(spark, script, checkpoint=CheckPointParam(checkpoint_dir=ckpt))
+    later = os.path.join(src, "c9.json")
+    with open(later, "w") as fh:
+        fh.writelines(json.dumps(r) + "\n" for r in rows[80:])
+    os.utime(later, (os.path.getmtime(src + "/c1.json") + 5,) * 2)
+    _run_script(spark, script, checkpoint=CheckPointParam(checkpoint_dir=ckpt))
+
+    qckpt = os.path.join(ckpt, "q0_snk_fi")
+    commits = os.path.join(qckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    with open(os.path.join(commits, str(last))) as fh:
+        next_wm_ms = json.loads(fh.read().splitlines()[1])[
+            "nextBatchWatermarkMs"
+        ]
+    op = ooo._buffered_operator_id(spark, qckpt)
+    blobs = (
+        spark.read.format("statestore")
+        .option("operatorId", op)
+        .load(qckpt)
+        .select("value.groupState.s")
+        .collect()
+    )
+    frontiers = [
+        f
+        for (b,) in blobs
+        for f in ooo._load_bucket(bytes(b))[2].values()
+    ]
+    assert len(frontiers) == 4  # every key released rows
+    assert max(frontiers) <= next_wm_ms * 1000
+    assert next_wm_ms * 1000 == pd.Timestamp(_ts(293 - _DELAY_S)).value // 1000
+
+
+def test_randomized_release_cut_differential(spark, tmp_path):
+    """Random disorder inside the delay at random micro-batch cuts, on
+    the NFA MATCH_RECOGNIZE route (a file sink) and the OVER route:
+    releasing on each batch's own watermark, the converged sink still
+    equals the batch answer."""
+    from flink_streaming_platform_web_spark.operators import cep
+
+    patterns = {
+        "STRT UP+ Z": "DEFINE UP AS UP.v > PREV(UP.v)",
+        "LO HI Z": "DEFINE LO AS LO.v < 3, HI AS HI.v >= 7",
+        "A (B (C)?)+ Z": (
+            "DEFINE A AS A.v < 3, B AS B.v >= 3 AND B.v < 7,"
+            " C AS C.v >= 7"
+        ),
+    }
+    for seed, (pat, define) in zip((21, 22, 23), patterns.items()):
+        rng = random.Random(seed)
+        rows = sorted(
+            (
+                {"k": k, "ts": _ts(10 * i + j),
+                 "v": float(rng.randint(0, 9))}
+                for i in range(30)
+                for j, k in enumerate("ab")
+            ),
+            key=lambda r: r["ts"],
+        )
+        clause = f"""
+          PARTITION BY k
+          ORDER BY ts
+          MEASURES COUNT(*) AS n, LAST(Z.v) AS zv
+          ONE ROW PER MATCH
+          AFTER MATCH SKIP PAST LAST ROW
+          PATTERN ({pat})
+          {define}
+        """
+        spec = cep.parse_match_recognize(clause)
+        expected = []
+        for k in "ab":
+            matches, _ = cep._run_matcher(
+                [
+                    {"k": k, "ts": pd.Timestamp(r["ts"]), "v": r["v"]}
+                    for r in rows
+                    if r["k"] == k
+                ],
+                spec,
+            )
+            expected += [
+                (k, o["n"], o["zv"]) for *_m, outs, _ro in matches
+                for o in outs
+            ]
+        chunks = _random_disorder(
+            rows, seed, files=rng.randint(3, 6), random_cuts=True
+        )
+        tag = f"rc{seed}"
+        src, snk = str(tmp_path / tag), str(tmp_path / f"{tag}_snk")
+        _write_files(src, chunks)
+        _run_script(spark, f"""
+            CREATE TABLE ev_{tag} (k STRING, ts TIMESTAMP, v DOUBLE,
+              WATERMARK FOR ts AS ts - INTERVAL '{_DELAY_S}' SECOND
+            ) WITH ('connector'='filesystem','path'='{src}',
+                    'format'='json','source.max-files-per-trigger'='1');
+            CREATE TABLE snk_{tag} (k STRING, n BIGINT, zv DOUBLE)
+              WITH ('connector'='filesystem','path'='{snk}',
+                    'format'='json');
+            INSERT INTO snk_{tag}
+            SELECT k, n, zv FROM ev_{tag} MATCH_RECOGNIZE ({clause});
+            """)
+        got = sorted(
+            (r["k"], r["n"], r["zv"])
+            for r in spark.read.schema("k string, n long, zv double")
+            .json(snk)
+            .collect()
+        )
+        assert got == sorted(expected), (pat, seed)
+
+    rows = _mk_rows(n_per_key=20, keys=(1, 2, 3), step_s=10)
+    expected = _batch_over(spark, rows)
+    for seed in (24, 25):
+        rng = random.Random(seed)
+        chunks = _random_disorder(
+            rows, seed, files=rng.randint(3, 6), random_cuts=True
+        )
+        p = str(tmp_path / f"ro{seed}")
+        _write_files(p, chunks)
+        assert _run_over(spark, p, f"ro{seed}") == expected, seed
