@@ -4645,7 +4645,6 @@ def stream_match_recognize(
     output_schema: str,
     drain_out: "list | None" = None,
     key_groups: "int | None" = None,
-    watermark_delay_ms: "int | None" = None,
 ) -> DataFrame:
     """STREAMING MATCH_RECOGNIZE — per-key NFA state via
     ``applyInPandasWithState`` (Flink's CepOperator shape: keyed
@@ -4662,10 +4661,7 @@ def stream_match_recognize(
     out-of-order front end (streaming/ooo.py — Flink CepOperator's
     element buffer: rows held in keyed state until the watermark
     passes them, folded in ORDER BY order, late rows dropped), so
-    ``df`` must carry a watermark on the first ORDER BY column;
-    ``watermark_delay_ms``, that watermark's delay, lets each batch
-    release the rows its own data already made releasable
-    (``ooo.watermark_buffered``).
+    ``df`` must carry a watermark on the first ORDER BY column.
 
     Every AFTER MATCH strategy is supported (round 10 late; Flink
     streams all of them too). The one emission rule that is correct
@@ -4691,7 +4687,6 @@ def stream_match_recognize(
             infer_output_schema(keyed, kdf),
             drain_out=drain_out,
             key_groups=key_groups,
-            watermark_delay_ms=watermark_delay_ms,
         )
         return out.drop(_GK)
     _reject_wide_permute(spec)  # streaming always runs the NFA fold
@@ -4709,7 +4704,6 @@ def stream_match_recognize(
         drain_out=drain_out,
         sort_asc=spec.order_asc or None,
         key_groups=key_groups,
-        watermark_delay_ms=watermark_delay_ms,
     )
 
 

@@ -61,6 +61,11 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_streaming_platform_web_spark.streaming.ooo import (
+    delay_ms,
+    next_watermark_ms,
+)
+
 #: analyzed-plan node names that make an outer SELECT non-row-local:
 #: per-batch replay of such a plan would aggregate each micro-batch
 #: separately instead of the whole stream — those shapes stay on the
@@ -83,7 +88,6 @@ def try_start(
         translate_expr,
     )
     from flink_streaming_platform_web_spark.operators import cep
-    from flink_streaming_platform_web_spark.streaming.ooo import delay_ms
 
     if sink.connector != "memory" or sink.primary_key:
         return False
@@ -244,11 +248,9 @@ class _FBCepStream:
             cut_us = wm_us
             if mx is not None:
                 # release cut: the watermark this batch's rows imply
-                # (Spark's formula for the next batch's: ms floor
-                # minus the delay, taken only when it advances)
-                nxt_ms = mx // 1000 - self.delay_ms
-                if nxt_ms * 1000 > wm_us:
-                    cut_us = nxt_ms * 1000
+                cut_us = 1000 * next_watermark_ms(
+                    mx, self.delay_ms, wm_us // 1000
+                )
                 # late cut at arrival: ts <= wm of the batches before
                 # this one dropped (ooo.py's wm_ms > 0 contract — no
                 # cut before a watermark exists); a NULL event time is

@@ -31,11 +31,11 @@ the operator's ORDER BY (``rows_of_frame``) — in an
   time ≤ the bucket's release cut, sorted, into the fold. The cut is
   the current global watermark (``GroupState.getCurrentWatermarkMs``
   — the watermark Spark computed from the batches before this one),
-  lifted, when the front end knows the source's watermark delay, to
-  the watermark this batch's own rows imply: the bucket's largest
-  event time in the batch, floored to ms, minus the delay — Spark's
-  formula for the NEXT batch's watermark, applied one batch sooner,
-  as a Flink watermark advances while elements pass (see
+  lifted, when the input plan's only watermark is on the ordering
+  column, to the watermark this batch's own rows imply: the bucket's
+  largest event time in the batch, floored to ms, minus the delay —
+  Spark's formula for the NEXT batch's watermark, applied one batch
+  sooner, as a Flink watermark advances while elements pass (see
   ``watermark_buffered``);
 - keys with rows still pending arm an ``EventTimeTimeout`` timer just
   below the earliest pending timestamp, so the key is re-invoked when
@@ -307,17 +307,26 @@ def delay_ms(delay: str) -> int:
     return int(pd.Timedelta(delay).value // 1_000_000)
 
 
-def _sole_watermark_on(df: DataFrame, ts_col: str, delay: int) -> bool:
-    """True when ``df``'s analyzed plan holds exactly one
-    ``EventTimeWatermark`` node, every streaming source of the plan
-    lies below it, and it is set on the very attribute ``df`` outputs
-    as ``ts_col`` with a delay of ``delay`` ms. Only then is Spark's
-    next watermark bounded below by the largest event time of this
-    batch's rows minus that delay: with several watermarks (a union
-    of watermarked sources, the temporal join's two sides) Spark
-    takes their minimum (``spark.sql.streaming.multipleWatermarkPolicy``
-    defaults to ``min``), which one input's rows cannot bound, and
-    rows of a stream outside the node never move the watermark."""
+def next_watermark_ms(max_us: int, delay_ms: int, wm_ms: int) -> int:
+    """Spark's watermark for the batch after one whose largest event
+    time is ``max_us`` (``EventTimeWatermarkExec``: µs / 1000, minus
+    the delay), or ``wm_ms`` when that is not above it: Spark never
+    moves a watermark back."""
+    return max(wm_ms, max_us // 1000 - delay_ms)
+
+
+def _sole_watermark_delay_ms(df: DataFrame, ts_col: str) -> "int | None":
+    """The delay in ms of ``df``'s watermark when its analyzed plan
+    holds exactly one ``EventTimeWatermark`` node, every streaming
+    source of the plan lies below it, and it is set on the very
+    attribute ``df`` outputs as ``ts_col`` (matched by the session's
+    name resolver); else None. Only then is Spark's next watermark
+    bounded below by the largest event time of this batch's rows
+    minus that delay: with several watermarks (a union of watermarked
+    sources, the temporal join's two sides) Spark takes their minimum
+    (``spark.sql.streaming.multipleWatermarkPolicy`` defaults to
+    ``min``), which one input's rows cannot bound, and rows of a
+    stream outside the node never move the watermark."""
     plan = df._jdf.queryExecution().analyzed()
     nodes, bare, stack = [], 0, [(plan, False)]
     while stack:
@@ -332,20 +341,19 @@ def _sole_watermark_on(df: DataFrame, ts_col: str, delay: int) -> bool:
         while it.hasNext():
             stack.append((it.next(), under))
     if len(nodes) != 1 or bare:
-        return False
+        return None
     (node,) = nodes
+    session = df.sparkSession
+    resolves = session._jsparkSession.sessionState().conf().resolver()
     it = plan.output().iterator()
     while it.hasNext():
         a = it.next()
-        if a.name() == ts_col:
-            jvm = df.sparkSession._jvm
-            wm = jvm.org.apache.spark.sql.catalyst.plans.logical
-            return (
-                a.exprId().id() == node.eventTime().exprId().id()
-                and wm.EventTimeWatermark.getDelayMs(node.delay())
-                == delay
-            )
-    return False
+        if resolves.apply(a.name(), ts_col):
+            if a.exprId().id() != node.eventTime().exprId().id():
+                return None
+            logical = session._jvm.org.apache.spark.sql.catalyst.plans.logical
+            return int(logical.EventTimeWatermark.getDelayMs(node.delay()))
+    return None
 
 
 def watermark_buffered(
@@ -358,7 +366,6 @@ def watermark_buffered(
     drain_out: "list[DrainSpec] | None" = None,
     sort_asc: "list[bool] | None" = None,
     key_groups: "int | None" = None,
-    watermark_delay_ms: "int | None" = None,
 ) -> DataFrame:
     """Buffer ``df``'s rows per key until the watermark passes them,
     then feed them — event-time sorted — into ``fold``. ``df`` (or
@@ -386,20 +393,19 @@ def watermark_buffered(
     ``key_groups`` must be the count the query's state was written
     with (``pinned_key_groups``); None sizes it for fresh state.
 
-    ``watermark_delay_ms`` is the delay of the source's watermark on
-    ``ts_col``. Given it, and when that watermark is the plan's only
-    one (``_sole_watermark_on``), each bucket releases up to the
+    When ``df``'s plan carries one watermark, on ``ts_col``
+    (``_sole_watermark_delay_ms``), each bucket releases up to the
     larger of the current watermark and its largest event time among
-    this batch's rows, floored to ms, minus the delay — the value
-    Spark itself will hand the next batch as its watermark. Rows
-    reach the operator only through the plan's ``EventTimeWatermark``
-    node in the same batch, so no bucket's cut passes that next
-    watermark (which Spark persists in the commit log and restores
-    on restart): every row released early is one the next batch
-    would release, in the same per-key order, and any later row at
-    or below the cut is one the next batch drops as late. The output
-    is unchanged; it appears one trigger sooner. Without the delay,
-    or with several watermarks, the cut is the current watermark."""
+    this batch's rows, floored to ms, minus that watermark's delay —
+    the value Spark itself will hand the next batch as its watermark
+    (``next_watermark_ms``). Rows reach the operator only through the
+    plan's ``EventTimeWatermark`` node in the same batch, so no
+    bucket's cut passes that next watermark (which Spark persists in
+    the commit log and restores on restart): every row released early
+    is one the next batch would release, in the same per-key order,
+    and any later row at or below the cut is one the next batch drops
+    as late. The output is unchanged; it appears one trigger sooner.
+    With several watermarks the cut is the current watermark."""
     in_cols = list(df.columns)
     if drain_out is not None:
         drain_out.append(
@@ -415,9 +421,7 @@ def watermark_buffered(
         )
     if key_groups is None:
         key_groups = sized_key_groups(df.sparkSession)
-    delay = watermark_delay_ms
-    if delay is not None and not _sole_watermark_on(df, ts_col, delay):
-        delay = None
+    delay = _sole_watermark_delay_ms(df, ts_col)
     key_list = list(key_cols)
     out_cols = fold.out_cols(in_cols)
     asc = sort_asc if sort_asc is not None else True
@@ -447,12 +451,10 @@ def watermark_buffered(
                 new = new.drop(columns=[_KG])
                 nts = to_epoch_us(new[ts_col])
                 if delay is not None:
-                    # Spark's next-watermark arithmetic over this
-                    # bucket's rows (EventTimeWatermarkExec: µs / 1000,
-                    # minus the delay), taken only when it advances
-                    nxt_ms = int(nts.max()) // 1000 - delay
-                    if nxt_ms > wm_ms:
-                        cut_us = nxt_ms * 1000
+                    # the watermark this bucket's rows imply
+                    cut_us = 1000 * next_watermark_ms(
+                        int(nts.max()), delay, wm_ms
+                    )
                 # late: at or before the current watermark OR the
                 # key's frontier already folded — dropped, Flink's
                 # late-element contract (ts <= watermark). Spark's

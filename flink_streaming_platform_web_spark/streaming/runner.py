@@ -1311,14 +1311,11 @@ class JobRunner:
         state store, one appended row per input row) — Flink's
         OverAggregate operator shape. The append output then takes
         the normal streaming sink path."""
-        from flink_streaming_platform_web_spark.streaming.ooo import (
-            delay_ms,
-        )
         from flink_streaming_platform_web_spark.streaming.stateful import (
             streaming_over,
         )
 
-        wm = self._event_time_watermark(over.src, over.ts_col, "OVER")
+        self._event_time_watermark(over.src, over.ts_col, "OVER")
         drains: list = []
         out = streaming_over(
             self.spark.table(over.src),
@@ -1330,7 +1327,6 @@ class JobRunner:
             over.out_cols,
             drain_out=drains,
             key_groups=self._key_groups(sink, idx),
-            watermark_delay_ms=delay_ms(wm.delay),
         )
         self._write_stream(
             self._align_to_sink(out, sink), sink, idx, result,
@@ -1555,10 +1551,6 @@ class JobRunner:
                 self, src, spec, sink, outer, view, wm, idx, result
             ):
                 return
-            from flink_streaming_platform_web_spark.streaming.ooo import (
-                delay_ms,
-            )
-
             drains: list = []
             matched = cep.stream_match_recognize(
                 src,
@@ -1566,7 +1558,6 @@ class JobRunner:
                 cep.infer_output_schema(spec, src),
                 drain_out=drains,
                 key_groups=self._key_groups(sink, idx),
-                watermark_delay_ms=delay_ms(wm.delay),
             )
             matched.createOrReplaceTempView(view)
             df = self.spark.sql(translate_expr(outer))

@@ -218,7 +218,6 @@ def streaming_over(
     out_cols: list[str],
     drain_out: "list | None" = None,
     key_groups: "int | None" = None,
-    watermark_delay_ms: "int | None" = None,
 ) -> DataFrame:
     """Streaming OVER aggregation (Flink docs: queries/over-agg): for
     every input row, aggregates over the per-key window ending at that
@@ -236,8 +235,7 @@ def streaming_over(
     (the SQL frame contract). The fold runs behind the
     watermark-buffered out-of-order front end (ooo.watermark_buffered
     — Flink's OverAggregate row-time buffering), so ``df`` must carry
-    a watermark on ``ts_col``; ``watermark_delay_ms``, its delay, lets
-    each batch release the rows its own data already made releasable.
+    a watermark on ``ts_col``.
 
     ``aggs``: (fn, col, dec_scale, alias). SUM over doubles must
     declare a decimal scale (the cross-engine carrier — raw
@@ -530,7 +528,6 @@ def streaming_over(
     return watermark_buffered(
         df, part_cols, ts_col, [ts_col], fold, out_schema(),
         drain_out=drain_out, key_groups=key_groups,
-        watermark_delay_ms=watermark_delay_ms,
     )
 
 

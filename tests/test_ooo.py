@@ -1100,38 +1100,24 @@ def test_over_route_releases_on_its_own_batch_watermark(spark, tmp_path):
     assert got == _batch_over(spark, rows)
 
 
-def _map_delay(monkeypatch, delay_ms):
-    """Make every ``watermark_buffered`` call carry ``delay_ms``."""
-    from flink_streaming_platform_web_spark.streaming import ooo
-
-    real = ooo.watermark_buffered
-
-    def with_delay(*a, **kw):
-        kw["watermark_delay_ms"] = delay_ms
-        return real(*a, **kw)
-
-    monkeypatch.setattr(ooo, "watermark_buffered", with_delay)
-
-
 @pytest.mark.parametrize("shape", ["union", "temporal"])
 def test_multi_watermark_inputs_keep_current_watermark_cut(
-    spark, tmp_path, monkeypatch, shape
+    spark, tmp_path, shape
 ):
     """An input with two watermarks — a view UNION ALL of two
     watermarked sources, or the temporal join's two sides — gets
     Spark's minimum of them, which one side's rows cannot bound. So
-    even handed the delay, such an operator releases on the current
-    watermark only: nothing in batch 0, whose rows lift one side 140 s
-    past the other. Releasing up to the faster side's 140 s would
-    have dropped batch 1's rows at 30–60 s, which Spark's 40 s (or
-    earlier) watermark admits; the converged output keeps them."""
+    such an operator releases on the current watermark only: nothing
+    in batch 0, whose rows lift one side 140 s past the other.
+    Releasing up to the faster side's 140 s would have dropped batch
+    1's rows at 30–60 s, which Spark's 40 s (or earlier) watermark
+    admits; the converged output keeps them."""
     from flink_streaming_platform_web_spark.operators import cep
     from flink_streaming_platform_web_spark.streaming import ooo
     from flink_streaming_platform_web_spark.streaming.temporal import (
         event_time_temporal_join,
     )
 
-    _map_delay(monkeypatch, _DELAY_S * 1000)
     pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
 
     def stream(path, schema, col):
@@ -1157,15 +1143,15 @@ def test_multi_watermark_inputs_keep_current_watermark_cut(
         stream(pa, schema, "ts").createOrReplaceTempView("mw_a")
         stream(pb, schema, "ts").createOrReplaceTempView("mw_b")
         src = spark.sql("SELECT * FROM mw_a UNION ALL SELECT * FROM mw_b")
-        delay = _DELAY_S * 1000
-        assert ooo._sole_watermark_on(spark.table("mw_a"), "ts", delay)
-        assert not ooo._sole_watermark_on(src, "ts", delay)
+        sole = ooo._sole_watermark_delay_ms
+        assert sole(spark.table("mw_a"), "ts") == _DELAY_S * 1000
+        assert sole(spark.table("mw_a"), "TS") == _DELAY_S * 1000
+        assert sole(spark.table("mw_a"), "v") is None
+        assert sole(src, "ts") is None
         # one watermark, but a stream outside it: its rows never move
         # Spark's watermark, so they cannot lift the cut either
         bare = spark.readStream.schema(schema).json(pb)
-        assert not ooo._sole_watermark_on(
-            spark.table("mw_a").unionByName(bare), "ts", delay
-        )
+        assert sole(spark.table("mw_a").unionByName(bare), "ts") is None
         spec = cep.parse_match_recognize(_LOHI_MR)
         out_schema = "k string, lo_v double, hi_v double"
         drains: list = []
