@@ -4769,22 +4769,19 @@ def _stream_fold(spec: MatchSpec):
         )
         frontier = len(buf)
         if not final:
-            # a match is pending (can still grow/change) when it ends
-            # at the buffer end OR its search touched the end at all
-            # — a greedy quantifier that hit the end and then
-            # backtracked into a shorter complete match would extend
-            # with more rows, so emitting it now would diverge from
-            # batch semantics. final=True (stop-with-drain, Flink's
+            # a match is pending (can still grow/change) when its
+            # search touched the buffer end — a greedy quantifier that
+            # hit the end and then backtracked into a shorter complete
+            # match would extend with more rows, so emitting it now
+            # would diverge from batch semantics. A match that ends at
+            # the buffer end without reading past it is closed (a
+            # fixed-length one, say). final=True (stop-with-drain, Flink's
             # MAX_WATERMARK at end of bounded input) means no more
             # rows can ever arrive: every found match is closed
             # exactly as batch EOF closes it, so everything emits.
             if viable is not None:
                 frontier = min(frontier, viable)
-            pending = [
-                s
-                for s, e, _, ran_out in matches
-                if e == len(buf) or ran_out
-            ]
+            pending = [s for s, _, _, ran_out in matches if ran_out]
             if pending:
                 frontier = min(frontier, pending[0])
         # start-based: correct for overlapping skip modes too (see

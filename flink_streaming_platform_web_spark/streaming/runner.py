@@ -26,13 +26,12 @@ Spark rebuild:
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
 import tempfile
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -622,6 +621,27 @@ class JobRunner:
         for _, sink in pairs:
             if sink.primary_key:
                 self._replace_store(sink.name, sink.primary_key)
+        # checkpoint ONLY when every sink is durable-external
+        # (filesystem append): with an in-process store or memory view
+        # in the set, a checkpointed restart would resume the source
+        # past batches whose state died with the process (the same
+        # invariant the default PK path enforces)
+        durable = all(
+            s.connector == "filesystem" and not s.primary_key
+            for _, s in pairs
+        )
+        ckpt = self._job_checkpoint(ckpt_name) if durable else None
+        # file sinks log each frame under its epoch id. A query with no
+        # checkpoint restarts at epoch 0, so its ids follow the ones
+        # each log holds when it starts: a rerun appends
+        files = {
+            sink.options["path"]: (
+                self._file_sink(sink),
+                0 if ckpt else self._sink_log_next_id(sink) or 0,
+            )
+            for _, sink in pairs
+            if sink.connector == "filesystem"
+        }
 
         # more than one INSERT: read the micro-batch once, not per INSERT
         shared = len(pairs) > 1
@@ -636,10 +656,21 @@ class JobRunner:
                 batch.createOrReplaceTempView(src)
                 for cache in caches:
                     cache.ensure(sess)
+                frames = {}
                 for sql, sink in pairs:
-                    self._write_frame(
-                        self._align_to_sink(sess.sql(sql), sink), sink
+                    out = self._align_to_sink(sess.sql(sql), sink)
+                    if sink.connector != "filesystem":
+                        self._write_frame(out, sink)
+                        continue
+                    # the INSERTs into one directory share its log and
+                    # so the batch id: their frames commit as one batch
+                    path = sink.options["path"]
+                    frames[path] = (
+                        frames[path].union(out) if path in frames else out
                     )
+                for path, out in frames.items():
+                    add, first = files[path]
+                    add(first + epoch_id, out)
             finally:
                 if shared:
                     batch.unpersist()
@@ -649,23 +680,62 @@ class JobRunner:
             .writeStream.foreachBatch(fanout)
             .outputMode("append")
         )
-        # checkpoint ONLY when every sink is durable-external
-        # (filesystem append): with an in-process store or memory view
-        # in the set, a checkpointed restart would resume the source
-        # past batches whose state died with the process (the same
-        # invariant the default PK path enforces)
-        durable = all(
-            s.connector == "filesystem" and not s.primary_key
-            for _, s in pairs
+        self._start(writer, result, ckpt)
+
+    def _file_sink(self, sink: TableDef):
+        """Spark's own streaming file sink over the filesystem sink
+        ``sink``, as ``(batch_id, df) -> None``. Each call writes
+        ``df``'s files in the sink's format and partition layout and
+        lists them in the directory's ``_spark_metadata`` log under
+        ``batch_id``, in one commit; an id the log already holds
+        writes nothing, so a retried batch is held once. Every Spark
+        reader of the directory lists only the logged files."""
+        jvm, js = self.spark._jvm, self.spark._jsparkSession
+        execution = jvm.org.apache.spark.sql.execution
+        fmt = execution.datasources.DataSource.lookupDataSource(
+            registry.resolve_fs_format(
+                self.spark, sink.options.get("format", "parquet")
+            ),
+            js.sessionState().conf(),
+        ).newInstance()
+        if jvm.java.lang.Class.forName(
+            "org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2"
+        ).isInstance(fmt):
+            # this Spark resolves the built-in formats to their V2
+            # sources; the streaming sink takes the V1 FileFormat
+            fmt = fmt.fallbackFileFormat().newInstance()
+        files = execution.streaming.sinks.FileStreamSink(
+            js,
+            sink.options["path"],
+            fmt,
+            jvm.PythonUtils.toSeq(list(sink.partitioned_by)).toList(),
+            getattr(
+                getattr(jvm.scala.collection.immutable, "Map$"), "MODULE$"
+            ).empty(),
         )
-        self._start(
-            writer, result, self._job_checkpoint(ckpt_name) if durable else None
+        return lambda batch_id, df: files.addBatch(batch_id, df._jdf)
+
+    def _sink_log_next_id(self, sink: TableDef) -> "int | None":
+        """The batch id after the last one the filesystem sink's
+        ``_spark_metadata`` log holds (0 for an empty log), or None
+        when its directory has no log. Reading creates no log."""
+        jvm, js = self.spark._jvm, self.spark._jsparkSession
+        log = jvm.org.apache.hadoop.fs.Path(
+            sink.options["path"], "_spark_metadata"
         )
+        fs = log.getFileSystem(js.sessionState().newHadoopConf())
+        if not fs.exists(log):
+            return None
+        sinks = jvm.org.apache.spark.sql.execution.streaming.sinks
+        latest = sinks.FileStreamSinkLog(
+            1, js, log.toString(), getattr(getattr(jvm.scala, "None$"), "MODULE$")
+        ).getLatestBatchId()
+        return latest.get() + 1 if latest.isDefined() else 0
 
     def _write_frame(self, out: DataFrame, sink: TableDef) -> None:
         """Write one micro-batch frame to a sink the frame channel
-        serves (``_frame_sink``). Streaming overwrite is rejected
-        upstream, so a filesystem sink appends."""
+        serves (``_frame_sink``) other than a filesystem sink, whose
+        frames go through ``_file_sink`` under a batch id."""
         c = sink.connector
         if c == "blackhole":
             out.write.format("noop").mode("overwrite").save()
@@ -673,10 +743,6 @@ class JobRunner:
             self.upsert_stores[sink.name].merge_batch(out)
         elif c == "print":
             out.show(truncate=False)
-        elif c == "filesystem":
-            self._fs_writer(out.write, sink).mode("append").save(
-                sink.options["path"]
-            )
         elif c == "memory":
             # accumulate: replacing the view per batch kept only the
             # LAST micro-batch, diverging from the default path's
@@ -1536,6 +1602,24 @@ class JobRunner:
             wm = self._event_time_watermark(
                 tbl, spec.order_by[0], "MATCH_RECOGNIZE"
             )
+            # the streaming operators index pandas frames by column
+            # name: take the key and order columns in the input's
+            # spelling, as the session's resolver matches them
+            resolves = (
+                self.spark._jsparkSession.sessionState().conf().resolver()
+            )
+
+            def spelled(names):
+                return [
+                    next((c for c in src.columns if resolves.apply(c, n)), n)
+                    for n in names
+                ]
+
+            spec = replace(
+                spec,
+                partition_by=spelled(spec.partition_by),
+                order_by=spelled(spec.order_by),
+            )
             # foreachBatch tier route (round 15): tier-eligible shapes
             # run the BATCH tier SQL over the watermark-released
             # frames per micro-batch — zero Python in the per-batch
@@ -1659,63 +1743,14 @@ class JobRunner:
             )
         return store
 
-    @staticmethod
-    def _collapse_sink_manifest(path: str) -> None:
-        """Fold a streaming file sink's ``_spark_metadata`` commit log
-        into the directory itself: delete data files the log never
-        committed (orphans of failed batches), then remove the log, so
-        a subsequent plain append is visible to every reader. Only
-        called from the stop-with-drain path, where the query is
-        terminal. The log format is the stable v1 FileStreamSink
-        layout: one file per batch (or ``.compact`` snapshot), first
-        line a version marker, then one JSON ``SinkFileStatus`` per
-        committed file."""
-        meta = os.path.join(path, "_spark_metadata")
-        if not os.path.isdir(meta):
-            return
-        committed: set[str] = set()
-        for name in os.listdir(meta):
-            if name.startswith("."):
-                continue
-            with open(os.path.join(meta, name)) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line or not line.startswith("{"):
-                        continue
-                    try:
-                        entry = json.loads(line)
-                    except ValueError:
-                        continue
-                    p = entry.get("path")
-                    if p:
-                        # log paths are absolute URIs; compare by
-                        # path relative to the sink dir
-                        committed.add(
-                            os.path.relpath(
-                                p.split("://", 1)[-1].replace(
-                                    "file:", "", 1
-                                ),
-                                os.path.abspath(path),
-                            )
-                        )
-        for root, _dirs, files in os.walk(path):
-            if "_spark_metadata" in root:
-                continue
-            for f in files:
-                if f.startswith((".", "_")):
-                    continue
-                rel = os.path.relpath(
-                    os.path.join(root, f), os.path.abspath(path)
-                )
-                if rel not in committed:
-                    os.remove(os.path.join(root, f))
-        shutil.rmtree(meta)
-
     def _append_drained(self, df: DataFrame, sink: TableDef) -> None:
         """Batch-append stop-with-drain tail rows to a streaming sink.
-        The frame writer serves the PK store, print and the
-        filesystem append; connectors without a batch append channel
-        raise loudly (never a silent loss of the drained rows)."""
+        A filesystem sink takes them as the batch after the last one
+        its ``_spark_metadata`` log holds, so the directory keeps its
+        log and every reader sees the streamed and the drained rows.
+        The frame writer serves the PK store and print; connectors
+        without a batch append channel raise loudly (never a silent
+        loss of the drained rows)."""
         df = self._align_to_sink(df, sink)
         c = sink.connector
         if sink.primary_key and sink.name not in self.upsert_stores:
@@ -1738,20 +1773,7 @@ class JobRunner:
                 df.localCheckpoint()
             ).createOrReplaceTempView(sink.name)
         elif c == "filesystem" and not sink.primary_key:
-            # a streaming file sink lists its committed files in
-            # _spark_metadata, and every Spark read of the directory
-            # trusts ONLY that log — a plain batch append here would
-            # write rows no reader ever sees. A drained query is
-            # terminal by contract (like Flink stop --drain, it must
-            # not be restarted from this checkpoint), so collapse the
-            # manifest: sweep data files the log never committed
-            # (leftovers of failed in-flight batches), drop the log,
-            # and only then append — the directory itself becomes the
-            # committed set. A crash inside this window degrades to
-            # at-least-once, the same contract Flink gives
-            # non-transactional file sinks on drain.
-            self._collapse_sink_manifest(sink.options["path"])
-            self._write_frame(df, sink)
+            self._file_sink(sink)(self._sink_log_next_id(sink) or 0, df)
         elif sink.primary_key or c == "print":
             self._write_frame(df, sink)
         elif c != "blackhole":
@@ -2009,9 +2031,15 @@ class JobRunner:
             self._write_frame(df, sink)
             result.batch_results[sink.name] = -1
         elif c == "filesystem":
-            self._fs_writer(df.write, sink).mode(
-                "overwrite" if job.overwrite else "append"
-            ).save(sink.options["path"])
+            # a directory a streaming sink wrote is read through its
+            # _spark_metadata log alone: an append joins the log
+            nxt = None if job.overwrite else self._sink_log_next_id(sink)
+            if nxt is not None:
+                self._file_sink(sink)(nxt, df)
+            else:
+                self._fs_writer(df.write, sink).mode(
+                    "overwrite" if job.overwrite else "append"
+                ).save(sink.options["path"])
             result.batch_results[sink.name] = -1
         elif c == "memory":
             df.createOrReplaceTempView(sink.name)
@@ -2261,7 +2289,8 @@ def _in_process_upsert(sink: TableDef) -> bool:
 
 
 def _frame_sink(sink: TableDef) -> bool:
-    """A sink JobRunner._write_frame serves: an in-process PK store, or
+    """A sink the frame fan-out serves (``_write_frame``, or
+    ``_file_sink`` for a filesystem sink): an in-process PK store, or
     a non-PK print, blackhole, filesystem or memory sink."""
     if sink.primary_key:
         return _in_process_upsert(sink)

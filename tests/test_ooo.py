@@ -1007,12 +1007,14 @@ _LOHI_MR = """
 """
 
 
-def _mr_file_script(tag, src, snk, sets=""):
+def _mr_file_script(tag, src, snk, sets="", cols=("k", "ts")):
     """NFA-route script: a file sink keeps MATCH_RECOGNIZE off the
-    memory-sink foreachBatch route."""
+    memory-sink foreachBatch route. ``cols`` spells the source's key
+    and time columns in its DDL; the query says ``k`` and ``ts``."""
+    k, ts = cols
     return f"""
         {sets}
-        CREATE TABLE ev_{tag} (k STRING, ts TIMESTAMP, v DOUBLE,
+        CREATE TABLE ev_{tag} ({k} STRING, {ts} TIMESTAMP, v DOUBLE,
           WATERMARK FOR ts AS ts - INTERVAL '{_DELAY_S}' SECOND
         ) WITH ('connector'='filesystem','path'='{src}',
                 'format'='json','source.max-files-per-trigger'='1');
@@ -1026,8 +1028,8 @@ def _mr_file_script(tag, src, snk, sets=""):
 
 def _run_script(spark, script, before_stop=None, **kw):
     """Run ``script`` to the end of its staged input, call
-    ``before_stop()`` (the stop-with-drain removes a file sink's
-    ``_spark_metadata``), then stop."""
+    ``before_stop()`` (before the stop-with-drain appends its batch to
+    a file sink), then stop."""
     result = JobRunner(spark, mode="streaming", **kw).execute_script(
         script
     )
@@ -1040,29 +1042,35 @@ def _run_script(spark, script, before_stop=None, **kw):
     return result, seen
 
 
-def test_nfa_route_releases_on_its_own_batch_watermark(spark, tmp_path):
-    """Batch 0 carries a match (LO at 0 s, HI at 10 s), the row at
-    20 s that closes it (the matcher holds a match ending at the
-    buffer end, as a longer one could still follow), and an event at
-    100 s: past the 60 s delay, batch 0's rows imply a 40 s
-    watermark, which releases all three, so the file sink commits
-    the match with batch 0. Releasing on Spark's watermark alone (0
-    in batch 0) committed it only with batch 1. The converged output
-    is the batch matcher's."""
+@pytest.mark.parametrize(
+    "cols", [("k", "ts"), ("K", "TS")], ids=["lower", "mixed_case"]
+)
+def test_nfa_route_releases_on_its_own_batch_watermark(
+    spark, tmp_path, cols
+):
+    """Batch 0 carries a match (LO at 0 s, HI at 10 s), a row at 20 s
+    and an event at 100 s: past the 60 s delay, batch 0's rows imply
+    a 40 s watermark, which releases the first three, so the file
+    sink commits the match with batch 0. Releasing on Spark's
+    watermark alone (0 in batch 0) committed it only with batch 1.
+    The converged output is the batch matcher's. The route takes the
+    key and time columns in the source's spelling also when the DDL
+    declares ``K`` and ``TS`` and the query says ``k`` and ``ts``."""
     src, snk = str(tmp_path / "src"), str(tmp_path / "snk")
+    k, ts = cols
     _write_files(src, [
         [
-            {"k": "a", "ts": _ts(0), "v": 5.0},
-            {"k": "a", "ts": _ts(10), "v": 90.0},
-            {"k": "a", "ts": _ts(20), "v": 50.0},
-            {"k": "a", "ts": _ts(100), "v": 50.0},
+            {k: "a", ts: _ts(0), "v": 5.0},
+            {k: "a", ts: _ts(10), "v": 90.0},
+            {k: "a", ts: _ts(20), "v": 50.0},
+            {k: "a", ts: _ts(100), "v": 50.0},
         ],
-        [{"k": "a", "ts": _ts(110), "v": 6.0},
-         {"k": "a", "ts": _ts(120), "v": 95.0}],
+        [{k: "a", ts: _ts(110), "v": 6.0},
+         {k: "a", ts: _ts(120), "v": 95.0}],
     ])
     schema = "k string, lo_v double, hi_v double"
     result, first = _run_script(
-        spark, _mr_file_script("sb", src, snk),
+        spark, _mr_file_script("sb", src, snk, cols=cols),
         lambda: _committed_batch_rows(spark, snk, schema, 0),
     )
     assert not any(
@@ -1075,6 +1083,68 @@ def test_nfa_route_releases_on_its_own_batch_watermark(spark, tmp_path):
         for r in spark.read.schema(schema).json(snk).collect()
     )
     assert got == [(5.0, 90.0), (6.0, 95.0)]
+
+
+def test_fixed_length_match_at_buffer_end_commits_with_its_batch(
+    spark, tmp_path
+):
+    """Batch 0 holds LO at 0 s, HI at 10 s and an event at 100 s: its
+    40 s watermark releases LO and HI, and the fixed-length match
+    ``LO HI`` ends at the end of the released rows. No later row can
+    change it, so the file sink commits it with batch 0 instead of
+    holding it for a row after HI."""
+    src, snk = str(tmp_path / "src"), str(tmp_path / "snk")
+    _write_files(src, [
+        [
+            {"k": "a", "ts": _ts(0), "v": 5.0},
+            {"k": "a", "ts": _ts(10), "v": 90.0},
+            {"k": "a", "ts": _ts(100), "v": 50.0},
+        ],
+    ])
+    schema = "k string, lo_v double, hi_v double"
+    _, first = _run_script(
+        spark, _mr_file_script("fl", src, snk),
+        lambda: _committed_batch_rows(spark, snk, schema, 0),
+    )
+    assert [(r["lo_v"], r["hi_v"]) for r in first] == [(5.0, 90.0)]
+
+
+def test_drained_file_sink_keeps_its_log(spark, tmp_path):
+    """Stop-with-drain appends the NFA route's tail to its file sink as
+    one more batch of the sink's ``_spark_metadata`` log: the log
+    lists every streamed batch plus the drain batch, which holds the
+    match only the drain releases, and a read of the directory returns
+    the batch run's rows."""
+    src, snk = str(tmp_path / "src"), str(tmp_path / "snk")
+    _write_files(src, [
+        [
+            {"k": "a", "ts": _ts(0), "v": 5.0},
+            {"k": "a", "ts": _ts(10), "v": 90.0},
+            {"k": "b", "ts": _ts(100), "v": 50.0},
+        ],
+        [{"k": "a", "ts": _ts(110), "v": 6.0},
+         {"k": "a", "ts": _ts(120), "v": 95.0}],
+    ])
+    meta = os.path.join(snk, "_spark_metadata")
+    schema = "k string, lo_v double, hi_v double"
+    _, streamed = _run_script(
+        spark, _mr_file_script("dk", src, snk),
+        lambda: sorted(int(f) for f in os.listdir(meta) if f.isdigit()),
+    )
+    assert streamed == list(range(len(streamed)))
+    logged = sorted(int(f) for f in os.listdir(meta) if f.isdigit())
+    assert logged == streamed + [len(streamed)]
+    drained = _committed_batch_rows(spark, snk, schema, len(streamed))
+    assert [(r["lo_v"], r["hi_v"]) for r in drained] == [(6.0, 95.0)]
+    oracle = str(tmp_path / "oracle")
+    JobRunner(spark, mode="batch").execute_script(
+        _mr_file_script("dko", src, oracle)
+    )
+    got, want = (
+        sorted(tuple(r) for r in spark.read.schema(schema).json(p).collect())
+        for p in (snk, oracle)
+    )
+    assert got == want == [("a", 5.0, 90.0), ("a", 6.0, 95.0)]
 
 
 def test_over_route_releases_on_its_own_batch_watermark(spark, tmp_path):

@@ -10,8 +10,13 @@ re-created on file/memory channels (SURVEY §5 adopted plan).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from flink_streaming_platform_web_spark.streaming.checkpoints import (
+    CheckPointParam,
+)
 from flink_streaming_platform_web_spark.streaming.runner import JobRunner
 from flink_streaming_platform_web_spark.tables import load
 
@@ -644,3 +649,112 @@ def test_frame_sink_arms_converge(spark, tmp_path, route, kind):
         else:
             got = spark.table(n)
         assert sorted(tuple(r) for r in got.select(*cols).collect()) == want
+
+
+def _fanout_script(tag, src, sinks):
+    """A read-once fan-out of two INSERTs over stream ``src``: ``k``
+    below 3 into ``sinks[0]``, the rest into ``sinks[1]``, both
+    parquet file sinks."""
+    ddl = "".join(
+        f"CREATE TABLE {n}_{tag} (k BIGINT) WITH ('connector'="
+        f"'filesystem', 'path'='{p}', 'format'='parquet');\n"
+        for n, p in zip(("lo", "hi"), sinks)
+    )
+    return (
+        "SET graft.statement-set.read-once = 'true';\n"
+        f"CREATE TABLE ev_{tag} (k BIGINT) WITH ('connector'="
+        f"'filesystem', 'path'='{src}', 'format'='parquet',"
+        " 'source.max-files-per-trigger'='1');\n"
+        + ddl
+        + "BEGIN STATEMENT SET;\n"
+        f"INSERT INTO lo_{tag} SELECT k FROM ev_{tag} WHERE k < 3;\n"
+        f"INSERT INTO hi_{tag} SELECT k FROM ev_{tag} WHERE k >= 3;\n"
+        "END;"
+    )
+
+
+def _stage_parquet(spark, path, parts):
+    for part in parts:
+        spark.createDataFrame(
+            [(k,) for k in part], "k BIGINT"
+        ).coalesce(1).write.mode("append").parquet(path)
+
+
+def test_fanout_retried_batch_writes_its_frames_once(spark, tmp_path):
+    """A checkpointed fan-out that dies after writing a micro-batch's
+    frames but before committing it replays that batch under the same
+    epoch id on restart. The file sinks log each frame under that id,
+    so the replay writes nothing and every row is held once."""
+    src = f"{tmp_path}/src"
+    sinks = [f"{tmp_path}/lo", f"{tmp_path}/hi"]
+    _stage_parquet(spark, src, [range(0, 6), range(6, 12)])
+    ckpt = CheckPointParam(checkpoint_dir=f"{tmp_path}/ckpt")
+    script = _fanout_script("rt", src, sinks)
+    _wait_all(JobRunner(spark, checkpoint=ckpt).execute_script(script))
+    # the crash: the last batch's frames are written, its commit is not
+    commits = f"{tmp_path}/ckpt/fanout_ev_rt/commits"
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(f"{commits}/{last}")
+    _wait_all(JobRunner(spark, checkpoint=ckpt).execute_script(script))
+    assert os.path.exists(f"{commits}/{last}")
+    got = [sorted(r.k for r in spark.read.parquet(p).collect()) for p in sinks]
+    assert got == [[0, 1, 2], list(range(3, 12))]
+    for p in sinks:
+        logged = {f for f in os.listdir(f"{p}/_spark_metadata") if f.isdigit()}
+        assert logged == {str(b) for b in range(last + 1)}
+
+
+def test_uncheckpointed_fanout_rerun_appends(spark, tmp_path):
+    """A fan-out with no checkpoint restarts at epoch 0. A rerun over
+    sinks that already hold a run's rows numbers its batches after the
+    ones their logs hold, so it appends its rows again (as a plain
+    append did) instead of reading as a replay of the first run."""
+    src = f"{tmp_path}/src"
+    sinks = [f"{tmp_path}/lo", f"{tmp_path}/hi"]
+    _stage_parquet(spark, src, [range(0, 6)])
+    script = _fanout_script("rr", src, sinks)
+    for _ in range(2):
+        _wait_all(JobRunner(spark).execute_script(script))
+    got = [sorted(r.k for r in spark.read.parquet(p).collect()) for p in sinks]
+    assert got == [[0, 0, 1, 1, 2, 2], sorted(list(range(3, 6)) * 2)]
+
+
+def test_batch_insert_joins_a_streamed_sink_log(spark, tmp_path):
+    """A streaming INSERT leaves its file sink with a ``_spark_metadata``
+    log, which every Spark reader trusts over the directory listing. A
+    later batch INSERT INTO the same sink appends through that log, so
+    a read returns the streamed rows and the batch rows."""
+    src, snk = f"{tmp_path}/src", f"{tmp_path}/snk"
+    _stage_parquet(spark, src, [range(0, 4)])
+    ddl = (
+        f"CREATE TABLE ev_bj (k BIGINT) WITH ('connector'='filesystem',"
+        f" 'path'='{src}', 'format'='parquet');\n"
+        f"CREATE TABLE snk_bj (k BIGINT) WITH ('connector'='filesystem',"
+        f" 'path'='{snk}', 'format'='parquet');\n"
+    )
+    ckpt = CheckPointParam(checkpoint_dir=f"{tmp_path}/ckpt")
+    _wait_all(
+        JobRunner(spark, checkpoint=ckpt).execute_script(
+            ddl + "INSERT INTO snk_bj SELECT k FROM ev_bj;"
+        )
+    )
+    assert os.path.isdir(f"{snk}/_spark_metadata")
+    JobRunner(spark, mode="batch").execute_script(
+        ddl + "INSERT INTO snk_bj SELECT k + 10 AS k FROM ev_bj;"
+    )
+    got = sorted(r.k for r in spark.read.parquet(snk).collect())
+    assert got == [0, 1, 2, 3, 10, 11, 12, 13]
+
+
+def test_fanout_inserts_into_one_file_sink_keep_every_row(spark, tmp_path):
+    """Two INSERTs of a fan-out into the same file sink share its log,
+    so each micro-batch commits both frames under one batch id: the
+    second frame is not taken for a retry of the first."""
+    src, snk = f"{tmp_path}/src", f"{tmp_path}/snk"
+    _stage_parquet(spark, src, [range(0, 6), range(6, 12)])
+    script = _fanout_script("one", src, [snk, snk]).replace(
+        "INSERT INTO hi_one", "INSERT INTO lo_one"
+    )
+    _wait_all(JobRunner(spark).execute_script(script))
+    got = sorted(r.k for r in spark.read.parquet(snk).collect())
+    assert got == list(range(12))
